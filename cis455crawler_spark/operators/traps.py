@@ -43,7 +43,6 @@ __all__ = [
     "trap_host_stats",
     "trap_filter_frontier",
     "is_trap_cond",
-    "trap_counts_of",
 ]
 
 
@@ -104,22 +103,6 @@ def is_trap_cond(ratio_threshold: float, depth_threshold: int) -> Column:
     paths cannot drift."""
     return (F.col("n_urls") / F.col("n_content") >= F.lit(ratio_threshold)) | (
         F.col("max_depth") >= F.lit(depth_threshold)
-    )
-
-
-def trap_counts_of(
-    log: DataFrame, url_col: str = "url", fp_col: str = "digest"
-) -> DataFrame:
-    """(host, n_urls, n_content, max_depth) over a (url, digest) evidence
-    frame — THE one definition of the rollup aggregate, shared by the crawl
-    gate's rebuild path and the commit-side migration so the copies cannot
-    drift from each other (or from the incremental merge's column types:
-    max_depth is long, like the summed deltas)."""
-    u = F.col(url_col)
-    return log.groupBy(host_of(u).alias("host")).agg(
-        F.countDistinct(url_col).alias("n_urls"),
-        F.countDistinct(fp_col).alias("n_content"),
-        F.max(path_depth(u)).cast("long").alias("max_depth"),
     )
 
 

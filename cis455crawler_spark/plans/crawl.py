@@ -49,6 +49,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..functions.fetch import (
     MAX_CONTENT_BYTES_DEFAULT,
@@ -137,7 +138,10 @@ class CrawlConfig:
     # resolution (functions/urls.resolve_href_standard) that keeps the web
     # graph connected: absolute/protocol-relative/root-relative hrefs all
     # resolve, non-http schemes drop. The open-web mode every non-parity
-    # deployment should run.
+    # deployment should run. It lowercases hosts (RFC 3986 §6.2.2.1), but
+    # the sandbox "fetch" is an exact-string join on pages.url, so this mode
+    # assumes the corpus URLs already carry lowercase hosts: a page stored
+    # under a mixed-case host is never fetched.
     resolve_mode: str = "quirk"
     # opt-in content-seen test (beyond reference — Mercator's duplicate-body
     # suppression; the reference dedups URLs only, so mirror sites parse
@@ -299,16 +303,14 @@ def run_round(
     `stored` (recrawl generations only) is the prior generation's
     parsed-latest snapshot (url, warc_ts, out_links) answering the 304
     If-Modified-Since check."""
-    import os
+    # every frame this round caches or persists; released together after
+    # the commit (CacheManager entries must not grow with rounds)
+    caches: list[DataFrame] = []
 
-    timing = os.environ.get("SPARK_GRAFT_ROUND_TIMING") == "1"
-    _t = [time.time()]
-
-    def _tick(label: str) -> None:
-        if timing:
-            now = time.time()
-            print(f"[round {round_no}] {label}: {now - _t[0]:.2f}s", flush=True)
-            _t[0] = now
+    def _cached(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
+        df = df.cache() if level is None else df.persist(level)
+        caches.append(df)
+        return df
 
     return_frontier = frontier is not None
     if frontier is None:
@@ -317,9 +319,10 @@ def run_round(
 
     # Per-round counters: the single pipeline action (frontier checkpoint
     # count) materializes every cache, then ONE cross-joined aggregate job
-    # reads all counters back from the caches — so a round runs 5 Spark
-    # jobs (pipeline, stats, seen write, parsed write, frontier write)
-    # instead of the original ~9 with their serial recomputation.
+    # reads all counters back from the caches, so no counter recomputes the
+    # pipeline. These are the round's Spark actions (pipeline, stats, and
+    # one write per table); AQE splits them into about 35 Spark jobs per
+    # round at the default config (crawlbench/README.md, traced table).
     # NOTE df.observe() was tried and REVERTED: CollectMetrics nodes beneath
     # an InMemoryRelation silently return empty/null rows depending on AQE
     # settings — nonzero counts came back as zeros with adaptive disabled.
@@ -358,9 +361,9 @@ def run_round(
     agg_exprs = [F.min("depth").alias("depth")] + (
         [F.sum("inlinks").alias("inlinks")] if use_pri else []
     )
-    raw = _with_url_cols(
-        frontier.groupBy("url").agg(*agg_exprs), cfg.num_buckets
-    ).cache()
+    raw = _cached(
+        _with_url_cols(frontier.groupBy("url").agg(*agg_exprs), cfg.num_buckets)
+    )
     # Bloom sidecar is INCREMENTAL: each round appends a bitmap delta built
     # from that round's (small) new_seen batch; the probes cogroup the
     # candidates with the delta rows on the bucket id, so each task OR-merges
@@ -396,11 +399,10 @@ def run_round(
         if needs_heal:
             # distributed rebuild from the seen table; persisted because the
             # three anti-joins and the commit-time replacement all read it
-            from pyspark.storagelevel import StorageLevel
-
-            bloom_sidecar = build_bloom_sidecar(
-                seen, cfg.num_buckets, cfg.bloom_bucket_bits
-            ).persist(StorageLevel.MEMORY_AND_DISK)
+            bloom_sidecar = _cached(
+                build_bloom_sidecar(seen, cfg.num_buckets, cfg.bloom_bucket_bits),
+                StorageLevel.MEMORY_AND_DISK,
+            )
             bloom_healed = True
         else:
             bloom_sidecar = sidecar
@@ -416,28 +418,19 @@ def run_round(
     # host's ratio recovers.
     pre_trap = None
     trap_counts = None
-    trap_rollup_fresh = False  # True -> commit rebuilds the pair tables too
     if cfg.trap_filter:
-        pre_trap = fresh_cand.cache()
+        pre_trap = _cached(fresh_cand)
         # INCREMENTALLY maintained (host, n_urls, n_content, max_depth)
         # rollup — the gate never rescans the growing trap_log (per-round
         # aggregate cost would grow linearly with total pages crawled; the
-        # exact shape the host_counts rollup below was built to avoid).
-        # Rebuilt from the log only when the rollup is missing (store
-        # predates it) — the rollup and the log otherwise move in the same
-        # atomic commits and cannot diverge.
+        # exact shape the host_counts rollup below was built to avoid). The
+        # rollup and the log move in the same atomic commits, so they
+        # cannot diverge.
         trap_counts = store.read("trap_counts")
-        if trap_counts is None:
-            tlog = store.read("trap_log")
-            if tlog is not None:
-                from ..operators.traps import trap_counts_of
-
-                trap_counts = trap_counts_of(tlog)
-                trap_rollup_fresh = True
         if trap_counts is not None:
             from ..operators.traps import is_trap_cond
 
-            trap_counts = trap_counts.cache()
+            trap_counts = _cached(trap_counts)
             trap_hosts = trap_counts.filter(
                 is_trap_cond(cfg.trap_ratio_threshold, cfg.trap_depth_threshold)
             ).select("host")
@@ -456,7 +449,7 @@ def run_round(
     pre_quota = None
     host_counts = None
     if cfg.max_urls_per_host is not None:
-        pre_quota = fresh_cand.cache()
+        pre_quota = _cached(fresh_cand)
         rollup = store.read("host_counts")
         if rollup is not None and not _host_counts_lag(store.manifest()["history"]):
             host_counts = rollup.select("host", F.col("n").alias("_hc"))
@@ -467,7 +460,7 @@ def run_round(
         else:
             host_counts = spark.createDataFrame([], "host string, _hc long")
         # cached: consumed by the gate now and by the rollup merge at commit
-        host_counts = host_counts.cache()
+        host_counts = _cached(host_counts)
         gated = (
             pre_quota.join(F.broadcast(host_counts), "host", "left")
             .withColumn(
@@ -494,10 +487,10 @@ def run_round(
         allowed_col = crawl_allowed(
             F.col("url"), F.col("has_robots"), F.col("disallow")
         )
-    cand = (
-        fresh_cand.join(F.broadcast(robots), "host", "left")
-        .withColumn("allowed", allowed_col)
-        .cache()
+    cand = _cached(
+        fresh_cand.join(F.broadcast(robots), "host", "left").withColumn(
+            "allowed", allowed_col
+        )
     )
     denied = cand.filter(~F.col("allowed"))
     ok = cand.filter(F.col("allowed")).withColumn(
@@ -515,26 +508,17 @@ def run_round(
         # per-host (n, s) verdict counts from an INCREMENTALLY maintained
         # rollup (sum-mergeable, merged with each round's delta at commit) —
         # never a per-round aggregate over the whole accumulated log, whose
-        # cost would grow linearly with total pages crawled. Rebuilt from
-        # the log only when the rollup is missing (store predates it).
+        # cost would grow linearly with total pages crawled.
         s404_counts = store.read("soft404_counts")
-        if s404_counts is None:
-            slog = store.read("soft404_log")
-            if slog is not None:
-                s404_counts = slog.groupBy("host").agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum("soft404").cast("long").alias("s"),
-                )
         if s404_counts is not None:
             # cached: consumed by the flag filter now, the merge at commit
-            s404_counts = s404_counts.cache()
-            flagged404 = (
+            s404_counts = _cached(s404_counts)
+            # cached: consumed by the clamp join and the stats count
+            flagged404 = _cached(
                 s404_counts.filter(
                     (F.col("n") >= cfg.soft404_min_pages)
                     & (F.col("s") / F.col("n") >= cfg.soft404_rate_threshold)
-                )
-                .select("host", F.lit(True).alias("_demote"))
-                .cache()  # consumed by the clamp join and the stats count
+                ).select("host", F.lit(True).alias("_demote"))
             )
             ok = (
                 ok.join(F.broadcast(flagged404), "host", "left")
@@ -559,7 +543,7 @@ def run_round(
         salt_buckets=cfg.salt_buckets,
         priority_col="inlinks" if use_pri else None,
     )
-    scheduled = scheduled.drop("budget", "inlinks").cache()
+    scheduled = _cached(scheduled.drop("budget", "inlinks"))
 
     # "fetch": join the scheduled batch against the pages corpus, then route
     # on derived HTTP metadata (status / Content-Type / Content-Length) in
@@ -604,7 +588,6 @@ def run_round(
     # digest is already claimed — by an earlier round (content_seen table)
     # or by a lexicographically-smaller URL in THIS batch (window, rn>1) —
     # become 'content_dup': still seen, never parsed/linked/persisted.
-    pre_cdup = None
     if cfg.content_dedup:
         # the filter-split + claims aggregate below fork this lineage three
         # ways; uncached, each fork re-runs the scheduled-pages fetch join
@@ -612,10 +595,7 @@ def run_round(
         # in executor memory makes GC cost scale with mutator threads — the
         # measured core-scaling inversion, BENCH.md) evaluates it once and
         # serves all three consumers from OS-page-cached blocks.
-        from pyspark.storagelevel import StorageLevel
-
-        pre_cdup = routed.persist(StorageLevel.DISK_ONLY)
-        routed = pre_cdup
+        routed = _cached(routed, StorageLevel.DISK_ONLY)
         # NULL-digest rows (misses/redirects/rejects — often the bulk) stay
         # out of the digest shuffle entirely: hash(NULL) would pile them all
         # into ONE partition of the join
@@ -663,7 +643,12 @@ def run_round(
         from ..functions.urls import resolve_href_standard as _resolve
     else:
         _resolve = resolve_href
-    parsed = (
+    # cached for its three consumers (links explode, parsed write, stats)
+    # AND because explode-over-a-UDF-derived-array splits into a size>0
+    # Filter + Generate pair that each re-eval the UDF when uncached —
+    # without this cache the Arrow parse would run TWICE per page on the
+    # links path alone (asserted in tests/test_plan_properties.py)
+    parsed = _cached(
         routed.withColumn("_p", parse_page_udf(F.when(is_parse, F.col("html"))))
         .withColumn(
             "out_links",
@@ -696,12 +681,6 @@ def run_round(
         .withColumn("status", F.when(F.col("html").isNotNull(), status_of("url")))
         .withColumn("round", F.lit(round_no))
         .drop("_p", "html", "stored_ts", "stored_links")
-        # cached for its three consumers (links explode, parsed write, stats)
-        # AND because explode-over-a-UDF-derived-array splits into a size>0
-        # Filter + Generate pair that each re-eval the UDF when uncached —
-        # without this cache the Arrow parse would run TWICE per page on the
-        # links path alone (asserted in tests/test_plan_properties.py)
-        .cache()
     )
 
     batch_seen = scheduled.select("url_hash", "url", "bucket").unionByName(
@@ -711,7 +690,7 @@ def run_round(
         # follow mode: the Location target is just another discovered link —
         # it joins the link stream below (depth+1) and is NOT pre-marked
         # seen, so the normal dedup/robots/politeness gates apply next round
-        new_seen = batch_seen.cache()
+        new_seen = _cached(batch_seen)
     else:
         # 301/302 Location targets enter the seen set WITHOUT being enqueued
         # (XPathCrawlerThread.java:155-168); anti-joined so the table stays
@@ -729,7 +708,7 @@ def run_round(
         # cached: evaluated by the pipeline job (links anti-join), the seen
         # write, and the bloom delta — uncached each re-runs the redirect
         # anti-join against the seen table
-        new_seen = batch_seen.unionByName(redirect_targets).cache()
+        new_seen = _cached(batch_seen.unionByName(redirect_targets))
 
     # discovered links -> next frontier (dedup within batch, anti-join seen+batch)
     # cash per link MENTION (a page linking twice votes twice — the
@@ -820,7 +799,6 @@ def run_round(
     )
     # the one big action: materializes every cache along the pipeline
     frontier_next = new_frontier.count()
-    _tick("pipeline job (frontier checkpoint)")
 
     # bloom sidecar delta / heal replacement — all distributed, no collect
     appends_extra = {}
@@ -855,7 +833,6 @@ def run_round(
             .groupBy("host")
             .agg(F.sum("n").alias("n"))
         )
-    trap_pair_caches: list[DataFrame] = []
     if cfg.trap_filter:
         # narrow per-parse evidence rows (url unique per generation, so the
         # host rollup's countDistinct(url) is exact); digests accumulate
@@ -866,7 +843,6 @@ def run_round(
         # is_parse alone would let content_dedup starve the log down to one
         # URL per digest and the ratio trigger could never fire.
         from ..operators.traps import path_depth as _trap_depth
-        from ..operators.traps import trap_counts_of
 
         evidence = parsed.filter(
             F.col("action").isin("parse", "content_dup")
@@ -896,135 +872,63 @@ def run_round(
             "bucket"
         )
         d_bkt = url_hash_bucket(F.col("digest"), cfg.num_buckets).alias("bucket")
-        old_u = old_d = None
-        if not trap_rollup_fresh:
-            try:
-                old_u = store.read("trap_url_pairs")
-                old_d = store.read("trap_digest_pairs")
-            except Exception:
-                # a store WEDGED by a pre-fix mixed-schema append (a 2-col
-                # pair dir + a 3-col dir cannot even be read together):
-                # fall through to the full rebuild-from-log below, whose
-                # REPLACE swaps the unreadable dirs out
-                trap_rollup_fresh = True
-        if trap_rollup_fresh:
-            # one-time migration (store predating the rollup, or a wedged
-            # pair table): REPLACE the pair sets and counts with the full
-            # history + this round — incremental thereafter
-            all_ev = (
-                store.read("trap_log")
-                .select("url", "digest")
-                .unionByName(evidence)
-                .select(host_of(F.col("url")).alias("host"), "url", "digest")
+        # incremental: this round's NEW (host,url)/(host,digest) pairs via
+        # anti-join against the pair sets — the same delta-probe shape as
+        # the url-seen anti-join; the counts rollup then merges
+        # sum-mergeable deltas (countDistinct over the full log never
+        # reruns, so per-round GATE cost stays O(delta); the probe pays one
+        # bucketed join against the pair history, like `seen`)
+        old_u = store.read("trap_url_pairs")
+        old_d = store.read("trap_digest_pairs")
+        # in-round distinct on BOTH pair sets: a corpus with duplicate url
+        # rows fans out the fetch join, and double-counted pairs would
+        # permanently inflate the rollup away from the countDistinct contract
+        u_pairs = ev.select("host", "url", u_bkt).distinct()
+        d_pairs = (
+            ev.filter(F.col("digest").isNotNull())
+            .select("host", "digest", d_bkt)
+            .distinct()
+        )
+        # anti-join on the NATURAL keys only — never the bucket column (see
+        # the layout note above)
+        u_new = _cached(
+            u_pairs
+            if old_u is None
+            else u_pairs.join(old_u.select("host", "url"), ["host", "url"], "left_anti")
+        )
+        d_new = _cached(
+            d_pairs
+            if old_d is None
+            else d_pairs.join(
+                old_d.select("host", "digest"), ["host", "digest"], "left_anti"
             )
-            round_replaces["trap_url_pairs"] = (
-                all_ev.select("host", "url", u_bkt)
-                .distinct()
-                .repartition(cfg.num_buckets, "bucket")
-            )
-            round_replaces["trap_digest_pairs"] = (
-                all_ev.filter(F.col("digest").isNotNull())
-                .select("host", "digest", d_bkt)
-                .distinct()
-                .repartition(cfg.num_buckets, "bucket")
-            )
-            round_replaces["trap_counts"] = trap_counts_of(all_ev)
-        else:
-            # incremental: this round's NEW (host,url)/(host,digest) pairs
-            # via anti-join against the pair sets — the same delta-probe
-            # shape as the url-seen anti-join; the counts rollup then merges
-            # sum-mergeable deltas (countDistinct over the full log never
-            # reruns, so per-round GATE cost stays O(delta); the probe pays
-            # one bucketed join against the pair history, like `seen`)
-            # legacy (pre-bucket) tables are consumed twice below (anti-join
-            # build side + backfill REPLACE) — cache for the migration round
-            if old_u is not None and "bucket" not in old_u.columns:
-                old_u = old_u.cache()
-                trap_pair_caches.append(old_u)
-            if old_d is not None and "bucket" not in old_d.columns:
-                old_d = old_d.cache()
-                trap_pair_caches.append(old_d)
-            # in-round distinct on BOTH pair sets: a corpus with duplicate
-            # url rows fans out the fetch join, and double-counted pairs
-            # would permanently inflate the rollup away from the
-            # countDistinct contract
-            u_pairs = ev.select("host", "url", u_bkt).distinct()
-            d_pairs = (
-                ev.filter(F.col("digest").isNotNull())
-                .select("host", "digest", d_bkt)
-                .distinct()
-            )
-            # anti-join on the NATURAL keys only — never the bucket column
-            # (see the layout note above)
-            u_new = (
-                u_pairs
-                if old_u is None
-                else u_pairs.join(
-                    old_u.select("host", "url"), ["host", "url"], "left_anti"
-                )
-            ).cache()
-            d_new = (
-                d_pairs
-                if old_d is None
-                else d_pairs.join(
-                    old_d.select("host", "digest"), ["host", "digest"], "left_anti"
-                )
-            ).cache()
-            trap_pair_caches += [u_new, d_new]
-            # pair dirs written before the bucket column existed cannot take
-            # a mixed-schema append (store reads union dirs with strict
-            # unionByName — a 2-col dir + a 3-col dir wedges every later
-            # read of the table). One-time REPLACE with the backfilled
-            # history + this round's delta instead; plain appends after.
-            if old_u is not None and "bucket" not in old_u.columns:
-                round_replaces["trap_url_pairs"] = (
-                    old_u.select("host", "url", u_bkt)
-                    .unionByName(u_new)
-                    .repartition(cfg.num_buckets, "bucket")
-                )
-            else:
-                appends_extra["trap_url_pairs"] = u_new.repartition(
-                    cfg.num_buckets, "bucket"
-                )
-            if old_d is not None and "bucket" not in old_d.columns:
-                round_replaces["trap_digest_pairs"] = (
-                    old_d.select("host", "digest", d_bkt)
-                    .unionByName(d_new)
-                    .repartition(cfg.num_buckets, "bucket")
-                )
-            else:
-                appends_extra["trap_digest_pairs"] = d_new.repartition(
-                    cfg.num_buckets, "bucket"
-                )
-            zero = F.lit(0).cast("long")
-            parts = [
-                u_new.groupBy("host").agg(
-                    F.count(F.lit(1)).alias("n_urls")
-                ).select("host", "n_urls", zero.alias("n_content"), zero.alias("max_depth")),
-                d_new.groupBy("host").agg(
-                    F.count(F.lit(1)).alias("n_content")
-                ).select("host", zero.alias("n_urls"), "n_content", zero.alias("max_depth")),
-                ev.groupBy("host").agg(F.max("_depth").alias("max_depth")).select(
-                    "host", zero.alias("n_urls"), zero.alias("n_content"), "max_depth"
-                ),
-            ]
-            if trap_counts is not None:
-                parts.append(
-                    trap_counts.select(
-                        "host",
-                        F.col("n_urls").cast("long"),
-                        F.col("n_content").cast("long"),
-                        F.col("max_depth").cast("long"),
-                    )
-                )
-            merged = parts[0]
-            for p in parts[1:]:
-                merged = merged.unionByName(p)
-            round_replaces["trap_counts"] = merged.groupBy("host").agg(
-                F.sum("n_urls").alias("n_urls"),
-                F.sum("n_content").alias("n_content"),
-                F.max("max_depth").alias("max_depth"),
-            )
+        )
+        appends_extra["trap_url_pairs"] = u_new.repartition(cfg.num_buckets, "bucket")
+        appends_extra["trap_digest_pairs"] = d_new.repartition(
+            cfg.num_buckets, "bucket"
+        )
+        zero = F.lit(0).cast("long")
+        parts = [
+            u_new.groupBy("host")
+            .agg(F.count(F.lit(1)).alias("n_urls"))
+            .select("host", "n_urls", zero.alias("n_content"), zero.alias("max_depth")),
+            d_new.groupBy("host")
+            .agg(F.count(F.lit(1)).alias("n_content"))
+            .select("host", zero.alias("n_urls"), "n_content", zero.alias("max_depth")),
+            ev.groupBy("host")
+            .agg(F.max("_depth").alias("max_depth"))
+            .select("host", zero.alias("n_urls"), zero.alias("n_content"), "max_depth"),
+        ]
+        if trap_counts is not None:
+            parts.append(trap_counts.select("host", "n_urls", "n_content", "max_depth"))
+        merged = parts[0]
+        for p in parts[1:]:
+            merged = merged.unionByName(p)
+        round_replaces["trap_counts"] = merged.groupBy("host").agg(
+            F.sum("n_urls").alias("n_urls"),
+            F.sum("n_content").alias("n_content"),
+            F.max("max_depth").alias("max_depth"),
+        )
     if cfg.demote_soft404:
         from ..operators.soft404 import soft404_signals
 
@@ -1040,8 +944,7 @@ def run_round(
         round_replaces["soft404_counts"] = (
             delta_counts
             if s404_counts is None
-            else s404_counts.select("host", F.col("n").cast("long"), F.col("s").cast("long"))
-            .unionByName(delta_counts.select("host", F.col("n").cast("long"), "s"))
+            else s404_counts.unionByName(delta_counts)
             .groupBy("host")
             .agg(F.sum("n").alias("n"), F.sum("s").alias("s"))
         )
@@ -1129,7 +1032,6 @@ def run_round(
         k: (v if v is not None else 0)
         for k, v in stats_df.collect()[0].asDict().items()
     }
-    _tick("stats job (cache-hit aggregates)")
     urls_in = stats["n_raw"]
     n_denied = stats["n_denied"]
     fresh = stats["n_ok"] + n_denied
@@ -1178,10 +1080,6 @@ def run_round(
         metrics["bloom_delta"] = True  # _bloom_lags reads this from history
     if pre_quota is not None:
         metrics["host_counts_delta"] = True  # _host_counts_lag continuity
-    if cfg.priority == "trust":
-        # ledger appends this round were anti-joined (deduped); the marker
-        # lets future run_crawl invocations skip the legacy duplicate probe
-        metrics["host_edges_dedup"] = True
 
     # per-partition lineage (north_rule) + 1-row metrics: observed above —
     # written driver-side, no Spark job per tiny table
@@ -1206,26 +1104,8 @@ def run_round(
         extra=metrics,
     )
 
-    _tick("commit finish (writes overlapped stats)")
-    for df in (raw, cand, scheduled, parsed, new_seen):
+    for df in caches:
         df.unpersist()
-    if bloom_healed:
-        bloom_sidecar.unpersist()
-    if pre_quota is not None:
-        pre_quota.unpersist()
-        host_counts.unpersist()
-    if pre_trap is not None:
-        pre_trap.unpersist()
-    if trap_counts is not None:
-        trap_counts.unpersist()
-    for df in trap_pair_caches:
-        df.unpersist()
-    if pre_cdup is not None:
-        pre_cdup.unpersist()
-    if flagged404 is not None:
-        flagged404.unpersist()
-    if s404_counts is not None:
-        s404_counts.unpersist()
     if return_frontier:
         # new_frontier is already (url, depth); checkpoint blocks are freed by
         # the context cleaner once the caller drops the reference
@@ -1276,8 +1156,6 @@ def run_crawl(
     stored documents: frontier reset to seeds, seen-set emptied, parsed
     kept — unchanged pages (warc_ts not advanced) answer 304 and reuse
     their stored out_links; changed pages re-fetch and MERGE-upsert."""
-    from pyspark.storagelevel import StorageLevel
-
     cfg = cfg or CrawlConfig()
     store = SnapshotStore(spark, state_dir)
     stored: DataFrame | None = None
@@ -1293,31 +1171,6 @@ def run_crawl(
         spark, pages, with_standard=(cfg.robots_mode == "standard")
     ).cache()
     robots.count()
-
-    # one-time legacy self-heal: ledgers written before deduped appends
-    # hold one copy of the stable host graph per round — the per-round
-    # trustrank distinct would rescan those duplicates forever. Gated by a
-    # history marker (every new-code trust round stamps host_edges_dedup,
-    # the host_counts_delta pattern): once any round carries it, the heal
-    # already ran at that invocation's start and every append since is
-    # anti-joined — steady state pays NO probe job at all.
-    if cfg.priority == "trust" and store.current_round() >= 0:
-        hist = store.manifest().get("history", [])
-        if not any(h.get("host_edges_dedup") for h in hist):
-            led = store.read("host_edges")
-            if led is not None:
-                has_dups = (
-                    led.groupBy("src", "dst")
-                    .count()
-                    .filter(F.col("count") > 1)
-                    .limit(1)
-                    .count()
-                    > 0
-                )
-                if has_dups:
-                    store.replace_with(
-                        "host_edges", led.select("src", "dst").distinct()
-                    )
 
     sitemap_seed_df: DataFrame | None = None
     if cfg.seed_from_sitemaps and (store.current_round() < 0 or recrawl):

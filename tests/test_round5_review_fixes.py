@@ -11,6 +11,7 @@
     stay value-identical to the full-log aggregates they replaced
   * trustrank(eager_release=True) (the crawl loop's per-round invocation)
     unpersists every cache the power iteration created
+  * a crawl with every opt-in gate on leaves no CacheManager entries behind
 """
 
 from __future__ import annotations
@@ -232,250 +233,57 @@ def test_trustrank_eager_release_frees_caches(spark):
     assert after - base <= 1, (base, after)
 
 
-def test_rollup_migration_rebuild_from_log(spark, tmp_path):
-    """Upgrade path (second-pass review finding): a store whose evidence
-    logs predate the rollup tables must rebuild them exactly. Simulated by
-    crawling a few rounds with both knobs on, DROPPING the rollup/pair
-    tables, and resuming — the gate's rebuild path and the commit-side
-    migration then run for real, and the final rollups must again equal the
-    full-log aggregates."""
-    from cis455crawler_spark.functions.urls import host_of
-    from cis455crawler_spark.operators.traps import trap_counts_of
+# -- every opt-in gate on: per-round caches are freed -------------------------
 
-    trap_h = "mtrap.test"
-    us = [f"http://{trap_h}/" + _pick_name(trap_h, f"u{i}") for i in range(6)]
-    seed_t = f"http://{trap_h}/" + _pick_name(trap_h, "a")
 
-    def page(url, hrefs, title="A Page", body="ordinary content of a page"):
-        links = "".join(f'<a href="{h}">x</a>' for h in hrefs)
-        html = f"<html><head><title>{title}</title></head><body>{body}{links}</body></html>"
-        return (url, TS, bytearray(html.encode()), "", "en")
+def test_all_gates_crawl_frees_round_caches(spark, tmp_path):
+    """A crawl with every opt-in gate on, then a resume that changes the
+    bloom size (so a sidecar heal round runs): after each run_crawl call
+    the JVM CacheManager holds no entries — per-round caches are released,
+    so they cannot accumulate with rounds."""
+    from cis455crawler_spark.sources.corpus import (
+        CorpusSpec,
+        generate_pages_pdf,
+        seed_urls,
+    )
 
-    rows = [
-        (
-            f"http://{trap_h}/robots.txt",
-            TS,
-            bytearray(b"User-agent: *\nDisallow: /private\nCrawl-delay: 30\n"),
-            "",
-            "en",
+    spec = CorpusSpec(hosts=4, pages_per_host=15, seed=7, hot_factor=3)
+    pages = spark.createDataFrame(
+        generate_pages_pdf(spec),
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    state = str(tmp_path / "g")
+
+    def cfg(rounds: int, bloom_bits: int) -> CrawlConfig:
+        return CrawlConfig(
+            max_rounds=rounds,
+            compact_every=2,
+            trap_filter=True,
+            max_urls_per_host=12,
+            demote_soft404=True,
+            content_dedup=True,
+            use_bloom=True,
+            bloom_bucket_bits=bloom_bits,
+            follow_redirects=True,
+            priority="trust",
+            resolve_mode="standard",
         )
-    ]
-    rows.append(page(seed_t, [u.rsplit("/", 1)[1] for u in us], title="404 Not Found"))
-    shell = page(us[0], [], title="404 Not Found", body="the one true shell")
-    for u in us:
-        rows.append((u, TS, shell[2], "", "en"))
-    pages = spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, html binary, text string, lang string"
-    )
-    cfg1 = CrawlConfig(
-        max_rounds=2,
-        trap_filter=True,
-        trap_ratio_threshold=3.0,
-        demote_soft404=True,
-        soft404_min_pages=2,
-        soft404_rate_threshold=0.5,
-    )
-    store, m1 = run_crawl(spark, pages, [seed_t], str(tmp_path / "m"), cfg1)
-    assert m1[-1]["frontier_next"] > 0  # not drained — resume has work left
-    for t in ("trap_counts", "trap_url_pairs", "trap_digest_pairs", "soft404_counts"):
-        assert store.read(t) is not None
-        store.drop_table(t)
-        assert store.read(t) is None
 
-    cfg2 = CrawlConfig(
-        max_rounds=6,
-        trap_filter=True,
-        trap_ratio_threshold=3.0,
-        demote_soft404=True,
-        soft404_min_pages=2,
-        soft404_rate_threshold=0.5,
-    )
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # entries other tests left behind
+    store, m1 = run_crawl(spark, pages, seed_urls(spec), state, cfg(3, 1 << 12))
+    assert len(m1) == 3 and m1[-1]["frontier_next"] > 0
+    assert cache_manager.isEmpty()
+
     store, m2 = run_crawl(
-        spark, pages, [seed_t], str(tmp_path / "m"), cfg2, resume=True
-    )
-    assert len(m2) > len(m1)  # migration rounds actually committed
-
-    tlog = store.read("trap_log")
-    want = {
-        r.host: (r.n_urls, r.n_content, r.max_depth)
-        for r in trap_counts_of(tlog).collect()
-    }
-    got = {
-        r.host: (r.n_urls, r.n_content, r.max_depth)
-        for r in store.read("trap_counts").collect()
-    }
-    assert got == want
-    want_u = {
-        (r.host, r.url)
-        for r in tlog.select(host_of(F.col("url")).alias("host"), "url")
-        .distinct()
-        .collect()
-    }
-    assert {
-        (r.host, r.url) for r in store.read("trap_url_pairs").collect()
-    } == want_u
-    slog = store.read("soft404_log")
-    want_s = {
-        r.host: (r.n, r.s)
-        for r in slog.groupBy("host")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("soft404").cast("long").alias("s"))
-        .collect()
-    }
-    assert {
-        r.host: (r.n, r.s) for r in store.read("soft404_counts").collect()
-    } == want_s
-
-
-def test_legacy_pair_dirs_upgrade(spark, tmp_path):
-    """Third-pass review finding (reproduced live by the reviewer): a store
-    whose pair dirs predate the bucket column must not be wedged by a
-    mixed-schema append — the store reads a table's dirs with strict
-    unionByName, so a (host,url) dir + a (host,url,bucket) dir would crash
-    every later read. The commit must REPLACE legacy pair tables with the
-    backfilled history instead. Simulated by stripping the bucket column
-    after two rounds, then resuming."""
-    from cis455crawler_spark.functions.urls import host_of
-    from cis455crawler_spark.operators.traps import trap_counts_of
-
-    trap_h = "ltrap.test"
-    us = [f"http://{trap_h}/" + _pick_name(trap_h, f"u{i}") for i in range(6)]
-    seed_t = f"http://{trap_h}/" + _pick_name(trap_h, "a")
-
-    def page(url, hrefs, body="ordinary content of a page"):
-        links = "".join(f'<a href="{h}">x</a>' for h in hrefs)
-        html = f"<html><body>{body}{links}</body></html>"
-        return (url, TS, bytearray(html.encode()), "", "en")
-
-    rows = [
-        (
-            f"http://{trap_h}/robots.txt",
-            TS,
-            bytearray(b"User-agent: *\nDisallow: /private\nCrawl-delay: 30\n"),
-            "",
-            "en",
-        ),
-        page(seed_t, [u.rsplit("/", 1)[1] for u in us]),
-    ]
-    shell = page(us[0], [], body="the one true shell")
-    for u in us:
-        rows.append((u, TS, shell[2], "", "en"))
-    pages = spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, html binary, text string, lang string"
-    )
-    cfg = CrawlConfig(max_rounds=2, trap_filter=True, trap_ratio_threshold=3.0)
-    store, m1 = run_crawl(spark, pages, [seed_t], str(tmp_path / "l"), cfg)
-    assert m1[-1]["frontier_next"] > 0
-    # strip the bucket column — the pre-layout on-disk schema
-    store.replace_with(
-        "trap_url_pairs", store.read("trap_url_pairs").select("host", "url")
-    )
-    store.replace_with(
-        "trap_digest_pairs",
-        store.read("trap_digest_pairs").select("host", "digest"),
-    )
-
-    cfg2 = CrawlConfig(max_rounds=6, trap_filter=True, trap_ratio_threshold=3.0)
-    store, m2 = run_crawl(
-        spark, pages, [seed_t], str(tmp_path / "l"), cfg2, resume=True
+        spark, pages, seed_urls(spec), state, cfg(5, 1 << 13), resume=True
     )
     assert len(m2) > len(m1)
-    # reads work (no mixed-schema union), the upgraded table carries the
-    # bucket column, and the rollup contract still holds
-    pairs = store.read("trap_url_pairs")
-    assert "bucket" in pairs.columns
-    tlog = store.read("trap_log")
-    want = {
-        r.host: (r.n_urls, r.n_content, r.max_depth)
-        for r in trap_counts_of(tlog).collect()
+    assert cache_manager.isEmpty()
+    # the resume rebuilt the sidecar at the new size (the heal round ran)
+    assert {r.n_bits for r in store.read("bloom").select("n_bits").collect()} == {
+        1 << 13
     }
-    got = {
-        r.host: (r.n_urls, r.n_content, r.max_depth)
-        for r in store.read("trap_counts").collect()
-    }
-    assert got == want
-    want_u = {
-        (r.host, r.url)
-        for r in tlog.select(host_of(F.col("url")).alias("host"), "url")
-        .distinct()
-        .collect()
-    }
-    assert {(r.host, r.url) for r in pairs.collect()} == want_u
-
-
-def test_host_edges_legacy_dedup_self_heal(spark, tmp_path):
-    """A trust ledger written before deduped appends (one copy of the host
-    graph per round) is rewritten to its distinct ONCE at the next
-    run_crawl invocation — the per-round trustrank distinct must not
-    rescan accumulated duplicates forever."""
-    A, X = "sheal-a.test", "sheal-x.test"
-    a0 = f"http://{A}/" + _pick_name(A, "a")
-    x0 = f"http://{X}/" + _pick_name(X, "x")
-
-    def page(url, hrefs):
-        links = "".join(f'<a href="{h}">x</a>' for h in hrefs)
-        return (
-            url,
-            TS,
-            bytearray(f"<html><body>body{links}</body></html>".encode()),
-            "",
-            "en",
-        )
-
-    rows = [
-        (
-            f"http://{A}/robots.txt",
-            TS,
-            bytearray(b"User-agent: *\nDisallow: /private\n"),
-            "",
-            "en",
-        ),
-        (
-            f"http://{X}/robots.txt",
-            TS,
-            bytearray(b"User-agent: *\nDisallow: /private\n"),
-            "",
-            "en",
-        ),
-        page(a0, [x0]),
-        page(x0, []),
-    ]
-    pages = spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, html binary, text string, lang string"
-    )
-    cfg = CrawlConfig(
-        max_rounds=2,
-        priority="trust",
-        resolve_mode="standard",
-        trusted_hosts=[A],
-    )
-    store, _ = run_crawl(spark, pages, [a0], str(tmp_path / "h"), cfg)
+    # the trust ledger's appends are anti-joined, so it stays a set
     led = store.read("host_edges")
-    assert led is not None
-    n_unique = led.count()
-    assert n_unique == led.distinct().count()
-    # simulate a pre-dedup ledger: three copies of every pair (replace_with
-    # deletes the old dirs, so count BEFORE the swap — the lazy `led` plan
-    # reads them) AND strip the host_edges_dedup history markers a real
-    # pre-upgrade store would not have (the probe is marker-gated: once any
-    # round carries the marker, the steady state pays no probe job)
-    store.replace_with("host_edges", led.unionByName(led).unionByName(led))
-    import json as _json
-
-    with open(store._manifest_path) as f:
-        manifest = _json.load(f)
-    for h in manifest.get("history", []):
-        h.pop("host_edges_dedup", None)
-    with open(store._manifest_path, "w") as f:
-        _json.dump(manifest, f)
-    dup = store.read("host_edges")
-    assert dup.count() == 3 * n_unique
-
-    cfg2 = CrawlConfig(
-        max_rounds=4,
-        priority="trust",
-        resolve_mode="standard",
-        trusted_hosts=[A],
-    )
-    store, _ = run_crawl(spark, pages, [a0], str(tmp_path / "h"), cfg2, resume=True)
-    healed = store.read("host_edges")
-    assert healed.count() == healed.distinct().count()
+    assert led.count() == led.distinct().count() > 0

@@ -35,6 +35,8 @@ def _toks(text):
 def _py_bm25(rows, k1=1.2, b=0.75):
     toks = {d: _toks(t) for d, t in rows}
     toks = {d: t for d, t in toks.items() if t}
+    if not toks:  # no document has a token: no postings, no scores
+        return {}
     n_docs = len(toks)
     avgdl = sum(len(t) for t in toks.values()) / n_docs
     df = {}
