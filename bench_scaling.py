@@ -135,9 +135,10 @@ def dataplane(spark, pages, dup: int = 11) -> dict:
         .withColumn("_p", parse_page_udf("html"))
         .withColumn(
             "out_links",
-            # the round-5 product shape (crawl.py:649-663): page-URL parts
-            # bind once per row; unbound, the base-part regex chains re-run
-            # per extracted HREF inside the HOF lambda
+            # the round-5 product shape (the bind_once link resolution in
+            # plans/crawl.py _parse): page-URL parts bind once per row;
+            # unbound, the base-part regex chains re-run per extracted HREF
+            # inside the HOF lambda
             bind_once(
                 resolve_base_parts(F.col("url")),
                 lambda rb: F.filter(

@@ -16,6 +16,14 @@ from .oracle import oracle_crawl
 
 SPEC = CorpusSpec.smoke()
 MAX_ROUNDS = 12
+# the committed contract of a default-config crawl: these tables and, per
+# round, exactly these metric keys (opt-in gates add their own on top)
+BASE_TABLES = {"frontier", "seed_hosts", "seen", "parsed", "metrics", "lineage"}
+BASE_METRIC_KEYS = {
+    "round", "urls_in", "deduped", "robots_denied", "politeness_deferred",
+    "scheduled", "fetch_hits", "fetch_misses", "parsed_pages", "redirects",
+    "not_modified", "mime_rejected", "size_rejected", "frontier_next",
+}
 
 
 @pytest.fixture(scope="module")
@@ -104,6 +112,13 @@ def test_run_crawl_driver_loop(spark, corpus, oracle_res, tmp_path):
     )
     engine_seen = {r["url_hash"] for r in store.read("seen").select("url_hash").collect()}
     assert engine_seen == oracle_res.seen
+    # no gate table is written and only the base metric keys appear
+    manifest = store.manifest()
+    assert set(manifest["tables"]) == BASE_TABLES
+    rounds = [h for h in manifest["history"] if "scheduled" in h]
+    assert len(rounds) == len(metrics)
+    assert all(set(h) == BASE_METRIC_KEYS for h in rounds)
+    assert set(store.read("metrics").columns) == BASE_METRIC_KEYS
 
 
 def test_fetch_routing_exercised(oracle_res):

@@ -274,6 +274,25 @@ def test_all_gates_crawl_frees_round_caches(spark, tmp_path):
     store, m1 = run_crawl(spark, pages, seed_urls(spec), state, cfg(3, 1 << 12))
     assert len(m1) == 3 and m1[-1]["frontier_next"] > 0
     assert cache_manager.isEmpty()
+    # the committed contract the gates must keep: exactly these tables and,
+    # every round, exactly these metric keys
+    manifest = store.manifest()
+    assert set(manifest["tables"]) == {
+        "frontier", "seed_hosts", "seen", "parsed", "metrics", "lineage",
+        "bloom", "host_counts", "trap_log", "trap_url_pairs",
+        "trap_digest_pairs", "trap_counts", "soft404_log", "soft404_counts",
+        "content_seen", "host_edges",
+    }
+    keys = {
+        "round", "urls_in", "deduped", "robots_denied", "politeness_deferred",
+        "scheduled", "fetch_hits", "fetch_misses", "parsed_pages", "redirects",
+        "not_modified", "mime_rejected", "size_rejected", "frontier_next",
+        "trap_dropped", "quota_dropped", "soft404_hosts", "content_dup",
+        "bloom_delta", "host_counts_delta",
+    }
+    rounds = [h for h in manifest["history"] if "scheduled" in h]
+    assert len(rounds) == 3 and all(set(h) == keys for h in rounds)
+    assert set(store.read("metrics").columns) == keys
 
     store, m2 = run_crawl(
         spark, pages, seed_urls(spec), state, cfg(5, 1 << 13), resume=True

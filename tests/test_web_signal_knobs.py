@@ -294,5 +294,12 @@ def test_resolve_standard_matches_oracle(spark, tmp_path):
 
 
 def test_knob_validation():
-    with pytest.raises(ValueError):
-        CrawlConfig(resolve_mode="rfc")
+    # every bad value fails at construction, before any Spark job runs
+    for bad in (
+        {"resolve_mode": "rfc"},
+        {"robots_mode": "rfc"},
+        {"num_buckets": 0},
+        {"salt_buckets": 0},
+    ):
+        with pytest.raises(ValueError):
+            CrawlConfig(**bad)

@@ -160,11 +160,11 @@ def main() -> int:
             "action", route_fetch("html", "url")
         )
         if content_dedup:
-            # the run_round content-seen test, in its round-5 shape: md5
+            # the crawl's content-seen test, in its round-5 shape: md5
             # digest on parse rows, NULL-digest rows split OUT of the digest
             # shuffle, left join against the claimed-digest table, and the
             # in-batch claim as a min-URL aggregate + join-back (NEVER a
-            # digest window — crawl.py:620-636)
+            # digest window — plans/gates.py ContentDedup.route)
             cs = pages.sample(0.2, seed=2).select(F.md5("html").alias("digest"))
             routed = routed.withColumn(
                 "digest",
@@ -193,7 +193,8 @@ def main() -> int:
         # page-URL parts bind ONCE per row (functions/text.bind_once), the
         # round-5 product shape — HOF lambda bodies get no subexpression
         # elimination, so the unbound form re-runs the base-part regex
-        # chains per extracted HREF (crawl.py:649-663)
+        # chains per extracted HREF (the bind_once link resolution in
+        # plans/crawl.py _parse)
         parsed = routed.withColumn(
             "_p", parse_page_udf(F.when(F.col("action") == "parse", F.col("html")))
         ).withColumn(
