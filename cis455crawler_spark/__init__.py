@@ -13,7 +13,8 @@ Subpackages:
   operators/  — dedup (exact + bloom + fuzzy), scheduler, pagerank, indexer,
                 search, similarity, multimodal plumbing
   plans/      — the crawl round loop (frontier scheduler) with checkpoint/resume
-  streaming/  — Structured Streaming ingestion of crawl metrics/events
+  streaming/  — event-feed windows (batch or Structured Streaming), batch
+                sessionization, incremental index upkeep over a page stream
 """
 
 __version__ = "0.1.0"

@@ -159,11 +159,6 @@ def extract_meta_py(html_bytes: bytes | None) -> str | None:
 # --- Arrow-batched UDFs ---
 
 
-@pandas_udf(T.ArrayType(T.StringType()))
-def extract_hrefs_udf(html: pd.Series) -> pd.Series:
-    return html.map(extract_hrefs_py)
-
-
 @pandas_udf(
     T.StructType(
         [

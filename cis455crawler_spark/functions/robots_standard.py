@@ -6,11 +6,12 @@ gate depends on it byte-for-byte. A production crawl needs the standard
 instead: per-group Allow/Disallow with '*' / '$' wildcards, longest-match
 precedence, Allow winning length ties, and undefined paths allowed.
 
-Spark shape mirrors the quirk path: robots bodies parse DISTRIBUTED in an
-Arrow batch into a per-host rules array (each rule pre-compiled to an
-anchored regex + its RFC match length), and the per-URL verdict is a pure
-JVM expression — `filter(rules, r -> regexp_like(path, r.pattern))` then an
-`aggregate` longest-match fold. No Python touches the frontier.
+Spark shape: robots bodies parse DISTRIBUTED in the quirk path's own Arrow
+batch (functions/robots.py build_robots_df(with_standard=True) adds a
+per-host `std_rules` array, each rule pre-compiled to an anchored regex +
+its RFC match length), and the per-URL verdict is a pure JVM expression —
+`filter(rules, r -> regexp_like(path, r.pattern))` then an `aggregate`
+longest-match fold. No Python touches the frontier.
 
 RFC 9309 semantics implemented:
   - groups = consecutive User-agent lines + following rules; a crawler
@@ -26,10 +27,8 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .text import bind_once
 
@@ -84,34 +83,6 @@ def parse_robots_standard(body: str, agent: str = DEFAULT_AGENT) -> list[tuple]:
         for rules in chosen
         for is_allow, path in rules
     ]
-
-
-_RULES_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("pattern", T.StringType()),
-            T.StructField("rlen", T.IntegerType()),
-            T.StructField("allow", T.BooleanType()),
-        ]
-    )
-)
-
-
-def build_robots_standard_df(spark, pages: DataFrame, agent: str = DEFAULT_AGENT) -> DataFrame:
-    """(host STRING, rules ARRAY<STRUCT<pattern,rlen,allow>>) from the
-    corpus's /robots.txt rows — distributed Arrow parse, same shape as the
-    quirk-mode build_robots_df (broadcast-join side)."""
-    from .urls import host_of
-
-    @F.pandas_udf(_RULES_TYPE)
-    def _parse(body: pd.Series) -> pd.Series:
-        return body.map(lambda b: parse_robots_standard(b or "", agent))
-
-    return (
-        pages.where(F.col("url").endswith("/robots.txt"))
-        .select(host_of("url").alias("host"), F.col("html").cast("string").alias("body"))
-        .select("host", _parse("body").alias("rules"))
-    )
 
 
 def url_path_of(url: Column | str) -> Column:

@@ -1,4 +1,4 @@
-"""Anchor-text extraction and anchor-weighted ranking (beyond reference).
+"""Anchor-text extraction and anchor postings (beyond reference).
 
 The reference ranks a word higher when it appears in the page's OWN <title>
 (+0.3) or <meta> tags (+0.2) (Indexer/src/edu/upenn/cis455/mapreduce/job/
@@ -118,34 +118,6 @@ def anchor_postings(
         F.explode(remove_stopwords(tokenize(F.col("anchor")))).alias("word"),
     )
     return words.groupBy("target_url", "word").agg(F.count("*").alias("anchor_tf"))
-
-
-W_ANCHOR = 0.4  # between the reference's title (0.3) weight and 2x meta (0.2)
-
-
-def anchor_boosted_rank(
-    postings_df: DataFrame,
-    anchors_df: DataFrame,
-    w_anchor: float = W_ANCHOR,
-) -> DataFrame:
-    """postings + anchor membership boost, mirroring the reference's
-    is_title/is_meta token-membership shape (Indexer.java:222-226): rank' =
-    rank + w_anchor * is_anchor, is_anchor = 1 iff at least one in-link's
-    anchor text contains the word.
-
-    `postings_df` is postings() output plus the doc key; `anchors_df` must
-    carry the SAME doc key (map target_url -> doc_id before calling, e.g. via
-    the page store's url column) plus (word, anchor_tf). The join is on
-    (doc key, word) — an equi-join on the postings' own grouping key, so at
-    scale it rides the existing partitioning; anchor_tf also lands in the
-    output for rankers that want a graded (log-scaled) boost instead."""
-    key = [c for c in anchors_df.columns if c not in ("word", "anchor_tf")]
-    joined = postings_df.join(anchors_df, [*key, "word"], "left")
-    return joined.withColumn(
-        "is_anchor", F.when(F.col("anchor_tf").isNotNull(), 1).otherwise(0)
-    ).withColumn(
-        "rank", F.col("rank") + F.lit(w_anchor) * F.col("is_anchor")
-    )
 
 
 def anchor_consensus(

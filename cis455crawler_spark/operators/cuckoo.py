@@ -12,13 +12,12 @@ Partial-key cuckoo hashing (Fan et al., "Cuckoo Filter: Practically Better
 Than Bloom", CoNEXT'14): per seen-bucket a uint16 table of shape
 (n_ck, 4 slots), 16-bit fingerprints (0 = empty), alternate index
 i2 = (i1 XOR h(fp)) & (n_ck-1) — n_ck is a power of two so the alternate
-mapping is an involution and membership/delete need only (fp, any index).
+mapping is an involution and membership needs only (fp, any index).
 At 4 slots/bucket and ~0.84 load a 16-bit fingerprint gives FP ~= 1e-4 —
-two orders below the Bloom sidecar at similar bits/key — and O(1) DELETE,
-which the Bloom bitmap cannot do. Deletion is what pays when seen entries
-expire (e.g. aging out a crawl generation's URLs without rebuilding the
-whole sidecar; the Bloom path must drop + rebuild, plans/crawl.py's
-recrawl does exactly that).
+two orders below the Bloom sidecar at similar bits/key. The layout also
+admits O(1) delete (clear one matching slot at i1 or i2), which the Bloom
+bitmap cannot do; no operation here expires seen entries, so none is
+shipped (the Bloom path drops + rebuilds on recrawl, plans/crawl.py).
 
 Like the Bloom sidecar, fingerprints/indices slice directly out of the
 40-hex-char sha1 (already cryptographic — no rehash): fp from hex[0:4]
@@ -83,28 +82,6 @@ def _insert(table: np.ndarray, fp: int, i1: int, mask: int, rng: random.Random) 
             table[idx, empty[0]] = fp
             return True
     return False  # caller marks the bucket saturated
-
-
-def _contains(table: np.ndarray, fp: int, i1: int, mask: int) -> bool:
-    return bool((table[i1] == fp).any() or (table[_alt(i1, fp, mask)] == fp).any())
-
-
-def cuckoo_delete(entry: dict, hash_hex: str) -> bool:
-    """Delete ONE occurrence of the key from a merged-sidecar entry
-    ({'n_ck', 'saturated', 'table'}) — the operation the Bloom bitmap can't
-    do. Returns False if the fingerprint isn't present (or the bucket is
-    saturated, where deletion would be unsound: the key's fingerprint may
-    have been kicked out during the failed insert)."""
-    if entry["saturated"]:
-        return False
-    mask = entry["n_ck"] - 1
-    fp, i1 = _fp_i1(hash_hex, mask)
-    for idx in (i1, _alt(i1, fp, mask)):
-        hit = np.flatnonzero(entry["table"][idx] == fp)
-        if len(hit):
-            entry["table"][idx, hit[0]] = 0
-            return True
-    return False
 
 
 def build_cuckoo_sidecar(

@@ -7,9 +7,11 @@ as the scale-correct Spark shape (north_rule: "partitioned bloom/cuckoo
 URL-seen set"):
 
   1. candidates carry `url_hash` (40-char sha1 hex) and a bucket id
-     (url_hash_bucket). The seen table is laid out bucketed the same way
-     (Iceberg: PARTITIONED BY bucket(N, url_hash) -> storage-partitioned
-     anti-join, no shuffle of the big side).
+     (url_hash_bucket). The seen table is written partitioned by the same
+     bucket column, but the anti-join does not use that layout: below
+     autoBroadcastJoinThreshold Spark broadcasts the seen keys each round,
+     above it Spark shuffles both sides (ROADMAP item 4: a Spark-bucketed
+     seen base would remove the seen-side Exchange).
   2. a per-bucket Bloom bitmap sidecar (built with applyInPandas over the
      seen buckets) is COGROUPED with the candidates on the bucket id: each
      probe task loads ONLY its bucket's bitmap rows and answers membership
@@ -57,17 +59,6 @@ def bloom_bits_for(expected_keys: int, target_fp: float = 0.01) -> int:
         return 1 << 22
     m = -BLOOM_K * expected_keys / math.log(1.0 - target_fp ** (1.0 / BLOOM_K))
     return max(1 << 10, (int(math.ceil(m)) + 7) // 8 * 8)
-
-
-def _probe_positions(hash_hex: str, n_bits: int) -> tuple[int, int, int, int]:
-    """Scalar reference form of the probe (tests + sidecar build); the probe
-    path itself uses the vectorized _bloom_probe_vec below."""
-    return (
-        int(hash_hex[0:10], 16) % n_bits,
-        int(hash_hex[10:20], 16) % n_bits,
-        int(hash_hex[20:30], 16) % n_bits,
-        int(hash_hex[30:40], 16) % n_bits,
-    )
 
 
 def hex_slice_bytes(s: pd.Series, start: int, length: int) -> np.ndarray:

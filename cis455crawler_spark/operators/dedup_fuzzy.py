@@ -75,61 +75,21 @@ def _minhash_params(num_hashes: int, seed: int = 7) -> tuple[list[int], list[int
     return a, b
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    shingle_k: int = 3,
-    seed: int = 7,
+def minhash_signatures_from_shingles(
+    sh: DataFrame, num_hashes: int = 64, seed: int = 7
 ) -> DataFrame:
-    """(id, sig ARRAY<LONG>) — MinHash over k-token shingles, PURE JVM.
+    """(id, sig ARRAY<LONG>) — MinHash over an already-exploded
+    distinct-shingle stream sh(id, sh) (_shingle_lists), PURE JVM. Callers
+    need the shingle rows anyway (verification), so the expensive
+    tokenize+shingle map pass over the corpus runs once, not twice.
 
     Shingles are hashed with xxhash64 then folded to [0, 2^31-1) (codegen,
     vectorized); slot i is min over shingles of the classic Carter-Wegman
     permutation ``(a_i*h + b_i) mod (2^31-1)`` — every intermediate < 2^62,
-    so ANSI long arithmetic never overflows. Shape: explode shingle hashes
-    ONCE, then num_hashes partial-aggregated mins in a single groupBy pass
-    (an array-expression formulation recomputes the shingle hashing per slot
-    via projection collapse; this form hashes each shingle exactly once).
-    Zero Python on the path.
-    """
-    a, b = _minhash_params(num_hashes, seed)
-    p = F.lit(_MERSENNE31)
-
-    # repartition by id first: a single-file parquet source is one task, and
-    # without this every shingle hash computes in that one task (the groupBy
-    # only parallelizes AFTER the expensive map side)
-    ex = (
-        df.repartition(F.col(id_col))
-        .select(
-            F.col(id_col).alias("id"),
-            F.explode_outer(shingles(tokenize(F.col(text_col)), shingle_k)).alias("s"),
-        )
-        .select("id", F.pmod(F.xxhash64("s"), p).alias("h"))
-    )
-    agg = ex.groupBy("id").agg(
-        *[
-            F.min(F.pmod(F.col("h") * F.lit(ai) + F.lit(bi), p)).alias(f"_m{i}")
-            for i, (ai, bi) in enumerate(zip(a, b))
-        ]
-    )
-    sig = F.array(
-        *[F.coalesce(F.col(f"_m{i}"), F.lit(0).cast("long")) for i in range(num_hashes)]
-    )
-    return agg.select("id", sig.alias("sig"))
-
-
-def minhash_signatures_from_shingles(
-    sh: DataFrame, num_hashes: int = 64, seed: int = 7
-) -> DataFrame:
-    """Signatures from an ALREADY-exploded distinct-shingle stream sh(id, sh)
-    — for callers that need the shingle rows anyway (verification), so the
-    expensive tokenize+shingle map pass over the corpus runs once, not twice.
-    Identical output to minhash_signatures on the same documents: min over
-    the distinct shingle set equals min over the multiset, and docs with no
-    shingle rows simply get no signature (they can never survive exact
-    verification either, so verified pair sets are unchanged)."""
+    so ANSI long arithmetic never overflows. All num_hashes mins come out of
+    ONE partial-aggregated groupBy pass, each shingle hashed exactly once.
+    Docs with no shingle rows get no signature (they can never survive
+    exact verification either)."""
     a, b = _minhash_params(num_hashes, seed)
     p = F.lit(_MERSENNE31)
     ex = sh.select("id", F.pmod(F.xxhash64("sh"), p).alias("h"))
@@ -180,26 +140,6 @@ def minhash_lsh_pairs(
         .distinct()
     )
     return pairs
-
-
-def minhash_jaccard(pairs: DataFrame, signatures: DataFrame) -> DataFrame:
-    """Estimated Jaccard per candidate pair = fraction of equal sig slots."""
-    sa = signatures.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = signatures.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    j = (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "est_jaccard",
-            F.size(
-                F.filter(
-                    F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda z: z
-                )
-            )
-            / F.size("sig_a"),
-        )
-    )
-    return j.select("id_a", "id_b", "est_jaccard")
 
 
 def simhash64(
@@ -411,8 +351,8 @@ def minhash_verified_dups(
     is verified, not hoped for."""
     # ONE tokenize+shingle pass over the corpus, cached, feeding both the
     # signature build and the exact verification (the two most expensive
-    # map-side consumers) — re-deriving shingles inside minhash_signatures
-    # would run the regex tokenization twice per corpus
+    # map-side consumers) — re-deriving shingles for the signatures would
+    # run the regex tokenization twice per corpus
     sh = _shingle_lists(df, text_col, id_col, shingle_k).cache()
     sigs = minhash_signatures_from_shingles(sh, num_hashes, seed)
     cand = minhash_lsh_pairs(sigs, bands, rows_per_band)

@@ -7,7 +7,10 @@ one shuffle-bounded DataFrame DAG:
     docs -> tokenize -> explode -> groupBy(doc,word).count        [O-A1]
          -> window max tf per doc; groupBy(word)+join for df      [O-A2]
          -> rank columns                                          [O-A3]
-         -> groupBy(word).agg(sort_array(collect_list(...)))      [O-A4]
+
+The per-word rank-desc parallel lists (O-A4, WordIndexEntity's shape in
+FileManagement.java:429-446) are one groupBy(word) + array_sort over
+collect_list; the driver entry `postings_assembly` builds them.
 
 Rank formula (Indexer.java reduce, :212-232), bug-compatible when
 bug_compatible=True — NOTE the asymmetry in the Java:
@@ -150,13 +153,3 @@ def bm25_postings(
     denom = F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
     score = idf * F.col("tf") * (k1 + 1.0) / denom
     return out.select("doc_id", "word", "tf", "dl", "df", score.alias("score"))
-
-
-def inverted_index(postings_df: DataFrame) -> DataFrame:
-    """(word, postings ARRAY<STRUCT<rank,doc_id>>) rank-descending — the
-    WordIndexEntity parallel-array shape (FileManagement.java:429-446)."""
-    return postings_df.groupBy("word").agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col("rank"), F.col("doc_id"))), asc=False
-        ).alias("postings")
-    )

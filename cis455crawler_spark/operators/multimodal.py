@@ -1,21 +1,15 @@
 """Multimodal column plumbing: image/audio/video as opaque BINARY columns
 with typed metadata, processed via mapInPandas in Arrow batches.
 
-Codecs, honestly partitioned by what this container can do:
-  * REAL: PPM/P6 images (pure numpy — parse, channel stats, nearest-neighbor
-    resize), PNG (stdlib zlib inflate + all five scanline filters; 8-bit
-    grey/RGB/RGBA, non-interlaced) and PCM WAV audio (stdlib `wave` —
-    duration, RMS/peak stats). These run the actual decode->ndarray->feature
-    path end-to-end. The PNG unfilter is pure Python/numpy — right for
-    Arrow-batched feature extraction of web-sized images; a C-backed decoder
-    (PIL) slots into decode_image unchanged when available.
-  * HEADER-ONLY: JPEG (SOFn marker walk -> dims), MP4 (ISO-BMFF box
-    walk -> dims + duration) and MP3 (MPEG frame header + Xing/Info VBR
-    tag -> duration) parse real headers pure-stdlib; their pixel/sample
-    decodes (PIL / ffmpeg) raise NotImplementedError — swapping a decoder
+Header decodes, honestly partitioned by what this container can do:
+  * FULL: PPM/P6 images (pure numpy) and PCM WAV audio (stdlib `wave`)
+    decode to arrays; their dims/duration come from the decoded payload.
+  * HEADER-ONLY: PNG (IHDR -> dims), JPEG (SOFn marker walk -> dims), MP4
+    (ISO-BMFF box walk -> dims + duration) and MP3 (MPEG frame header +
+    Xing/Info VBR tag -> duration) parse real headers pure-stdlib; pixel
+    and sample decodes (PIL / ffmpeg) are not shipped — swapping a decoder
     in is a kernel-only change, the Spark-side plumbing (schema, Arrow
-    batching, partition shape) is identical and tested through the real
-    codecs.
+    batching, partition shape) is identical.
   * FAKE: the deterministic test codec stays for the SQL-oracle entries
     (multimodal_meta / frame_sample_counts recompute its header fields as
     pure arithmetic).
@@ -49,7 +43,8 @@ def encode_fake_media(media_id: int, kind: str, width: int, height: int, dur_ms:
 
 def decode_header(payload: bytes) -> tuple[int, int, int]:
     """(width, height, dur_ms) from any supported payload: FAKE test codec,
-    real P6/PPM (dur 0), real PCM WAV (dims 0). Lib-dependent formats raise."""
+    P6/PPM and PNG (dur 0), PCM WAV (dims 0), JPEG (dur 0), MP4, MP3
+    (dims 0). Anything else raises."""
     if payload is None:
         raise NotImplementedError("null payload")
     if payload[:4] == _MAGIC:
@@ -75,11 +70,9 @@ def decode_header(payload: bytes) -> tuple[int, int, int]:
     ):
         return decode_mp3_header(payload)
     raise NotImplementedError(
-        "MP4 frame decode requires ffmpeg, and JPEG pixel decode requires a "
-        "JPEG library — neither present in this environment; PNG, P6/PPM, "
-        "PCM WAV, the FAKE test codec (full decode), JPEG (header dims), "
-        "MP4 (header dims + duration) and MP3 (header duration) are "
-        "implemented"
+        "unsupported media payload: P6/PPM, PCM WAV, the FAKE test codec, "
+        "PNG and JPEG (header dims), MP4 (header dims + duration) and MP3 "
+        "(header duration) are implemented"
     )
 
 
@@ -95,9 +88,8 @@ def decode_jpeg_header(payload: bytes) -> tuple[int, int]:
     length until a SOF0-SOF15 (baseline, progressive, lossless, ...),
     then read (precision u8, height u16, width u16). Covers the dominant
     web image format's metadata path (with_media_meta / image routing)
-    without a pixel decoder; full decode remains the documented
-    NotImplementedError stub in decode_image (no JPEG lib in this
-    container — VERDICT r3 'What's missing' #2)."""
+    without a pixel decoder (no JPEG lib in this container — VERDICT r3
+    'What's missing' #2)."""
     if payload[:2] != JPEG_SOI:
         raise NotImplementedError("not a JPEG")
     i, n = 2, len(payload)
@@ -187,46 +179,6 @@ def decode_mp4_header(payload: bytes) -> tuple[int, int, int]:
     return w, h, dur_ms
 
 
-def encode_mp4_header(
-    width: int, height: int, dur_ms: int, timescale: int = 1000, v1: bool = False
-) -> bytes:
-    """Structurally valid MP4 prefix (ftyp + moov[mvhd + trak[tkhd]] + a
-    stub mdat) with the given dims/duration — real box layout for tests;
-    no codec data, so only the header parse succeeds."""
-
-    def box(t: bytes, body: bytes) -> bytes:
-        return (len(body) + 8).to_bytes(4, "big") + t + body
-
-    ftyp = box(b"ftyp", b"isom" + (512).to_bytes(4, "big") + b"isomiso2mp41")
-    dur = dur_ms * timescale // 1000
-    if v1:
-        mvhd = b"\x01\x00\x00\x00" + bytes(16) + timescale.to_bytes(4, "big") + dur.to_bytes(8, "big") + bytes(80)
-    else:
-        mvhd = bytes(12) + timescale.to_bytes(4, "big") + dur.to_bytes(4, "big") + bytes(80)
-    tkhd = bytearray(84)  # version 0: verflags + 80-byte body
-    tkhd[76:80] = (width << 16).to_bytes(4, "big")
-    tkhd[80:84] = (height << 16).to_bytes(4, "big")
-    moov = box(b"moov", box(b"mvhd", mvhd) + box(b"trak", box(b"tkhd", bytes(tkhd))))
-    return ftyp + moov + box(b"mdat", bytes(16))
-
-
-def encode_jpeg_header(width: int, height: int, progressive: bool = False) -> bytes:
-    """Structurally valid JPEG prefix (SOI + JFIF APP0 + DQT + SOF0/SOF2 +
-    SOS marker) with the given dims — real marker layout for tests; the
-    entropy-coded image data is absent, so only header parses succeed."""
-    app0 = b"\xff\xe0" + (16).to_bytes(2, "big") + b"JFIF\x00\x01\x02\x00" + b"\x00\x48\x00\x48\x00\x00"
-    dqt = b"\xff\xdb" + (67).to_bytes(2, "big") + b"\x00" + bytes(range(1, 65))
-    sof = (
-        (b"\xff\xc2" if progressive else b"\xff\xc0")
-        + (11).to_bytes(2, "big")
-        + b"\x08"
-        + height.to_bytes(2, "big")
-        + width.to_bytes(2, "big")
-        + b"\x01\x01\x11\x00"
-    )
-    return JPEG_SOI + app0 + dqt + sof + b"\xff\xda"
-
-
 # --- MP3 (MPEG audio) header parse — ISO 11172-3 / 13818-3 tables ---
 
 # bitrate kbps by [(mpeg1?, layer)] -> index 1..14 (index 0 = free format,
@@ -298,53 +250,7 @@ def decode_mp3_header(payload: bytes) -> tuple[int, int, int]:
     return 0, 0, (len(payload) - i) * 8 * 1000 // bitrate
 
 
-def encode_mp3_header(
-    frames: int | None = None,
-    audio_bytes: int = 4096,
-    sample_rate: int = 44100,
-    bitrate_kbps: int = 128,
-    mono: bool = False,
-    id3: bool = False,
-) -> bytes:
-    """Structurally valid MP3 prefix (optional ID3v2 stub + one MPEG1
-    Layer III frame header [+ Xing tag when `frames` is given] + silence
-    padding to `audio_bytes`) — real header layout for tests; no encoded
-    audio, so only the header parse succeeds."""
-    sr_idx = {44100: 0, 48000: 1, 32000: 2}[sample_rate]
-    br_idx = _MP3_BITRATE[(True, 1)].index(bitrate_kbps) + 1
-    hdr = bytes(
-        [
-            0xFF,
-            0xFB,  # sync + MPEG1 + Layer III + no CRC
-            (br_idx << 4) | (sr_idx << 2),
-            0xC0 if mono else 0x00,  # channel mode (+ zero mode ext/flags)
-        ]
-    )
-    body = bytearray(max(audio_bytes, 200))
-    side = 17 if mono else 32
-    if frames is not None:
-        body[side : side + 4] = b"Xing"
-        body[side + 4 : side + 8] = (0x1).to_bytes(4, "big")
-        body[side + 8 : side + 12] = frames.to_bytes(4, "big")
-    tag = b""
-    if id3:
-        tag = b"ID3\x04\x00\x00" + bytes([0, 0, 1, 0x7F]) + bytes(0xFF)  # syncsafe 255
-    return tag + hdr + bytes(body)
-
-
-# --- REAL codecs: P6/PPM (numpy) and PCM WAV (stdlib wave) ---
-
-
-def encode_ppm(media_id: int, width: int, height: int) -> bytes:
-    """Deterministic P6 image: pixel(y,x,c) = (3x + 5y + 7c + id) % 256 —
-    a closed form tests can recompute without touching the codec."""
-    arr = (
-        3 * np.arange(width)[None, :, None]
-        + 5 * np.arange(height)[:, None, None]
-        + 7 * np.arange(3)[None, None, :]
-        + media_id
-    ) % 256
-    return f"P6\n{width} {height}\n255\n".encode() + arr.astype(np.uint8).tobytes()
+# --- full decodes: P6/PPM (numpy) and PCM WAV (stdlib wave) ---
 
 
 def decode_ppm(payload: bytes) -> tuple[int, int, np.ndarray]:
@@ -374,149 +280,9 @@ def decode_ppm(payload: bytes) -> tuple[int, int, np.ndarray]:
     return w, h, arr.reshape(h, w, 3)
 
 
-# --- REAL codec: PNG (stdlib zlib; 8-bit grey/RGB/RGBA, non-interlaced) ---
+# --- PNG: header only (IHDR is always the first chunk) ---
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
-_PNG_CHANNELS = {0: 1, 2: 3, 6: 4}  # color_type -> samples/pixel (8-bit)
-
-
-def _png_chunk(ctype: bytes, data: bytes) -> bytes:
-    import zlib
-
-    return (
-        struct.pack(">I", len(data))
-        + ctype
-        + data
-        + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-    )
-
-
-def encode_png(arr: np.ndarray) -> bytes:
-    """Minimal spec-conformant PNG encoder: 8-bit, filter 0 on every
-    scanline, one zlib IDAT. arr is [h, w] (grey), [h, w, 3] or [h, w, 4]."""
-    import zlib
-
-    arr = np.asarray(arr, dtype=np.uint8)
-    if arr.ndim == 2:
-        arr = arr[:, :, None]
-    h, w, ch = arr.shape
-    color_type = {1: 0, 3: 2, 4: 6}[ch]
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    raw = b"".join(b"\x00" + arr[y].tobytes() for y in range(h))
-    return (
-        PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raw))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
-def decode_png(payload: bytes) -> tuple[int, int, np.ndarray]:
-    """(width, height, uint8 array [h, w, channels]) from a PNG — stdlib
-    zlib inflate + the five scanline filters (None/Sub/Up/Average/Paeth),
-    RFC 2083 §6. 8-bit grey (type 0), RGB (2), RGBA (6), non-interlaced."""
-    import zlib
-
-    if payload[:8] != PNG_SIG:
-        raise NotImplementedError("not a PNG")
-    pos, idat, meta = 8, [], None
-    while pos + 8 <= len(payload):
-        (length,) = struct.unpack(">I", payload[pos : pos + 4])
-        ctype = payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + length]
-        pos += 12 + length  # length + type + data + crc
-        if ctype == b"IHDR":
-            meta = struct.unpack(">IIBBBBB", data)
-        elif ctype == b"IDAT":
-            idat.append(data)
-        elif ctype == b"IEND":
-            break
-    if meta is None:
-        raise NotImplementedError("PNG missing IHDR")
-    w, h, depth, color_type, _comp, _filt, interlace = meta
-    if depth != 8 or color_type not in _PNG_CHANNELS or interlace != 0:
-        raise NotImplementedError(
-            f"PNG depth={depth} color_type={color_type} interlace={interlace}"
-            " unsupported (8-bit grey/RGB/RGBA, non-interlaced only)"
-        )
-    ch = _PNG_CHANNELS[color_type]
-    raw = zlib.decompress(b"".join(idat))
-    stride = w * ch
-    if len(raw) != h * (1 + stride):
-        raise NotImplementedError("PNG size mismatch (truncated IDAT?)")
-    out = np.zeros((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.int32)
-    for y in range(h):
-        row_start = y * (1 + stride)
-        ftype = raw[row_start]
-        line = np.frombuffer(
-            raw, dtype=np.uint8, count=stride, offset=row_start + 1
-        ).astype(np.int32)
-        if ftype == 0:  # None
-            cur = line
-        elif ftype == 2:  # Up
-            cur = (line + prev) & 0xFF
-        elif ftype == 1:  # Sub — sequential in x, vectorized over channels
-            cur = line.copy()
-            for x in range(ch, stride):
-                cur[x] = (cur[x] + cur[x - ch]) & 0xFF
-        elif ftype == 3:  # Average
-            cur = line.copy()
-            for x in range(stride):
-                left = cur[x - ch] if x >= ch else 0
-                cur[x] = (cur[x] + ((left + prev[x]) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            cur = line.copy()
-            for x in range(stride):
-                left = int(cur[x - ch]) if x >= ch else 0
-                ul = int(prev[x - ch]) if x >= ch else 0
-                cur[x] = (cur[x] + _paeth(left, int(prev[x]), ul)) & 0xFF
-        else:
-            raise NotImplementedError(f"PNG filter type {ftype}")
-        out[y] = cur.astype(np.uint8)
-        prev = cur
-    return w, h, out.reshape(h, w, ch)
-
-
-def decode_image(payload: bytes) -> tuple[int, int, np.ndarray]:
-    """Dispatch P6/PPM or PNG by magic -> (w, h, uint8 [h, w, channels])."""
-    if payload[:2] == b"P6":
-        return decode_ppm(payload)
-    if payload[:8] == PNG_SIG:
-        return decode_png(payload)
-    raise NotImplementedError("unsupported image format (P6/PPM and PNG)")
-
-
-def resize_nearest(arr: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Nearest-neighbor resize, pure index arithmetic."""
-    h, w = arr.shape[:2]
-    ys = (np.arange(out_h) * h) // out_h
-    xs = (np.arange(out_w) * w) // out_w
-    return arr[ys[:, None], xs[None, :]]
-
-
-def encode_wav(media_id: int, dur_ms: int, rate: int = 8000) -> bytes:
-    """Deterministic mono 16-bit PCM sine: freq = 110 + 10*(id % 32) Hz,
-    amplitude 0.5 — RMS is amplitude/sqrt(2) in closed form."""
-    n = max(1, rate * dur_ms // 1000)
-    t = np.arange(n)
-    freq = 110 + 10 * (media_id % 32)
-    samples = (np.sin(2 * np.pi * freq * t / rate) * 0.5 * 32767).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(rate)
-        wf.writeframes(samples.tobytes())
-    return buf.getvalue()
 
 
 def decode_wav(payload: bytes) -> tuple[int, np.ndarray]:
@@ -574,109 +340,6 @@ def with_media_meta(df: DataFrame) -> DataFrame:
             yield pdf
 
     return df.mapInPandas(_decode, schema=MEDIA_SCHEMA)
-
-
-def synth_media_real(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic REAL-codec media table: even ids get a P6 gradient
-    image (w = 16+(id%32), h = 8+(id%16)), odd ids a PCM-WAV sine
-    (dur = 50+(id%20)*10 ms @8 kHz) — generated distributed via mapInPandas,
-    decodable by the real kernels with closed-form expected stats."""
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf[id_col]:
-                i = int(i)
-                if i % 2 == 0:
-                    rows.append((i, "image", encode_ppm(i, 16 + i % 32, 8 + i % 16),
-                                 None, None, None))
-                else:
-                    rows.append((i, "audio", encode_wav(i, 50 + (i % 20) * 10),
-                                 None, None, None))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "width", "height", "dur_ms"]
-            )
-
-    return ids_df.mapInPandas(_gen, schema=MEDIA_SCHEMA)
-
-
-def image_stats(df: DataFrame) -> DataFrame:
-    """(media_id, width, height, mean_r, mean_g, mean_b) — REAL decode ->
-    ndarray -> channel means, one Arrow batch per Python call."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "width": [], "height": [],
-                   "mean_r": [], "mean_g": [], "mean_b": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, arr = decode_image(payload)
-                flat = arr.reshape(h * w, -1)
-                if flat.shape[1] == 1:  # grey: r=g=b
-                    m = np.repeat(flat.mean(axis=0), 3)
-                else:  # RGB / RGBA (alpha excluded from channel means)
-                    m = flat[:, :3].mean(axis=0)
-                out["media_id"].append(mid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_r"].append(float(m[0]))
-                out["mean_g"].append(float(m[1]))
-                out["mean_b"].append(float(m[2]))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        _stats,
-        schema="media_id long, width int, height int,"
-               " mean_r double, mean_g double, mean_b double",
-    )
-
-
-def audio_stats(df: DataFrame) -> DataFrame:
-    """(media_id, sample_rate, n_samples, rms, peak) — REAL WAV decode."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "sample_rate": [], "n_samples": [],
-                   "rms": [], "peak": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, samples = decode_wav(payload)
-                x = samples.astype(np.float64) / 32767.0
-                out["media_id"].append(mid)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(len(samples))
-                out["rms"].append(float(np.sqrt((x * x).mean())) if len(x) else 0.0)
-                out["peak"].append(float(np.abs(x).max()) if len(x) else 0.0)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        _stats,
-        schema="media_id long, sample_rate int, n_samples long,"
-               " rms double, peak double",
-    )
-
-
-def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """(media_id, payload) — REAL decode -> nearest-neighbor resize ->
-    re-encode P6. The batch shape a thumbnailing pipeline uses."""
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                is_png = payload[:8] == PNG_SIG
-                _w, _h, arr = decode_image(payload)
-                small = np.ascontiguousarray(
-                    resize_nearest(arr, out_w, out_h), dtype=np.uint8
-                )
-                ids.append(mid)
-                if is_png:  # thumbnails keep their source format
-                    payloads.append(encode_png(small.squeeze(-1) if small.shape[-1] == 1 else small))
-                else:
-                    payloads.append(
-                        f"P6\n{out_w} {out_h}\n255\n".encode() + small.tobytes()
-                    )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return df.mapInPandas(_resize, schema="media_id long, payload binary")
 
 
 def frame_sample(df: DataFrame, every_ms: int = 1000) -> DataFrame:

@@ -152,56 +152,6 @@ def trustrank(
     )
 
 
-def trustrank_py_oracle(
-    edge_list: list[tuple[str, str]],
-    trusted: set[str],
-    iterations: int = 5,
-    drop_sinks: bool = True,
-) -> dict[str, float]:
-    """Driver-side reference implementation for tests."""
-    edges = sorted(set(edge_list))
-    if drop_sinks:
-        sources = {s for s, _ in edges}
-        edges = [(s, d) for s, d in edges if d in sources]
-    adj: dict[str, list[str]] = {}
-    for s, d in edges:
-        adj.setdefault(s, []).append(d)
-    ranks = {n: (1.0 if n in trusted else 0.0) for n in adj}
-    for _ in range(iterations):
-        incoming: dict[str, float] = {}
-        for s, outs in adj.items():
-            share = ranks[s] / len(outs)
-            for d in outs:
-                incoming[d] = incoming.get(d, 0.0) + share
-        ranks = {
-            n: (BASE if n in trusted else 0.0) + DAMPING * incoming.get(n, 0.0)
-            for n in adj
-        }
-    return ranks
-
-
-def pagerank_py_oracle(
-    edge_list: list[tuple[str, str]], iterations: int = 5, drop_sinks: bool = True
-) -> dict[str, float]:
-    """Driver-side reference implementation for tests."""
-    edges = sorted(set(edge_list))
-    if drop_sinks:
-        sources = {s for s, _ in edges}
-        edges = [(s, d) for s, d in edges if d in sources]
-    adj: dict[str, list[str]] = {}
-    for s, d in edges:
-        adj.setdefault(s, []).append(d)
-    ranks = {n: 1.0 for n in adj}
-    for _ in range(iterations):
-        incoming: dict[str, float] = {}
-        for s, outs in adj.items():
-            share = ranks[s] / len(outs)
-            for d in outs:
-                incoming[d] = incoming.get(d, 0.0) + share
-        ranks = {n: BASE + DAMPING * incoming[n] if n in incoming else BASE for n in adj}
-    return ranks
-
-
 def _l1_scatter(
     edges: DataFrame,
     scores: DataFrame,
@@ -293,47 +243,6 @@ def hits(edges: DataFrame, iterations: int = 3, checkpoint_every: int = 1) -> Da
     )
 
 
-def hits_py_oracle(
-    edge_list: list[tuple[str, str]], iterations: int = 3
-) -> dict[str, tuple[float, float]]:
-    """Driver-side reference implementation for tests: {node: (hub, auth)}."""
-    edges = sorted(set(edge_list))
-    nodes = sorted({n for e in edges for n in e})
-    hub = {n: 1.0 for n in nodes}
-    auth = {n: 0.0 for n in nodes}
-    for _ in range(iterations):
-        auth = {n: sum(hub[s] for s, d in edges if d == n) for n in nodes}
-        ta = sum(auth.values())
-        auth = {n: (v / ta if ta > 0 else 0.0) for n, v in auth.items()}
-        hub = {n: sum(auth[d] for s, d in edges if s == n) for n in nodes}
-        th = sum(hub.values())
-        hub = {n: (v / th if th > 0 else 0.0) for n, v in hub.items()}
-    return {n: (hub[n], auth[n]) for n in nodes}
-
-
-def host_rank(edges: DataFrame, iterations: int = 5) -> DataFrame:
-    """Host-level PageRank (beyond reference) — the domain-graph ranking
-    Common Crawl publishes alongside its page ranks and real crawlers feed
-    into frontier prioritization: collapse page edges (src, dst) to the host
-    graph (distinct host pairs, self-loops dropped — intra-host links say
-    nothing about cross-host endorsement), then run the page machinery on a
-    graph that is orders of magnitude smaller than the page graph. Feed the
-    result into the politeness pop's order column to fetch reputable hosts
-    first. Output: (host STRING, rank DOUBLE)."""
-    from ..functions.urls import host_of
-
-    host_edges = (
-        edges.select(
-            host_of(F.col("src")).alias("src"), host_of(F.col("dst")).alias("dst")
-        )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    return pagerank(host_edges, iterations=iterations).withColumnRenamed(
-        "node", "host"
-    )
-
-
 def salsa(
     edges: DataFrame, iterations: int = 3, checkpoint_every: int = 1
 ) -> DataFrame:
@@ -399,31 +308,6 @@ def salsa(
             F.coalesce("auth", F.lit(0.0)).alias("auth"),
         )
     )
-
-
-def salsa_py_oracle(
-    edge_list: list[tuple[str, str]], iterations: int = 3
-) -> dict[str, tuple[float, float]]:
-    """Driver-side reference implementation for tests: {node: (hub, auth)}."""
-    edges = sorted(set(edge_list))
-    nodes = sorted({n for e in edges for n in e})
-    outdeg = {n: sum(1 for s, _ in edges if s == n) for n in nodes}
-    indeg = {n: sum(1 for _, d in edges if d == n) for n in nodes}
-    hub = {n: 1.0 for n in nodes}
-    for _ in range(iterations):
-        auth = {
-            n: sum(hub[s] / outdeg[s] for s, d in edges if d == n)
-            for n in nodes
-        }
-        ta = sum(auth.values())
-        auth = {n: (v / ta if ta > 0 else 0.0) for n, v in auth.items()}
-        hub = {
-            n: sum(auth[d] / indeg[d] for s, d in edges if s == n)
-            for n in nodes
-        }
-        th = sum(hub.values())
-        hub = {n: (v / th if th > 0 else 0.0) for n, v in hub.items()}
-    return {n: (hub[n], auth[n]) for n in nodes}
 
 
 def spam_mass(

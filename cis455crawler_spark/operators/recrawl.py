@@ -19,8 +19,10 @@ the new warc_ts while 304s did not. One groupBy(url_hash) pass:
     priority     staleness_days * change_rate  -- expected missed changes
 
 The output ranks the whole corpus with one shuffle on url_hash (the same
-key the parsed table is already written by) and broadcasts nothing; take
-the top fetch-budget rows as the next generation's frontier.
+key the parsed table is already written by) and broadcasts nothing; the
+top fetch-budget rows by (priority, staleness) desc are the next
+generation's frontier (a global top-k: per-partition top-k + one reduced
+sort, not a full shuffle of the corpus).
 """
 
 from __future__ import annotations
@@ -78,21 +80,6 @@ def recrawl_priority(
             "url_hash", "url", "n_versions", "change_rate_per_day",
             "staleness_days", "priority",
         )
-    )
-
-
-def recrawl_frontier(
-    parsed: DataFrame, as_of: datetime, budget: int, min_span_s: float = 1.0
-) -> DataFrame:
-    """Top-`budget` URLs by (priority, staleness) — the freshness-ordered
-    seed list for the next recrawl generation. A global top-k: Spark runs
-    it as per-partition top-k + a single reduced sort, not a full shuffle
-    of the corpus."""
-    return (
-        recrawl_priority(parsed, as_of, min_span_s=min_span_s)
-        .orderBy(F.desc("priority"), F.desc("staleness_days"), "url")
-        .limit(budget)
-        .select("url")
     )
 
 

@@ -1,14 +1,14 @@
 """Similarity search over an embedding column (array<float>).
 
-Two paths:
-  * brute-force cosine top-k — exact baseline, pure JVM column math
-    (F.zip_with dot product + salted two-phase top-k). O(n*q) but fully
-    distributed — no per-query window ever sorts the corpus in one task;
-    right answer for verification and small query sets.
   * IVF (inverted-file) top-k — the scale path: k-means-lite centroids
     (deterministic seeded sample, driver-side Lloyd iterations on a sample),
     vectors assigned to nearest centroid, queries probe only `nprobe`
     partitions. Recall<1 by construction; exactness not claimed.
+  * int8-quantized top-k and semantic dedup over the same assignment.
+
+Every exact re-rank is pure JVM column math (F.zip_with dot product) with a
+salted two-phase top-k, so no per-query window ever sorts the corpus in one
+task.
 """
 
 from __future__ import annotations
@@ -59,33 +59,6 @@ def topk_two_phase(
     )
 
 
-def cosine_topk_bruteforce(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
-    q_vec_col: str = "q_vec",
-) -> DataFrame:
-    """(q_id, vec_id, cosine, rn) — exact top-k by cosine for each query.
-    Queries are broadcast (small side); the big vector table streams."""
-    v = vectors.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")).withColumn(
-        "nv", _norm(F.col("v"))
-    )
-    q = queries.select(F.col(q_id_col).alias("q_id"), F.col(q_vec_col).alias("qv")).withColumn(
-        "nq", _norm(F.col("qv"))
-    )
-    scored = v.crossJoin(F.broadcast(q)).withColumn(
-        "cosine", _dot(F.col("v"), F.col("qv")) / (F.col("nv") * F.col("nq"))
-    )
-    # salted two-phase: a plain per-query window would sort the WHOLE corpus
-    # in one task per query — the exact baseline still must not straggle
-    return topk_two_phase(
-        scored, "q_id", [F.desc("cosine"), "vec_id"], k, "rn", "vec_id"
-    ).select("q_id", "vec_id", "cosine", "rn")
-
-
 def train_centroids(
     vectors: DataFrame,
     n_centroids: int = 16,
@@ -124,53 +97,6 @@ def train_centroids(
 
 
 LITERAL_ASSIGN_MAX = 64  # above this, literal argmin is a codegen bomb
-
-
-def train_centroids_distributed(
-    vectors: DataFrame,
-    n_centroids: int = 16,
-    vec_col: str = "embedding",
-    iters: int = 5,
-    seed: int = 13,
-) -> np.ndarray:
-    """Distributed Lloyd's over the FULL vector table — the scale path for
-    centroid counts a driver sample cannot support (train_centroids caps at
-    what fits in a few thousand sampled rows; 4k-64k centroids at 10^9
-    vectors need assignments over everything).
-
-    Per iteration: nearest-centroid assignment (assign_centroid — broadcast
-    matmul above 64 centroids, zero shuffle), then exact per-cell means via
-    posexplode to (cell, dim, val) and ONE groupBy(cell, dim) aggregation —
-    dim x rows inflation but keyed on k*dim groups, so the shuffle is a
-    partial-aggregated map-side-combine, not a data movement of the vector
-    table. Only k x dim means ever reach the driver.
-
-    Initialization: deterministic seeded Bernoulli sample (scan-side filter,
-    no global sort), same rule as train_centroids."""
-    sample = (
-        vectors.select(F.col(vec_col).alias("v"))
-        .sample(fraction=min(1.0, 10.0 * n_centroids / max(vectors.count(), 1)), seed=seed)
-        .limit(n_centroids)
-        .toPandas()
-    )
-    if len(sample) < n_centroids:
-        sample = vectors.select(F.col(vec_col).alias("v")).limit(n_centroids).toPandas()
-    cent = np.array(sample["v"].tolist(), dtype=np.float64)
-
-    v = vectors.select(F.col(vec_col).alias("v"))
-    for _ in range(iters):
-        assigned = v.withColumn("cell", assign_centroid(v, cent, "v"))
-        means = (
-            assigned.select("cell", F.posexplode("v").alias("dim", "val"))
-            .groupBy("cell", "dim")
-            .agg(F.avg("val").alias("m"))
-            .collect()
-        )
-        nxt = cent.copy()  # empty cells keep their previous centroid
-        for r in means:
-            nxt[r["cell"], r["dim"]] = r["m"]
-        cent = nxt
-    return cent
 
 
 def assign_centroid(df: DataFrame, centroids: np.ndarray, vec_col: str = "embedding"):

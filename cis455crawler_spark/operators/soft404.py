@@ -31,7 +31,7 @@ the reference crawler (it trusts the status code); extends SURVEY.md §2.11.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 TITLE_STRONG_RE = r"(?i)\b(404|not found)\b"
@@ -72,19 +72,4 @@ def soft404_signals(
             )
             | (F.col("body_error") & F.col("body_tiny")),
         )
-    )
-
-
-def host_soft404_rates(
-    flagged: DataFrame, host_col: Column | str = "host"
-) -> DataFrame:
-    """Per-host soft-404 rate — hosts serving mostly error shells are
-    candidates for frontier demotion (same containment hook the trap
-    detector feeds). One map-side-combinable groupBy."""
-    return flagged.groupBy(host_col).agg(
-        F.count("*").alias("n_pages"),
-        F.sum(F.col("soft404").cast("long")).alias("n_soft404"),
-        F.round(
-            F.sum(F.col("soft404").cast("long")) / F.count("*"), 6
-        ).alias("soft404_rate"),
     )

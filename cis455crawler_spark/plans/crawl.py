@@ -184,6 +184,14 @@ class CrawlConfig:
 
             per_bucket = -(-self.expected_total_urls // self.num_buckets)
             self.bloom_bucket_bits = bloom_bits_for(per_bucket)
+        # the sidecar's n_bits column is an int, and the kernel indexes a
+        # bitmap of this size: outside the range it fails inside a Spark job
+        if not 1 <= self.bloom_bucket_bits <= 2**31 - 1:
+            raise ValueError(
+                f"bloom_bucket_bits={self.bloom_bucket_bits} is outside "
+                "[1, 2**31-1]; with expected_total_urls set, raise num_buckets "
+                "so each bucket holds fewer keys"
+            )
 
 
 
@@ -705,16 +713,6 @@ def parsed_latest(store: SnapshotStore) -> DataFrame | None:
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-def edges_from_parsed(store: SnapshotStore) -> DataFrame | None:
-    """Link-graph edge list (src, dst) from the parsed table's adjacency
-    column — the reference's ParsedDocument.extractedUrls re-read for the
-    ranker (Ranker/src/.../FileManagement.java:176-184). Input to pagerank()."""
-    parsed = store.read("parsed")
-    if parsed is None:
-        return None
-    return parsed.select(F.col("url").alias("src"), F.explode("out_links").alias("dst"))
 
 
 def run_crawl(

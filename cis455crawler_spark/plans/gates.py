@@ -159,11 +159,12 @@ class TrapFilter(Gate):
             "digest",
             path_depth(F.col("url")).cast("long").alias("max_depth"),
         )
-        # the pair sets are co-partitioned with seen (the url bucket uses the
-        # canonical sha1 keying), so on the cluster their probe drops the
-        # history-side Exchange like the seen anti-join. In-round distinct:
-        # duplicate corpus url rows fan out the fetch join, and double-counted
-        # pairs would inflate the rollup away from the countDistinct contract.
+        # the pair sets take seen's bucket layout (the url bucket uses the
+        # canonical sha1 keying); like the seen anti-join, their probe still
+        # broadcasts or shuffles the history side (ROADMAP item 4). In-round
+        # distinct: duplicate corpus url rows fan out the fetch join, and
+        # double-counted pairs would inflate the rollup away from the
+        # countDistinct contract.
         def new_pairs(key: str, bucket_key, table: str) -> DataFrame:
             bucket = url_hash_bucket(bucket_key, self.cfg.num_buckets).alias("bucket")
             rows = ev.filter(F.col(key).isNotNull()).select("host", key, bucket)

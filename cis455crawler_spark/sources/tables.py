@@ -16,10 +16,11 @@ real cluster:
     prunes old snapshot entries and deletes data dirs no retained snapshot
     references (Iceberg expire_snapshots + remove_orphan_files — and the
     only mechanism that reclaims replaced frontier dirs).
-  * the seen table is written partitioned by a url-hash bucket column — the
-    layout that becomes `PARTITIONED BY (bucket(N, url_hash))` in Iceberg so
-    the frontier anti-join can run storage-partitioned (no shuffle of the
-    10^10-row seen side).
+  * the seen table is written partitioned by a url-hash bucket column (the
+    layout of `PARTITIONED BY (bucket(N, url_hash))` in Iceberg). Reads
+    union plain dirs, so the frontier anti-join does not see that layout:
+    Spark broadcasts the seen keys below autoBroadcastJoinThreshold and
+    shuffles both sides above it (ROADMAP item 4).
 
 It replaces the reference's checkpoint spool machinery
 (/root/reference/Crawler/src/com/datformers/servlets/WorkerServlet.java:389-473
@@ -220,7 +221,6 @@ class SnapshotStore:
         self,
         handle,
         small_appends: dict | None = None,
-        small_replaces: dict | None = None,
         extra: dict | None = None,
     ) -> None:
         """Phase 2: wait for the writes, write driver-side small tables,
@@ -253,8 +253,6 @@ class SnapshotStore:
             tables.setdefault(table, []).append(self._write_small_dir(round_no, table, pdf))
         for table, rel in replace_rels:
             tables[table] = [rel]
-        for table, pdf in (small_replaces or {}).items():
-            tables[table] = [self._write_small_dir(round_no, table, pdf)]
 
         new_manifest = {
             "round": round_no,
@@ -265,10 +263,16 @@ class SnapshotStore:
             # names — the Iceberg metadata-tree analogue, not data)
             "snapshots": {**m.get("snapshots", {}), str(round_no): tables},
         }
+        self._write_manifest(new_manifest)
+
+    def _write_manifest(self, m: dict) -> None:
+        """The one commit point: write a temp file, then os.replace it over
+        manifest.json (atomic on POSIX) — readers see the old manifest or
+        the new one, never a partial file."""
         tmp = self._manifest_path + f".tmp.{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as f:
-            json.dump(new_manifest, f, indent=1)
-        os.replace(tmp, self._manifest_path)  # the atomic snapshot swap
+            json.dump(m, f, indent=1)
+        os.replace(tmp, self._manifest_path)
 
     def _write_small_dir(self, round_no: int, table: str, pdf) -> str:
         import pyarrow as pa
@@ -291,22 +295,15 @@ class SnapshotStore:
         partition_by: dict[str, list[str]] | None = None,
         extra: dict | None = None,
         small_appends: dict | None = None,
-        small_replaces: dict | None = None,
     ) -> None:
         """Write data dirs first (Spark writes concurrent across driver
         threads), swap the manifest last (atomic commit).
 
-        small_appends / small_replaces: {table: pandas.DataFrame} —
-        metrics/lineage/bloom-sized tables written driver-side with pyarrow
-        (no Spark job per tiny table).
+        small_appends: {table: pandas.DataFrame} — metrics-sized tables
+        written driver-side with pyarrow (no Spark job per tiny table).
         """
         handle = self.begin_commit(round_no, appends, replaces, partition_by)
-        self.finish_commit(
-            handle,
-            small_appends=small_appends,
-            small_replaces=small_replaces,
-            extra=extra,
-        )
+        self.finish_commit(handle, small_appends=small_appends, extra=extra)
 
     # -- maintenance ------------------------------------------------------
     def _swap_tables(self, tables: dict, old_dirs: list[str]) -> None:
@@ -324,10 +321,7 @@ class SnapshotStore:
         # the current state stays travel-able under its own round number
         snapshots[str(m["round"])] = tables
         new_manifest = {**m, "tables": tables, "snapshots": snapshots}
-        tmp = self._manifest_path + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(new_manifest, f, indent=1)
-        os.replace(tmp, self._manifest_path)
+        self._write_manifest(new_manifest)
         for d in old_dirs:
             shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
 
@@ -360,10 +354,7 @@ class SnapshotStore:
                 if rel not in referenced:
                     doomed.append(rel)
         new_manifest = {**m, "snapshots": kept}
-        tmp = self._manifest_path + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(new_manifest, f, indent=1)
-        os.replace(tmp, self._manifest_path)
+        self._write_manifest(new_manifest)
         for rel in doomed:
             shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
         return doomed

@@ -4,8 +4,7 @@ table (url, warc_ts, html, text, lang).
 The north-rule input is an Iceberg table of Common-Crawl-style pages; the
 upstream data for such a table ships as WARC (ISO 28500) files, so this is
 the ingest seam a reference user needs to feed the engine from real crawl
-archives. Stdlib-only parse (no warcio in the container), exercised against
-deterministic synthetic WARCs built by build_warc_bytes below.
+archives. Stdlib-only parse (no warcio in the container).
 
 Scale shape: `spark.read.format("binaryFile")` gives one task per file —
 Common Crawl publishes ~1 GB .warc.gz segments in the hundreds of thousands
@@ -19,8 +18,6 @@ archive.
 
 from __future__ import annotations
 
-import gzip
-import io
 import zlib
 from datetime import datetime, timezone
 from typing import Iterator
@@ -165,14 +162,6 @@ def iter_warc_records(data: bytes) -> Iterator[dict]:
         yield from recs
         if stop:
             return
-
-
-def parse_warc_bytes(data: bytes) -> list[dict]:
-    """Parse one WARC file's bytes into response records:
-    [{url, warc_ts (datetime), http_status (int|None), content_type,
-    body (bytes)}]. Non-response records (request/metadata/warcinfo) are
-    skipped; a malformed tail stops the parse cleanly."""
-    return list(iter_warc_records(data))
 
 
 _RECORD_SCHEMA = (
@@ -389,137 +378,3 @@ def stream_warc_ingest(
     )
     drain_stream(files, _ingest, f"{state_root}/_warc_stream_checkpoint")
     return committed[0]
-
-
-def write_warc(
-    pages: DataFrame,
-    out_dir: str,
-    compress: bool = True,
-    default_status: int = 200,
-    default_content_type: str = "text/html",
-    default_ts: datetime = datetime(1970, 1, 1),
-) -> DataFrame:
-    """Distributed WARC export — the write side of read_warc: every partition
-    of `pages` (url, warc_ts, html[, http_status, content_type]) streams its
-    rows as framed response records into ONE .warc(.gz) shard under
-    `out_dir`, gzipped per record member exactly like Common Crawl (so the
-    member-at-a-time reader round-trips it). Returns the manifest
-    (file, n_records, n_bytes) — one row per shard; the returned DataFrame
-    is lazy, so trigger it (collect/write) to perform the export.
-
-    Records are framed by the same builder the parser is tested against
-    (build_warc_bytes), so export -> read_warc -> warc_to_pages reproduces
-    url/warc_ts/html byte-for-byte. NULLs read_warc legitimately produces
-    round-trip too: NULL warc_ts exports as default_ts (epoch), NULL
-    http_status/content_type as the defaults, NULL html as an empty body.
-    Shard size = partition size: control it with repartition() upstream (the
-    CC convention is ~1 GB shards).
-
-    Idempotent writes: shard names are DETERMINISTIC per partition and each
-    task writes an attempt-scoped temp file promoted with an atomic
-    os.replace — a retried/speculated attempt or a re-evaluated manifest
-    DataFrame overwrites the same shard instead of accumulating uuid-named
-    duplicates (the per-file analogue of SnapshotStore's two-phase commit).
-    Point out_dir at a FRESH directory per export: like any file sink,
-    stale shards from a previous differently-partitioned export are not
-    swept. Paths are task-local filesystem writes (the sandbox analogue of
-    a shared FS/object-store sink; nothing passes through the driver)."""
-    import os
-
-    from pyspark import TaskContext
-
-    has_status = "http_status" in pages.columns
-    has_ctype = "content_type" in pages.columns
-    cols = ["url", "warc_ts", "html"]
-    if has_status:
-        cols.append("http_status")
-    if has_ctype:
-        cols.append("content_type")
-    ext = ".warc.gz" if compress else ".warc"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId()
-        os.makedirs(out_dir, exist_ok=True)
-        path = os.path.join(out_dir, f"part-{pid:05d}{ext}")
-        tmp = f"{path}.attempt-{ctx.taskAttemptId()}.inprogress"
-        n_records = 0
-        n_bytes = 0
-        try:
-            with open(tmp, "wb") as fh:
-                for pdf in batches:
-                    recs = []
-                    for row in pdf.itertuples(index=False):
-                        ts = (
-                            default_ts
-                            if pd.isna(row.warc_ts)
-                            else row.warc_ts.to_pydatetime()
-                        )
-                        status = (
-                            int(row.http_status)
-                            if has_status and not pd.isna(row.http_status)
-                            else default_status
-                        )
-                        ctype = (
-                            row.content_type
-                            if has_ctype and isinstance(row.content_type, str)
-                            else default_content_type
-                        )
-                        body = b"" if row.html is None else bytes(row.html)
-                        recs.append((row.url, ts, status, ctype, body))
-                    blob = build_warc_bytes(recs, compress=compress)
-                    fh.write(blob)
-                    n_records += len(recs)
-                    n_bytes += len(blob)
-        except BaseException:
-            if os.path.exists(tmp):
-                os.remove(tmp)  # never leave a partial shard behind
-            raise
-        if n_records == 0:
-            os.remove(tmp)  # no empty shards
-            yield pd.DataFrame({"file": [], "n_records": [], "n_bytes": []})
-        else:
-            os.replace(tmp, path)  # atomic promote (last attempt wins)
-            yield pd.DataFrame(
-                {"file": [path], "n_records": [n_records], "n_bytes": [n_bytes]}
-            )
-
-    return pages.select(*cols).mapInPandas(
-        gen, schema="file string, n_records long, n_bytes long"
-    )
-
-
-# -- synthetic WARC builder (tests + corpus export) --------------------------
-
-
-def build_warc_bytes(
-    records: list[tuple[str, datetime, int, str, bytes]], compress: bool = False
-) -> bytes:
-    """Deterministic WARC/1.0 bytes from (url, ts, status, content_type,
-    body) tuples — each as a response record framed exactly like the parser
-    expects from real archives. compress=True gzips per record and
-    concatenates members (the Common Crawl layout)."""
-    members: list[bytes] = []
-    for url, ts, status, ctype, body in records:
-        http = (
-            f"HTTP/1.1 {status} X\r\nContent-Type: {ctype}\r\n"
-            f"Content-Length: {len(body)}\r\n\r\n"
-        ).encode() + body
-        warc_hdr = (
-            "WARC/1.0\r\n"
-            "WARC-Type: response\r\n"
-            f"WARC-Target-URI: {url}\r\n"
-            f"WARC-Date: {ts.strftime('%Y-%m-%dT%H:%M:%S')}"
-            f"{f'.{ts.microsecond:06d}' if ts.microsecond else ''}Z\r\n"
-            f"Content-Length: {len(http)}\r\n"
-            "Content-Type: application/http; msgtype=response\r\n\r\n"
-        ).encode()
-        rec = warc_hdr + http + _CRLF + _CRLF
-        if compress:
-            buf = io.BytesIO()
-            with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
-                gz.write(rec)
-            members.append(buf.getvalue())
-        else:
-            members.append(rec)
-    return b"".join(members)

@@ -3,19 +3,19 @@
 The reference has no streaming runtime — its 10-second worker heartbeats
 (/root/reference/Crawler/src/com/datformers/mapreduce/worker/resources/
 WorkerStatusUpdator.java:29-57) and master status page are polling loops.
-The rebuild exposes the same signals as a Structured Streaming pipeline over
-an events table (file source in tests; Kafka on a real cluster):
+The rebuild exposes the same signals over an events table:
 
-  * tumbling-window fetch-rate aggregation with a watermark for late events
-  * per-host running counters via the same windowed aggregation
+  * tumbling-window fetch-rate aggregation, with a watermark for late
+    events when run over a stream (file source in the driver entry; Kafka
+    on a real cluster)
+  * gap-based sessionization per user (batch window plan)
 
-Batch-equivalent builders are provided so correctness is oracle-checkable in
-SQL (a windowed streaming agg over a static frame equals its batch GROUP BY).
+A windowed streaming agg over a static frame equals its batch GROUP BY, so
+correctness is oracle-checkable in SQL.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -37,36 +37,11 @@ def tumbling_event_counts(
     )
 
 
-def dedup_stream(
-    events: DataFrame,
-    keys: tuple[str, ...] = ("user_id", "event_type"),
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming seen-set: dropDuplicatesWithinWatermark over `keys` — the
-    bounded-state streaming analogue of the crawl's seen anti-join
-    (O-F6/O-J2). State holds one entry per key only until the watermark
-    passes its event time + delay, so state size is bounded by the arrival
-    window, not by corpus size — the property that lets a continuous
-    URL-discovery stream dedup at 10^10-URL scale where a plain
-    dropDuplicates would hold every key forever.
-
-    Semantics caveat (inherent to the operator): two duplicates farther
-    apart in EVENT TIME than the watermark delay, arriving in different
-    micro-batches, may both be emitted — the durable seen table (snapshot
-    anti-join) remains the source of truth; this is the low-latency
-    front-line filter."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        list(keys)
-    )
-
-
 def sessionize(
     events: DataFrame, gap_minutes: int = 30, time_buckets: int | None = 64
 ) -> DataFrame:
     """Gap-based sessionization per user: session starts when the previous
-    event is more than `gap` away (lag + running sum — the batch equivalent
-    of applyInPandasWithState session tracking).
+    event is more than `gap` away (lag + running sum).
 
     Hot keys: a window partitioned on user_id alone sorts a hot user's whole
     history in ONE task. With `time_buckets` set (default) the lag and the
@@ -174,116 +149,4 @@ def sessionize(
         F.max("ts").alias("session_end"),
         F.count("*").alias("n_events"),
         F.sum("value").alias("session_value"),
-    )
-
-
-def sessionize_stream(
-    events: DataFrame, gap_minutes: int = 30, watermark: str = "2 hours"
-) -> DataFrame:
-    """Gap sessionization as a CUSTOM STATEFUL streaming operator —
-    applyInPandasWithState with per-user GroupState and an event-time
-    timeout (the real streaming counterpart of sessionize()).
-
-    Per user: events extend the open session while gaps stay <= gap;
-    a larger gap CLOSES the session (emitted with closed_by='gap') and opens
-    a new one. The open session rides in GroupState across micro-batches;
-    when the watermark passes its end + gap the state times out and the
-    session is emitted with closed_by='timeout'.
-
-    Batch parity caveat: emitted rows equal batch sessionize() rows ONLY
-    when each user's events arrive event-time-ordered ACROSS micro-batches
-    (within-batch disorder is handled by the sort). A late event that lands
-    inside the watermark but bridges a gap already emitted as closed cannot
-    merge the two sessions retroactively — exact parity under cross-batch
-    disorder would require buffering events in state until the watermark
-    passes them before closing anything. A stream's final still-open
-    sessions can also be unemitted at shutdown.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    gap_us = gap_minutes * 60 * 1_000_000
-    out_schema = (
-        "user_id long, session_start timestamp, session_end timestamp, "
-        "n_events long, session_value double, closed_by string"
-    )
-    state_schema = "start long, end long, n long, v double"  # epoch micros
-
-    def fn(key, pdf_iter, state):
-        user_id = key[0]
-
-        def emit(rows):
-            return pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(rows),
-                    "session_start": [
-                        pd.Timestamp(r[0], unit="us") for r in rows
-                    ],
-                    "session_end": [pd.Timestamp(r[1], unit="us") for r in rows],
-                    "n_events": [r[2] for r in rows],
-                    "session_value": [r[3] for r in rows],
-                    "closed_by": [r[4] for r in rows],
-                }
-            )
-
-        if state.hasTimedOut:
-            start, end, n, v = state.get
-            state.remove()
-            yield emit([(start, end, n, v, "timeout")])
-            return
-
-        rows = pd.concat(list(pdf_iter)).sort_values("ts")
-        ts_us = rows["ts"].astype("datetime64[us]").astype("int64").tolist()
-        vals = rows["value"].tolist()
-
-        cur = list(state.get) if state.exists else None
-        closed = []
-        for t, val in zip(ts_us, vals):
-            if cur is None:
-                cur = [t, t, 1, float(val)]
-            elif t - cur[1] > gap_us:
-                closed.append((*cur, "gap"))
-                cur = [t, t, 1, float(val)]
-            else:
-                cur[1] = max(cur[1], t)
-                cur[2] += 1
-                cur[3] += float(val)
-        state.update(tuple(cur))
-        # time out when the watermark passes the open session's gap horizon
-        state.setTimeoutTimestamp((cur[1] + gap_us) // 1000)
-        if closed:
-            yield emit(closed)
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def stream_from_directory(spark, path: str, schema: str) -> DataFrame:
-    """File-source readStream for tests (new parquet files appear per round)."""
-    return spark.readStream.schema(schema).parquet(path)
-
-
-def start_metrics_stream(spark, src_dir: str, out_dir: str, checkpoint_dir: str):
-    """readStream over round-metric drops -> windowed agg -> parquet sink.
-    Demonstrates the full streaming path end-to-end with exactly-once sink
-    semantics via the checkpoint dir."""
-    schema = "ts timestamp, event_type string, user_id long, value double"
-    agg = tumbling_event_counts(
-        stream_from_directory(spark, src_dir, schema), streaming=True
-    )
-    return (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )

@@ -409,8 +409,10 @@ def test_bloom_sizing_holds_fp_at_100x_load():
 
     import numpy as np
 
-    from cis455crawler_spark.operators.dedup import _probe_positions, bloom_bits_for
+    from cis455crawler_spark.operators.dedup import bloom_bits_for
     from cis455crawler_spark.plans.crawl import CrawlConfig
+
+    from .reference import probe_positions
 
     n = 200_000  # ~100x the per-bucket load the 2^22 default was tuned for
     n_bits = bloom_bits_for(n, target_fp=0.01)
@@ -419,14 +421,14 @@ def test_bloom_sizing_holds_fp_at_100x_load():
     def fill(bits, count, tag):
         for i in range(count):
             h = hashlib.sha1(f"{tag}{i}".encode()).hexdigest()
-            for p in _probe_positions(h, len(bits)):
+            for p in probe_positions(h, len(bits)):
                 bits[p] = True
 
     def fp_rate(bits, probes, tag):
         hits = 0
         for i in range(probes):
             h = hashlib.sha1(f"{tag}{i}".encode()).hexdigest()
-            if all(bits[p] for p in _probe_positions(h, len(bits))):
+            if all(bits[p] for p in probe_positions(h, len(bits))):
                 hits += 1
         return hits / probes
 

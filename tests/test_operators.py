@@ -5,10 +5,12 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from cis455crawler_spark.operators.pagerank import pagerank, pagerank_py_oracle
-from cis455crawler_spark.operators.indexer import postings, inverted_index
+from cis455crawler_spark.operators.pagerank import pagerank
+from cis455crawler_spark.operators.indexer import postings
 from cis455crawler_spark.operators.scheduler import host_budget, pop_host_batches
 from cis455crawler_spark.operators.search import search
+
+from .reference import pagerank_py_oracle
 
 
 def test_pop_host_batches_exact_topk(spark):
@@ -99,12 +101,31 @@ def test_lemma_lite_postings(spark):
     assert "dogs" in words0 and "jumping" in words0
 
 
-def test_inverted_index_rank_desc(spark):
-    docs = spark.createDataFrame(DOCS, "doc_id long, text string, title string, meta string")
-    idx = inverted_index(postings(docs, title_col="title", meta_col="meta"))
-    row = {r["word"]: r["postings"] for r in idx.collect()}["apple"]
-    ranks = [p["rank"] for p in row]
-    assert ranks == sorted(ranks, reverse=True)
+def test_inverted_index_rank_desc(spark, sf_dir):
+    """The inverted-index assembly the driver entry ships (postings_assembly,
+    O-A4): per word, "doc:tf" postings ordered tf-descending with doc_id
+    breaking ties, df = list length, and every tf equal to a Python count
+    over the same documents."""
+    import re
+    from collections import Counter
+
+    import __spark_entry__ as entry_mod
+    from cis455crawler_spark.functions.text import STOPWORDS
+
+    want: dict[str, dict[int, int]] = {}
+    for r in spark.read.parquet(f"{sf_dir}/documents.parquet").collect():
+        toks = [t for t in re.split("[^a-z0-9]+", (r["text"] or "").lower())
+                if t and t not in STOPWORDS]
+        for w, n in Counter(toks).items():
+            want.setdefault(w, {})[r["doc_id"]] = n
+
+    rows = entry_mod.queries()["postings_assembly"](spark, sf_dir).collect()
+    assert {r["word"] for r in rows} == set(want)
+    for r in rows:
+        pairs = [tuple(map(int, p.split(":"))) for p in r["postings"].split(" ")]
+        assert r["df"] == len(pairs)
+        assert pairs == sorted(pairs, key=lambda p: (-p[1], p[0])), r["word"]
+        assert dict(pairs) == want[r["word"]], r["word"]
 
 
 def test_search_intersection_bonus(spark):
@@ -281,14 +302,11 @@ def test_title_meta_ranking_end_to_end(spark, tmp_path):
 
 
 def test_pagerank_over_crawled_graph(spark, tmp_path):
-    """North-star path: crawl -> edges_from_parsed -> iterative PageRank,
-    checked against the driver-side Python oracle on the same edge list."""
-    from cis455crawler_spark.operators.pagerank import pagerank, pagerank_py_oracle
-    from cis455crawler_spark.plans.crawl import (
-        CrawlConfig,
-        edges_from_parsed,
-        run_crawl,
-    )
+    """North-star path: crawl -> the parsed table's out_links exploded to
+    (src, dst) edges -> iterative PageRank, checked against the driver-side
+    Python oracle on the same edge list."""
+    from cis455crawler_spark.operators.pagerank import pagerank
+    from cis455crawler_spark.plans.crawl import CrawlConfig, run_crawl
     from cis455crawler_spark.sources.corpus import CorpusSpec, pages_spark_df, seed_urls
 
     spec = CorpusSpec(hosts=6, pages_per_host=20)
@@ -300,7 +318,9 @@ def test_pagerank_over_crawled_graph(spark, tmp_path):
         str(tmp_path / "pr_state"),
         CrawlConfig(max_rounds=5, round_duration_s=3600, compact_every=0),
     )
-    edges = edges_from_parsed(store)
+    edges = store.read("parsed").select(
+        F.col("url").alias("src"), F.explode("out_links").alias("dst")
+    )
     edge_list = [(r["src"], r["dst"]) for r in edges.collect()]
     assert len(edge_list) > 0
 
@@ -323,7 +343,6 @@ def test_serve_over_crawled_index(spark, tmp_path):
     from cis455crawler_spark.operators.search import INTERSECTION_BONUS, snippet
     from cis455crawler_spark.plans.crawl import (
         CrawlConfig,
-        edges_from_parsed,
         parsed_latest,
         run_crawl,
     )
@@ -343,7 +362,10 @@ def test_serve_over_crawled_index(spark, tmp_path):
 
     query = "title word1"
     hits = search(idx, query, top_k=10)
-    pr = pagerank(edges_from_parsed(store), iterations=3)
+    graph = store.read("parsed").select(
+        F.col("url").alias("src"), F.explode("out_links").alias("dst")
+    )
+    pr = pagerank(graph, iterations=3)
     served = (
         hits.join(pr, hits.doc_id == pr.node, "left")
         .join(docs.select(F.col("url").alias("doc_id"), "text", "title"), "doc_id")
@@ -377,10 +399,7 @@ def test_serve_over_crawled_index(spark, tmp_path):
                 INTERSECTION_BONUS if n_words == len(terms) else 0
             )
     top = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
-    edges = [
-        (r["src"], r["dst"])
-        for r in edges_from_parsed(store).collect()
-    ]
+    edges = [(r["src"], r["dst"]) for r in graph.collect()]
     ranks = pagerank_py_oracle(edges, iterations=3)
     want = sorted(
         ((u, s, round(ranks.get(u, 0.15), 9)) for u, s in top),
@@ -393,25 +412,3 @@ def test_serve_over_crawled_index(spark, tmp_path):
         low = texts[r["doc_id"]].lower()
         if any(t in low for t in terms):
             assert r["snip"] and any(t in r["snip"].lower() for t in terms)
-
-
-def test_host_rank_matches_page_machinery(spark):
-    """host_rank == pagerank run on the manually collapsed host graph (same
-    oracle the page-level tests trust), and intra-host links are inert."""
-    from cis455crawler_spark.operators.pagerank import host_rank, pagerank_py_oracle
-
-    edges = [
-        ("http://a.test/p1", "http://b.test/x"),
-        ("http://a.test/p2", "http://b.test/y"),   # same host pair: one edge
-        ("http://a.test/p1", "http://a.test/p3"),  # self-loop: dropped
-        ("http://b.test/x", "http://c.test/z"),
-        ("http://c.test/z", "http://a.test/p1"),
-    ]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r["host"]: r["rank"] for r in host_rank(df, iterations=5).collect()}
-
-    host_edges = {("a.test", "b.test"), ("b.test", "c.test"), ("c.test", "a.test")}
-    want = pagerank_py_oracle(sorted(host_edges), iterations=5)
-    assert set(got) == set(want)
-    for h in want:
-        assert abs(got[h] - want[h]) < 1e-9, h

@@ -8,19 +8,20 @@ from pyspark.sql import functions as F
 
 from cis455crawler_spark.operators.dedup_fuzzy import (
     embedding_near_dups,
+    _shingle_lists,
     exact_dedup,
-    minhash_jaccard,
     minhash_lsh_pairs,
-    minhash_signatures,
+    minhash_signatures_from_shingles,
     ngram_jaccard_pairs,
     simhash64,
     simhash_near_pairs,
 )
 from cis455crawler_spark.operators.similarity import (
-    cosine_topk_bruteforce,
     cosine_topk_ivf,
     train_centroids,
 )
+
+from .reference import cosine_topk_bruteforce
 
 
 DOCS = [
@@ -56,13 +57,18 @@ def test_exact_dedup_null_text_one_group(spark):
 
 
 def test_minhash_lsh_finds_near_dups(spark, docs):
-    sigs = minhash_signatures(docs, num_hashes=64).cache()
+    """The signature -> banding path minhash_verified_dups runs, checked
+    before its exact verification: estimated Jaccard = share of equal
+    signature slots."""
+    sh = _shingle_lists(docs, "text", "doc_id", 3)
+    sigs = minhash_signatures_from_shingles(sh, num_hashes=64).cache()
     pairs = minhash_lsh_pairs(sigs, bands=16, rows_per_band=4)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (1, 2) in got  # identical text must collide in every band
+    sig = {r["id"]: r["sig"] for r in sigs.collect()}
+    assert all(len(v) == 64 for v in sig.values())
     est = {
-        (r["id_a"], r["id_b"]): r["est_jaccard"]
-        for r in minhash_jaccard(pairs, sigs).collect()
+        (a, b): sum(x == y for x, y in zip(sig[a], sig[b])) / 64 for a, b in got
     }
     assert est[(1, 2)] == 1.0
     if (1, 3) in est:
@@ -346,14 +352,15 @@ def test_jpeg_header_dims_and_media_meta(spark):
     """JPEG metadata path (VERDICT r3 'What's missing' #2): the pure-stdlib
     SOFn marker walk reads dims from real JPEG marker streams — baseline,
     progressive, Exif-prefixed — through decode_header and the Spark
-    with_media_meta kernel; pixel decode stays an honest stub."""
+    with_media_meta kernel; no pixel decoder is shipped."""
     from cis455crawler_spark.operators.multimodal import (
         MEDIA_SCHEMA,
-        decode_image,
+        decode_header,
         decode_jpeg_header,
-        encode_jpeg_header,
         with_media_meta,
     )
+
+    from .fixtures import encode_jpeg_header
 
     assert decode_jpeg_header(encode_jpeg_header(640, 480)) == (640, 480)
     assert decode_jpeg_header(encode_jpeg_header(31, 7, progressive=True)) == (31, 7)
@@ -368,8 +375,7 @@ def test_jpeg_header_dims_and_media_meta(spark):
     assert decode_jpeg_header(exif) == (99, 55)
     with pytest.raises(NotImplementedError):
         decode_jpeg_header(b"\xff\xd8\xff\xda\x00\x02")  # SOS before any SOF
-    with pytest.raises(NotImplementedError):
-        decode_image(encode_jpeg_header(4, 4))  # pixel decode still stubbed
+    assert decode_header(exif) == (99, 55, 0)  # header dispatch: dims, no duration
 
     rows = [
         (i, "image", encode_jpeg_header(100 + i, 50 + i), None, None, None)
@@ -389,9 +395,10 @@ def test_mp4_header_dims_duration_and_media_meta(spark):
     from cis455crawler_spark.operators.multimodal import (
         MEDIA_SCHEMA,
         decode_mp4_header,
-        encode_mp4_header,
         with_media_meta,
     )
+
+    from .fixtures import encode_mp4_header
 
     assert decode_mp4_header(encode_mp4_header(1920, 1080, 125_000)) == (1920, 1080, 125_000)
     # v1 mvhd (64-bit duration) at a real media timescale
@@ -437,9 +444,10 @@ def test_mp3_header_duration_and_media_meta(spark):
         MEDIA_SCHEMA,
         decode_header,
         decode_mp3_header,
-        encode_mp3_header,
         with_media_meta,
     )
+
+    from .fixtures import encode_mp3_header
 
     # Xing exact frame count: MPEG1 Layer III spf=1152
     assert decode_mp3_header(encode_mp3_header(frames=38)) == (
@@ -464,25 +472,22 @@ def test_mp3_header_duration_and_media_meta(spark):
     assert got == {i: (10 + i) * 1152 * 1000 // 44100 for i in range(20)}
 
 
-def test_train_centroids_distributed_matches_numpy(spark):
-    """Distributed Lloyd's (full-table assignment + per-cell means via ONE
-    groupBy) equals a numpy Lloyd's oracle run from the identical init —
-    the scale path for centroid counts a driver sample can't support."""
+def test_train_centroids_matches_numpy(spark):
+    """train_centroids (the IVF entry's trainer) equals a numpy Lloyd's
+    oracle from the identical seeded init: a 400-row table under-fills the
+    5% sample, so the whole table is the training set."""
     import numpy as np
-
-    from cis455crawler_spark.operators.similarity import train_centroids_distributed
 
     rng = np.random.RandomState(5)
     X = rng.randn(400, 8)
     df = spark.createDataFrame(
         [(i, [float(x) for x in X[i]]) for i in range(400)],
         "vec_id int, embedding array<double>",
-    ).repartition(4)
+    )
     k, iters = 10, 3
-    init = train_centroids_distributed(df, n_centroids=k, iters=0)  # init only
-    got = train_centroids_distributed(df, n_centroids=k, iters=iters)
+    got = train_centroids(df, n_centroids=k, iters=iters, sample=400)
 
-    cent = init.copy()
+    cent = X[np.random.RandomState(13).choice(400, size=k, replace=False)]
     for _ in range(iters):
         assign = ((X[:, None, :] - cent[None, :, :]) ** 2).sum(-1).argmin(1)
         nxt = cent.copy()
@@ -632,171 +637,80 @@ def test_multimodal_plumbing(spark):
 
 
 def test_multimodal_real_codecs(spark):
-    """REAL decode kernels (P6/PPM via numpy, PCM WAV via stdlib wave) run
-    the full decode -> ndarray -> feature path through mapInPandas, checked
-    against closed-form expectations of the deterministic generators."""
+    """The full-decode kernels (P6/PPM via numpy, PCM WAV via stdlib wave)
+    behind with_media_meta's header dispatch, checked against closed-form
+    expectations of the deterministic generators, then the Arrow-batched
+    dispatch over a generated PPM/WAV table."""
     import numpy as np
 
     from cis455crawler_spark.operators.multimodal import (
-        audio_stats,
         decode_ppm,
-        encode_ppm,
-        image_stats,
-        resize_images,
-        resize_nearest,
-        synth_media_real,
+        decode_wav,
         with_media_meta,
     )
 
-    ids = spark.range(40).selectExpr("id as doc_id")
-    media = synth_media_real(ids)
+    from .fixtures import encode_ppm, encode_wav, synth_media_real
 
-    # pixel(y,x,c) = (3x + 5y + 7c + id) % 256 — channel means recomputable
-    imgs = image_stats(media.filter("kind = 'image'")).collect()
-    assert len(imgs) == 20
-    for r in imgs:
-        i = r["media_id"]
+    # pixel(y,x,c) = (3x + 5y + 7c + id) % 256, recomputed independently
+    for i in (0, 2, 31):
         w, h = 16 + i % 32, 8 + i % 16
-        assert (r["width"], r["height"]) == (w, h)
+        gw, gh, arr = decode_ppm(encode_ppm(i, w, h))
+        assert (gw, gh) == (w, h)
         grid = (
             3 * np.arange(w)[None, :, None]
             + 5 * np.arange(h)[:, None, None]
             + 7 * np.arange(3)[None, None, :]
             + i
         ) % 256
-        want = grid.reshape(-1, 3).mean(axis=0)
-        assert abs(r["mean_r"] - want[0]) < 1e-9
-        assert abs(r["mean_b"] - want[2]) < 1e-9
+        assert (arr == grid).all()
 
     # sine at amplitude 0.5 -> rms ~ 0.5/sqrt(2), peak ~ 0.5
-    auds = audio_stats(media.filter("kind = 'audio'")).collect()
-    assert len(auds) == 20
-    for r in auds:
-        i = r["media_id"]
-        assert r["sample_rate"] == 8000
-        assert r["n_samples"] == 8000 * (50 + (i % 20) * 10) // 1000
-        assert abs(r["rms"] - 0.5 / np.sqrt(2)) < 0.02
-        assert 0.45 <= r["peak"] <= 0.5
+    for i in (1, 3, 19):
+        rate, samples = decode_wav(encode_wav(i, 50 + (i % 20) * 10))
+        assert rate == 8000
+        assert len(samples) == 8000 * (50 + (i % 20) * 10) // 1000
+        x = samples.astype(np.float64) / 32767.0
+        assert abs(np.sqrt((x * x).mean()) - 0.5 / np.sqrt(2)) < 0.02
+        assert 0.45 <= np.abs(x).max() <= 0.5
 
     # header dispatch: P6 fills dims, WAV fills duration
+    media = synth_media_real(spark.range(40).selectExpr("id as doc_id"))
     meta = {r["media_id"]: r for r in with_media_meta(media).collect()}
-    assert meta[2]["width"] == 18 and meta[2]["dur_ms"] == 0
-    assert meta[3]["width"] == 0 and meta[3]["dur_ms"] == 50 + 3 % 20 * 10
-
-    # resize: output dims + exact nearest-neighbor pixels
-    small = resize_images(media.filter("kind = 'image'"), 8, 4).collect()
-    by_id = {r["media_id"]: r["payload"] for r in small}
-    w0, h0, arr0 = decode_ppm(encode_ppm(2, 18, 10))
-    ww, hh, got = decode_ppm(bytes(by_id[2]))
-    assert (ww, hh) == (8, 4)
-    assert (got == resize_nearest(arr0, 8, 4)).all()
+    assert len(meta) == 40
+    for i, r in meta.items():
+        if i % 2 == 0:
+            assert (r["width"], r["height"], r["dur_ms"]) == (16 + i % 32, 8 + i % 16, 0)
+        else:
+            assert (r["width"], r["height"], r["dur_ms"]) == (0, 0, 50 + (i % 20) * 10)
 
 
 def test_png_codec(spark):
-    """REAL PNG codec (stdlib zlib, no PIL): encode->decode round-trips
-    exactly for grey/RGB/RGBA; the decoder's five scanline unfilters are
-    differential-tested against an independent forward-filter written here;
-    and PNG payloads flow through the same Spark operators as PPM
-    (image_stats / with_media_meta / resize_images, thumbnails stay PNG)."""
-    import zlib
-
-    import numpy as np
-    import pandas as pd
-
+    """PNG payloads take the header-only path: dims come from the IHDR
+    chunk (always first) without an inflate, through decode_header and the
+    Spark with_media_meta kernel, for grey/RGB/RGBA layouts alike."""
     from cis455crawler_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
         PNG_SIG,
-        _png_chunk,
-        decode_png,
-        encode_png,
-        image_stats,
-        resize_images,
-        resize_nearest,
+        decode_header,
         with_media_meta,
     )
 
-    rng = np.random.default_rng(455)
+    def png_header(w, h, color_type):
+        body = w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([8, color_type, 0, 0, 0])
+        return PNG_SIG + len(body).to_bytes(4, "big") + b"IHDR" + body + bytes(4)
 
-    # (1) exact round-trip in all three supported channel layouts
-    for shape in [(11, 7), (11, 7, 3), (5, 13, 4)]:
-        arr = rng.integers(0, 256, size=shape, dtype=np.uint8)
-        w, h, back = decode_png(encode_png(arr))
-        assert (w, h) == (shape[1], shape[0])
-        assert (back.squeeze() == arr.squeeze()).all(), shape
-
-    # (2) all five filter types: forward-filter known RGB rows with an
-    # INDEPENDENT implementation, then the decoder must invert each
-    def paeth(a, b, c):
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        return a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-
-    w, h, ch = 9, 5, 3
-    arr = rng.integers(0, 256, size=(h, w, ch), dtype=np.uint8)
-    raw = b""
-    prev = np.zeros(w * ch, dtype=np.int64)
-    for y, ftype in enumerate([0, 1, 2, 3, 4]):
-        cur = arr[y].reshape(-1).astype(np.int64)
-        filt = np.zeros_like(cur)
-        for x in range(w * ch):
-            left = cur[x - ch] if x >= ch else 0
-            up = prev[x]
-            ul = prev[x - ch] if x >= ch else 0
-            pred = {
-                0: 0,
-                1: left,
-                2: up,
-                3: (left + up) >> 1,
-                4: paeth(int(left), int(up), int(ul)),
-            }[ftype]
-            filt[x] = (cur[x] - pred) & 0xFF
-        raw += bytes([ftype]) + bytes(filt.astype(np.uint8))
-        prev = cur
-    ihdr = __import__("struct").pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    payload = (
-        PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raw))
-        + _png_chunk(b"IEND", b"")
-    )
-    got_w, got_h, got = decode_png(payload)
-    assert (got_w, got_h) == (w, h)
-    assert (got == arr).all()
-
-    # (3) Spark path: PNGs through the SAME operators as PPM
-    imgs = [
-        rng.integers(0, 256, size=(6 + i, 10 + i, 3), dtype=np.uint8)
-        for i in range(4)
-    ]
-    pdf = pd.DataFrame(
-        {
-            "media_id": range(4),
-            "kind": ["image"] * 4,
-            "payload": [encode_png(a) for a in imgs],
-            "width": [None] * 4,
-            "height": [None] * 4,
-            "dur_ms": [None] * 4,
-        }
-    )
+    shapes = [(7, 11, 0), (7, 11, 2), (13, 5, 6), (640, 480, 2)]
+    for w, h, ct in shapes:
+        assert decode_header(png_header(w, h, ct)) == (w, h, 0)
     media = spark.createDataFrame(
-        pdf,
-        schema="media_id long, kind string, payload binary,"
-        " width int, height int, dur_ms int",
+        [(i, "image", png_header(w, h, ct), None, None, None)
+         for i, (w, h, ct) in enumerate(shapes)],
+        MEDIA_SCHEMA,
     )
-    stats = {r["media_id"]: r for r in image_stats(media).collect()}
-    for i, a in enumerate(imgs):
-        r = stats[i]
-        assert (r["width"], r["height"]) == (a.shape[1], a.shape[0])
-        want = a.reshape(-1, 3).mean(axis=0)
-        assert abs(r["mean_g"] - want[1]) < 1e-9
     meta = {r["media_id"]: r for r in with_media_meta(media).collect()}
-    assert meta[1]["width"] == 11 and meta[1]["height"] == 7  # header-only parse
-    thumbs = {r["media_id"]: bytes(r["payload"])
-              for r in resize_images(media, 5, 3).collect()}
-    for i, a in enumerate(imgs):
-        assert thumbs[i][:8] == PNG_SIG  # format preserved
-        tw, th, tarr = decode_png(thumbs[i])
-        assert (tw, th) == (5, 3)
-        assert (tarr == resize_nearest(a, 5, 3)).all()
+    assert {i: (r["width"], r["height"], r["dur_ms"]) for i, r in meta.items()} == {
+        i: (w, h, 0) for i, (w, h, _) in enumerate(shapes)
+    }
 
 
 def test_text_analysis_cols(spark, sf_dir):
@@ -1008,119 +922,6 @@ def test_sessionize_and_windows(spark, sf_dir):
     sess = sessionize(events, gap_minutes=30)
     agg = sess.agg(F.sum("n_events").alias("n")).collect()[0]["n"]
     assert agg == events.count()
-
-
-def test_sessionize_stream_stateful(spark, sf_dir, tmp_path):
-    """applyInPandasWithState sessionization: state rides across micro-
-    batches (3 time-ordered files, maxFilesPerTrigger=1) and every emitted
-    session — gap-closed or watermark-timeout — equals a batch sessionize()
-    session exactly. Only final still-open sessions may be unemitted."""
-    import time
-    import uuid
-
-    from cis455crawler_spark.streaming.events import sessionize, sessionize_stream
-
-    events = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("user_id") % 7 == 0)
-        .select("ts", "user_id", "value")
-    )
-    # three time-ordered drops so sessions span micro-batches
-    lo, hi = events.agg(F.min("ts"), F.max("ts")).collect()[0]
-    span = (hi - lo) / 3
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    for i in range(3):
-        part = events.filter(
-            (F.col("ts") >= lo + i * span)
-            & (F.col("ts") < (lo + (i + 1) * span if i < 2 else hi))
-        )
-        part.coalesce(1).write.parquet(str(src / f"drop{i}"))
-        time.sleep(1.1)  # distinct mtimes -> deterministic file order
-
-    stream = (
-        spark.readStream.schema("ts timestamp, user_id long, value double")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(str(src) + "/*")
-    )
-    name = f"sess_state_{uuid.uuid4().hex[:8]}"
-    q = (
-        sessionize_stream(stream, gap_minutes=30)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table(name).collect()
-    assert len(got) > 0
-    assert {r["closed_by"] for r in got} <= {"gap", "timeout"}
-
-    want = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"]): r[
-            "session_value"
-        ]
-        for r in sessionize(
-            events.filter(F.col("ts") < hi), gap_minutes=30
-        ).collect()
-    }
-    # every emitted session must be a real batch session, value-identical
-    seen_keys = set()
-    for r in got:
-        k = (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        assert k in want, k
-        assert abs(r["session_value"] - want[k]) < 1e-6
-        assert k not in seen_keys, f"duplicate emission {k}"
-        seen_keys.add(k)
-    # at most one (the final open) session per user may be missing
-    missing_by_user: dict[int, int] = {}
-    for k in want:
-        if k not in seen_keys:
-            missing_by_user[k[0]] = missing_by_user.get(k[0], 0) + 1
-    assert all(v == 1 for v in missing_by_user.values()), missing_by_user
-
-
-def test_dedup_stream_within_watermark(spark, sf_dir, tmp_path):
-    """Streaming seen-set (dropDuplicatesWithinWatermark): with the whole
-    fixture arriving as ONE micro-batch (availableNow over one file), every
-    in-batch duplicate is dropped, so the emitted rows equal batch
-    dropDuplicates on the same keys — key-set AND count parity."""
-    import uuid
-
-    from cis455crawler_spark.streaming.events import dedup_stream
-
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string"
-    )
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    name = f"dedup_stream_{uuid.uuid4().hex[:8]}"
-    q = (
-        dedup_stream(src)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table(name).select("user_id", "event_type").collect()
-    batch = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .dropDuplicates(["user_id", "event_type"])
-        .select("user_id", "event_type")
-        .collect()
-    )
-    got_keys = {(r["user_id"], r["event_type"]) for r in got}
-    want_keys = {(r["user_id"], r["event_type"]) for r in batch}
-    assert got_keys == want_keys
-    assert len(got) == len(want_keys)  # exactly one row per key emitted
 
 
 def test_asof_join_matches_merge_asof(spark, sf_dir):

@@ -10,7 +10,9 @@ from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from cis455crawler_spark.operators.indexer import bm25_postings
-from cis455crawler_spark.operators.pagerank import trustrank, trustrank_py_oracle
+from cis455crawler_spark.operators.pagerank import trustrank
+
+from .reference import trustrank_py_oracle
 
 from .test_search_ranking import _py_bm25
 

@@ -9,10 +9,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from cis455crawler_spark.operators.similarity import (
-    cosine_topk_bruteforce,
     cosine_topk_quantized,
     quantize_embeddings,
 )
+
+from .reference import cosine_topk_bruteforce
 
 
 @pytest.fixture(scope="module")

@@ -9,9 +9,9 @@ import re
 
 from pyspark.sql import functions as F
 
+from cis455crawler_spark.functions.robots import build_robots_df
 from cis455crawler_spark.functions.robots_standard import (
     allowed_standard,
-    build_robots_standard_df,
     parse_robots_standard,
     url_path_of,
 )
@@ -100,7 +100,7 @@ def test_standards_mode_matches_oracle(spark):
         ],
         "url string, html binary",
     )
-    rules_df = build_robots_standard_df(spark, robots_pages)
+    rules_df = build_robots_df(spark, robots_pages, with_standard=True)
 
     urls = spark.createDataFrame(
         [(h, f"http://{h}{p}") for h, _, p in rows], "host string, url string"
@@ -109,7 +109,7 @@ def test_standards_mode_matches_oracle(spark):
         r["host"]: r["ok"]
         for r in urls.join(F.broadcast(rules_df), "host", "left")
         .select(
-            "host", allowed_standard(url_path_of("url"), F.col("rules")).alias("ok")
+            "host", allowed_standard(url_path_of("url"), F.col("std_rules")).alias("ok")
         )
         .collect()
     }

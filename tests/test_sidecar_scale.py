@@ -15,19 +15,19 @@ from pyspark.sql import functions as F
 from cis455crawler_spark.functions.urls import sha1_hex
 from cis455crawler_spark.operators.dedup import (
     _bloom_probe_vec,
-    _probe_positions,
     bloom_bits_for,
     build_bloom_sidecar,
     or_merge_sidecar,
     split_by_bloom,
 )
 from cis455crawler_spark.operators.cuckoo import (
-    _contains,
     _contains_vec,
     _fp_i1,
     _fp_i1_vec,
     SLOTS,
 )
+
+from .reference import cuckoo_contains, probe_positions
 
 
 def _shas(tag: str, n: int) -> list[str]:
@@ -36,18 +36,19 @@ def _shas(tag: str, n: int) -> list[str]:
 
 def test_bloom_vectorized_probe_matches_scalar():
     """_bloom_probe_vec (the partition-local numpy path) must agree with the
-    scalar _probe_positions form on every key — members AND non-members."""
+    scalar probe_positions form (tests/reference.py) on every key —
+    members AND non-members."""
     n_bits = bloom_bits_for(5_000)
     keys = _shas("k", 5_000)
     bits = np.zeros(n_bits, dtype=bool)
     for h in keys:
-        for p in _probe_positions(h, n_bits):
+        for p in probe_positions(h, n_bits):
             bits[p] = True
     packed = np.packbits(bits)
 
     probes = keys[:1_000] + _shas("x", 5_000)
     want = np.array(
-        [all(bits[p] for p in _probe_positions(h, n_bits)) for h in probes]
+        [all(bits[p] for p in probe_positions(h, n_bits)) for h in probes]
     )
     got = _bloom_probe_vec(packed, pd.Series(probes), n_bits)
     assert (got == want).all()
@@ -73,7 +74,7 @@ def test_cuckoo_vectorized_probe_matches_scalar():
         sf, si = _fp_i1(h, mask)
         assert (int(fp[j]), int(i1[j])) == (sf, si)
     got = _contains_vec(table, fp, i1, mask)
-    want = np.array([_contains(table, *(_fp_i1(h, mask)), mask) for h in probes])
+    want = np.array([cuckoo_contains(table, *(_fp_i1(h, mask)), mask) for h in probes])
     assert (got == want).all()
     assert got[:1_000].all()
 

@@ -99,10 +99,9 @@ def test_ann_topk_is_two_phase(spark, which):
     phase-1-capped survivor set; the plan therefore carries `_salt`, and no
     windowspecdefinition partitions on q_id alone without a preceding salted
     phase (VERDICT r4 'What's wrong' #3)."""
-    from cis455crawler_spark.operators.similarity import (
-        cosine_topk_bruteforce,
-        cosine_topk_quantized,
-    )
+    from cis455crawler_spark.operators.similarity import cosine_topk_quantized
+
+    from .reference import cosine_topk_bruteforce
 
     vectors = spark.range(200).select(
         F.col("id").alias("vec_id"),

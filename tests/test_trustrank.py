@@ -5,7 +5,9 @@ set scores exactly zero."""
 
 from __future__ import annotations
 
-from cis455crawler_spark.operators.pagerank import trustrank, trustrank_py_oracle
+from cis455crawler_spark.operators.pagerank import trustrank
+
+from .reference import trustrank_py_oracle
 
 # trusted hub t -> a, b; a -> b, c; b -> c; c -> a (a cycle reachable from t)
 # spam cluster s1<->s2<->s3 densely interlinked, NO inbound edge from the

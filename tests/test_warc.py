@@ -10,11 +10,12 @@ from datetime import datetime
 import pytest
 
 from cis455crawler_spark.sources.warc import (
-    build_warc_bytes,
-    parse_warc_bytes,
+    iter_warc_records,
     read_warc,
     warc_to_pages,
 )
+
+from .fixtures import build_warc_bytes, write_warc
 
 RECORDS = [
     ("http://w.test/a.html", datetime(2013, 3, 1, 12, 0, 0), 200,
@@ -47,7 +48,7 @@ def test_parse_warc_round_trip(compress):
         with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
             gz.write(_request_record())
         data = buf.getvalue() + build_warc_bytes(RECORDS, compress=True)
-    got = parse_warc_bytes(data)
+    got = list(iter_warc_records(data))
     assert [(r["url"], r["warc_ts"], r["http_status"], r["body"]) for r in got] == [
         (u, ts, st, body) for u, ts, st, _, body in RECORDS
     ]
@@ -56,7 +57,7 @@ def test_parse_warc_round_trip(compress):
 
 def test_parse_warc_malformed_tail_stops_clean():
     data = build_warc_bytes(RECORDS[:1]) + b"garbage that is not a record"
-    got = parse_warc_bytes(data)
+    got = list(iter_warc_records(data))
     assert len(got) == 1 and got[0]["url"] == RECORDS[0][0]
 
 
@@ -128,8 +129,6 @@ def test_iter_warc_records_streams_members():
     import gzip as _gzip
     import io as _io
 
-    from cis455crawler_spark.sources.warc import iter_warc_records
-
     # per-record members (the Common Crawl layout)
     data = build_warc_bytes(RECORDS, compress=True)
     it = iter_warc_records(data)
@@ -162,8 +161,6 @@ def test_warc_parser_hardening():
     import gzip as _gzip
     import io as _io
 
-    from cis455crawler_spark.sources.warc import iter_warc_records
-
     # negative Content-Length: clean stop, no hang
     bad = (
         b"WARC/1.0\r\nWARC-Type: response\r\n"
@@ -171,8 +168,8 @@ def test_warc_parser_hardening():
         b"WARC-Date: 2013-03-01T00:00:00Z\r\n"
         b"Content-Length: -82\r\n\r\n"
     )
-    assert parse_warc_bytes(build_warc_bytes(RECORDS[:1]) + bad) == parse_warc_bytes(
-        build_warc_bytes(RECORDS[:1])
+    assert list(iter_warc_records(build_warc_bytes(RECORDS[:1]) + bad)) == list(
+        iter_warc_records(build_warc_bytes(RECORDS[:1]))
     )
 
     # member boundary one byte into the trailing CRLFCRLF separator
@@ -197,7 +194,7 @@ def test_warc_parser_hardening():
     ts = datetime(2013, 3, 1, 12, 0, 0, 123456)
     rec = [("http://x/us.html", ts, 200, "text/html", b"b")]
     for compress in (False, True):
-        out = parse_warc_bytes(build_warc_bytes(rec, compress=compress))
+        out = list(iter_warc_records(build_warc_bytes(rec, compress=compress)))
         assert out[0]["warc_ts"] == ts
 
 
@@ -205,8 +202,6 @@ def test_warc_parser_hardening():
 def test_write_warc_export_round_trip(spark, tmp_path, compress):
     """Distributed export (write_warc) -> read_warc reproduces url/ts/
     status/content-type/html byte-for-byte, across multiple shards."""
-    from cis455crawler_spark.sources.warc import write_warc
-
     rows = [
         (
             f"http://e.test/p{i}.html",
@@ -240,8 +235,6 @@ def test_write_warc_export_round_trip(spark, tmp_path, compress):
 
 
 def test_write_warc_empty_partitions_no_empty_shards(spark, tmp_path):
-    from cis455crawler_spark.sources.warc import write_warc
-
     pages = spark.createDataFrame(
         [("http://e.test/x", datetime(2013, 3, 1), bytearray(b"<html>x</html>"))],
         "url string, warc_ts timestamp, html binary",
@@ -261,8 +254,6 @@ def test_write_warc_null_tolerance_and_idempotent_shards(spark, tmp_path):
     """NULL ts/status/content_type/html export with defaults; re-evaluating
     the manifest does not accumulate duplicate shards (deterministic names,
     atomic promote)."""
-    from cis455crawler_spark.sources.warc import write_warc
-
     pages = spark.createDataFrame(
         [
             ("http://n.test/full", datetime(2013, 3, 1), 200, "text/html",

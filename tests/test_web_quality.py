@@ -4,10 +4,8 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from cis455crawler_spark.functions.fetch import cache_ttl_seconds
-from cis455crawler_spark.operators.soft404 import (
-    host_soft404_rates,
-    soft404_signals,
-)
+from cis455crawler_spark.operators.soft404 import soft404_signals
+from cis455crawler_spark.plans.gates import Soft404Demotion
 from cis455crawler_spark.operators.url_patterns import mine_url_templates
 
 
@@ -36,15 +34,28 @@ def test_soft404_signals(spark):
 
 
 def test_host_soft404_rates(spark):
+    """The per-host (n pages, s soft-404s) rollup the Soft404Demotion gate
+    commits and reads (rate = s / n): per-page verdicts land in the log,
+    and a second round's delta merges onto the prior counts."""
     rows = [
-        Row(host="a", url="u1", title="404 Not Found", text=""),
-        Row(host="a", url="u2", title="ok", text="z" * 100),
-        Row(host="b", url="u3", title="ok", text="z" * 100),
+        Row(host="a", url="u1", title="404 Not Found", text="", action="parse"),
+        Row(host="a", url="u2", title="ok", text="z" * 100, action="parse"),
+        Row(host="b", url="u3", title="ok", text="z" * 100, action="parse"),
+        Row(host="b", url="u4", title="404", text="", action="not_modified"),
     ]
-    flagged = soft404_signals(spark.createDataFrame(rows))
-    out = {r.host: (r.n_pages, r.n_soft404, r.soft404_rate) for r in host_soft404_rates(flagged).collect()}
-    assert out["a"] == (2, 1, 0.5)
-    assert out["b"] == (1, 0, 0.0)
+    parsed = spark.createDataFrame(rows)
+    gate = Soft404Demotion(store=None, cfg=None, seen=None, cached=lambda df: df)
+    gate.counts = None  # first round: no rollup yet
+    appends, replaces = gate.commit(parsed, None)
+    log = sorted((r.host, r.soft404) for r in appends["soft404_log"].collect())
+    assert log == [("a", 0), ("a", 1), ("b", 0)]  # only parse-routed rows
+    counts = replaces["soft404_counts"]
+    assert {r.host: (r.n, r.s) for r in counts.collect()} == {"a": (2, 1), "b": (1, 0)}
+
+    gate.counts = counts  # next round merges its delta onto the prior rollup
+    _, replaces = gate.commit(parsed, None)
+    got = {r.host: (r.n, r.s) for r in replaces["soft404_counts"].collect()}
+    assert got == {"a": (4, 2), "b": (2, 0)}
 
 
 def test_mine_url_templates(spark):

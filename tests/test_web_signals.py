@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from cis455crawler_spark.operators.anchors import (
-    anchor_boosted_rank,
     anchor_pairs,
     anchor_postings,
     extract_anchor_pairs_py,
@@ -16,7 +15,9 @@ from cis455crawler_spark.operators.boilerplate import (
     strip_boilerplate,
 )
 from cis455crawler_spark.operators.cdx import cdx_index, surt_key
-from cis455crawler_spark.operators.pagerank import hits, hits_py_oracle
+from cis455crawler_spark.operators.pagerank import hits
+
+from .reference import hits_py_oracle
 
 
 # ---------------------------------------------------------------- anchors --
@@ -91,23 +92,6 @@ def test_anchor_postings_counts(spark):
     assert got[("http://h.com/t.html", "engine")] == 1
     assert ("http://h.com/t.html", "the") not in got
     assert got[("http://h.com/u.html", "other")] == 1
-
-
-def test_anchor_boosted_rank_membership(spark):
-    postings = spark.createDataFrame(
-        [(1, "spark", 0.5), (1, "other", 0.5), (2, "spark", 0.5)],
-        "doc_id int, word string, rank double",
-    )
-    anchors = spark.createDataFrame(
-        [(1, "spark", 4)], "doc_id int, word string, anchor_tf int"
-    )
-    got = {
-        (r.doc_id, r.word): (r.rank, r.is_anchor)
-        for r in anchor_boosted_rank(postings, anchors, w_anchor=0.4).collect()
-    }
-    assert got[(1, "spark")] == (pytest.approx(0.9), 1)
-    assert got[(1, "other")] == (pytest.approx(0.5), 0)
-    assert got[(2, "spark")] == (pytest.approx(0.5), 0)
 
 
 # ------------------------------------------------------------------- HITS --
