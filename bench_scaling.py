@@ -120,7 +120,7 @@ def dataplane(spark, pages, dup: int = 11) -> dict:
 
     t0 = time.time()
     c = _with_url_cols(cand.groupBy("url").agg(F.min("depth").alias("depth")), 32)
-    c = anti_join_seen(c, seen, num_buckets=32)
+    c = anti_join_seen(c, seen)
     c = c.join(F.broadcast(robots), "host", "left").withColumn(
         "allowed", crawl_allowed(F.col("url"), F.col("has_robots"), F.col("disallow"))
     )

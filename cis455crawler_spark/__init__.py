@@ -10,7 +10,7 @@ semantics (HTML link/text extraction).
 Subpackages:
   functions/  — scalar column functions (URL quirks, hashing, text, robots)
   sources/    — synthetic Common-Crawl-style corpus, seeds, snapshot table store
-  operators/  — dedup (exact + bloom + fuzzy), scheduler, pagerank, indexer,
+  operators/  — dedup (exact + cuckoo + fuzzy), scheduler, pagerank, indexer,
                 search, similarity, multimodal plumbing
   plans/      — the crawl round loop (frontier scheduler) with checkpoint/resume
   streaming/  — event-feed windows (batch or Structured Streaming), batch

@@ -1,34 +1,31 @@
-"""Cuckoo-filter sidecar — the deletion-capable alternative to the Bloom
-sidecar (SURVEY §2 D2 "Bloom/cuckoo"; north_rule "partitioned bloom/cuckoo
-URL-seen set").
+"""Cuckoo-filter seen-set sidecar (SURVEY §2 D2 "Bloom/cuckoo"; north_rule
+"partitioned bloom/cuckoo URL-seen set"), run by the seen_anti_join_cuckoo
+driver entry. The crawl loop itself uses the plain exact anti-join
+(operators/dedup.py).
 
-Same exactness contract as operators/dedup.py's Bloom path: NO false
-negatives — every inserted key probes positive, and a saturated filter
-degrades to answering "maybe" for everything — so maybe-seen candidates
-always go through the exact anti-join and correctness never depends on the
-sidecar.
+Exactness contract: NO false negatives — every inserted key probes
+positive, and a saturated filter degrades to answering "maybe" for
+everything — so maybe-seen candidates always go through the exact anti-join
+and correctness never depends on the sidecar. That same `maybe ⋈anti seen`
+step means the full seen set is still scanned and exchanged whenever any
+candidate is "maybe" (BENCH.md, "Bloom prefilter").
 
 Partial-key cuckoo hashing (Fan et al., "Cuckoo Filter: Practically Better
 Than Bloom", CoNEXT'14): per seen-bucket a uint16 table of shape
 (n_ck, 4 slots), 16-bit fingerprints (0 = empty), alternate index
 i2 = (i1 XOR h(fp)) & (n_ck-1) — n_ck is a power of two so the alternate
 mapping is an involution and membership needs only (fp, any index).
-At 4 slots/bucket and ~0.84 load a 16-bit fingerprint gives FP ~= 1e-4 —
-two orders below the Bloom sidecar at similar bits/key. The layout also
-admits O(1) delete (clear one matching slot at i1 or i2), which the Bloom
-bitmap cannot do; no operation here expires seen entries, so none is
-shipped (the Bloom path drops + rebuilds on recrawl, plans/crawl.py).
+At 4 slots/bucket and ~0.84 load a 16-bit fingerprint gives FP ~= 1e-4.
+The layout also admits O(1) delete (clear one matching slot at i1 or i2);
+no operation here expires seen entries, so none is shipped.
 
-Like the Bloom sidecar, fingerprints/indices slice directly out of the
-40-hex-char sha1 (already cryptographic — no rehash): fp from hex[0:4]
-(0 remapped to 0xFFFF), i1 from hex[4:14].
+Fingerprints/indices slice directly out of the 40-hex-char sha1 (already
+cryptographic — no rehash): fp from hex[0:4] (0 remapped to 0xFFFF), i1
+from hex[4:14].
 
-Trade-off vs Bloom, honestly stated: cuckoo tables do NOT OR-merge — deltas
-merge by RE-INSERTING occupied slots (merge_cuckoo_rows), which can fail at
-high combined load (the merge then marks the bucket saturated = always
-"maybe": correct, just no pruning). The Bloom sidecar's bitmap deltas
-OR-merge unconditionally, which is why it stays the crawl-loop default;
-pick cuckoo where deletions dominate rebuilds.
+Cuckoo tables do NOT OR-merge — deltas merge by RE-INSERTING occupied slots
+(merge_cuckoo_rows), which can fail at high combined load (the merge then
+marks the bucket saturated = always "maybe": correct, just no pruning).
 """
 
 from __future__ import annotations
@@ -88,10 +85,10 @@ def build_cuckoo_sidecar(
     seen: DataFrame, num_buckets: int, capacity_per_bucket: int
 ) -> DataFrame:
     """(bucket INT, n_ck INT, saturated BOOLEAN, table BINARY) — one cuckoo
-    table per seen bucket, built distributed via applyInPandas (the same
-    shape as build_bloom_sidecar). A bucket whose eviction loop fails is
-    marked saturated: probes answer maybe-for-everything (exact anti-join
-    takes over), never a false negative."""
+    table per seen bucket, built distributed via applyInPandas over
+    groupBy(bucket). A bucket whose eviction loop fails is marked
+    saturated: probes answer maybe-for-everything (exact anti-join takes
+    over), never a false negative."""
     from ..functions.urls import url_hash_bucket
 
     n_ck = cuckoo_buckets_for(capacity_per_bucket)
@@ -152,12 +149,20 @@ def merge_cuckoo_rows(rows) -> dict[int, dict]:
     return merged
 
 
+def hex_slice_bytes(s: pd.Series, start: int, length: int) -> np.ndarray:
+    """(n, length/2) uint8 array from an even-length slice of a hex-string
+    column — ONE C-level join+fromhex, no per-row Python. Every value must
+    cover [start, start+length) (sha1 hex is always 40 chars)."""
+    joined = "".join(s.str.slice(start, start + length))
+    return np.frombuffer(bytes.fromhex(joined), dtype=np.uint8).reshape(
+        len(s), length // 2
+    )
+
+
 def _fp_i1_vec(hashes: pd.Series, mask: int) -> tuple[np.ndarray, np.ndarray]:
     """Vectorized twin of _fp_i1: fingerprint from hex[0:4] (0 -> 0xFFFF),
     starting index from hex[4:14] & mask — one C-level hex decode for the
     whole batch, no per-row Python."""
-    from .dedup import hex_slice_bytes
-
     b = hex_slice_bytes(hashes, 0, 14).astype(np.uint64)
     fp = (b[:, 0] << 8) | b[:, 1]
     fp = np.where(fp == 0, np.uint64(0xFFFF), fp)
@@ -180,12 +185,11 @@ def _contains_vec(table: np.ndarray, fp: np.ndarray, i1: np.ndarray, mask: int) 
 def split_by_cuckoo(
     candidates: DataFrame, sidecar: DataFrame, num_buckets: int
 ) -> tuple[DataFrame, DataFrame]:
-    """(definitely_new, maybe_seen) — mirrors dedup.split_by_bloom's
-    partition-local shape: candidates cogroup with the sidecar rows on the
-    bucket id, each task re-insert-merges ONLY its bucket's delta tables
-    (merge_cuckoo_rows) and probes all its candidates with one vectorized
-    fancy-indexing pass. Nothing is collected to or broadcast from the
-    driver (VERDICT r3 #2)."""
+    """(definitely_new, maybe_seen), partition-local: candidates cogroup
+    with the sidecar rows on the bucket id, each task re-insert-merges ONLY
+    its bucket's delta tables (merge_cuckoo_rows) and probes all its
+    candidates with one vectorized fancy-indexing pass. Nothing is
+    collected to or broadcast from the driver (VERDICT r3 #2)."""
     from ..functions.urls import url_hash_bucket
 
     cand = candidates.withColumn("_pb", url_hash_bucket("url_hash", num_buckets))
@@ -223,9 +227,9 @@ def anti_join_seen_cuckoo(
     sidecar: DataFrame | None,
     num_buckets: int = 32,
 ) -> DataFrame:
-    """Exact seen-set anti-join routed through the cuckoo prefilter —
-    drop-in alternative to dedup.anti_join_seen's bloom path. `sidecar` is
-    the cuckoo DataFrame (delta rows merge inside each bucket's task)."""
+    """Exact seen-set anti-join routed through the cuckoo prefilter — same
+    output as dedup.anti_join_seen. `sidecar` is the cuckoo DataFrame
+    (delta rows merge inside each bucket's task)."""
     if seen is None:
         return candidates
     seen_keys = seen.select("url_hash")

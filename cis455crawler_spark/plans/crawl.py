@@ -7,7 +7,7 @@ gates (plans/gates.py) plug in at its four capitalized stages:
 
     frontier_r (snapshot scan)
       -> canonicalize + sha1 (JVM cols)                 [O-X1/X2]
-      -> anti-join seen (optional bloom prefilter)      [O-J2/O-F6]
+      -> anti-join seen                                 [O-J2/O-F6]
       -> ADMIT gates
       -> broadcast-join robots + quirk predicate        [O-J1/O-F4]
       -> BUDGET gates
@@ -50,7 +50,6 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -72,10 +71,10 @@ from ..functions.urls import (
     sha1_hex,
     url_hash_bucket,
 )
-from ..operators.dedup import anti_join_seen, build_bloom_sidecar, or_merge_sidecar
+from ..operators.dedup import anti_join_seen
 from ..operators.scheduler import host_budget, pop_host_batches
 from ..sources.tables import SnapshotStore
-from .gates import GATES, _generation_history, _lags, through
+from .gates import GATES, _generation_history, through
 
 
 @dataclass
@@ -85,19 +84,12 @@ class CrawlConfig:
     round_duration_s: int = 60
     salt_buckets: int = 8
     num_buckets: int = 32  # seen-table bucket layout
-    use_bloom: bool = False  # pays when seen >> per-round frontier (BENCH.md)
-    bloom_bucket_bits: int = 1 << 22  # fixed bits/bucket so deltas OR-merge
     compact_every: int = 8
     max_content_bytes: int = MAX_CONTENT_BYTES_DEFAULT  # O-F2 size gate
     # keep the last K round-snapshots time-travel-readable and delete data
     # dirs nothing retained references (runs with compaction); None = retain
     # every snapshot (no dir ever deleted, time-travel to any round)
     expire_keep_snapshots: int | None = None
-    # expected total URLs the seen set will hold: when set, bloom_bucket_bits
-    # derives from keys/bucket at ~1% FP (bloom_bits_for) instead of the
-    # fixed default — changing it mid-crawl is safe, the n_bits-mismatch
-    # heal rebuilds the sidecar from the seen table on the next round
-    expected_total_urls: int | None = None
     # opt-in (beyond reference): seed the round-0 frontier from sitemap
     # files too (robots Sitemap: lines + the /sitemap.xml convention,
     # sources/sitemaps.py). Off by default — the parity gate's BFS starts
@@ -179,21 +171,6 @@ class CrawlConfig:
             raise ValueError(f"unknown robots mode {self.robots_mode!r}")
         if self.num_buckets < 1 or self.salt_buckets < 1:
             raise ValueError("num_buckets and salt_buckets must be >= 1")
-        if self.expected_total_urls:
-            from ..operators.dedup import bloom_bits_for
-
-            per_bucket = -(-self.expected_total_urls // self.num_buckets)
-            self.bloom_bucket_bits = bloom_bits_for(per_bucket)
-        # the sidecar's n_bits column is an int, and the kernel indexes a
-        # bitmap of this size: outside the range it fails inside a Spark job
-        if not 1 <= self.bloom_bucket_bits <= 2**31 - 1:
-            raise ValueError(
-                f"bloom_bucket_bits={self.bloom_bucket_bits} is outside "
-                "[1, 2**31-1]; with expected_total_urls set, raise num_buckets "
-                "so each bucket holds fewer keys"
-            )
-
-
 
 
 def _with_url_cols(df: DataFrame, num_buckets: int) -> DataFrame:
@@ -233,50 +210,6 @@ def init_crawl(
     store.commit_round(
         0, replaces=_seed_generation(spark, seeds, extra_seed_df), extra={"phase": "init"}
     )
-
-
-def _bloom_sidecar(
-    store: SnapshotStore,
-    seen: DataFrame | None,
-    cfg: CrawlConfig,
-    cached: Callable[..., DataFrame],
-) -> tuple[DataFrame | None, bool]:
-    """The round's bloom sidecar (None when off or nothing is seen yet) and
-    whether it was rebuilt this round. The sidecar is INCREMENTAL: each
-    round appends a bitmap delta of its new_seen batch, and the probes
-    cogroup candidates with the deltas on the bucket id, so each task
-    OR-merges and probes only its own bucket — nothing is collected or
-    broadcast (at 10^10 keys the sidecar is ~12 GB). It is rebuilt from the
-    seen table when the deltas are untrustworthy: missing table, an n_bits
-    or num_buckets mismatch (a 1-row aggregate, no scan through the
-    driver), or rounds that appended seen without a delta (use_bloom
-    toggled off then on — stale deltas would give false negatives and
-    re-crawl seen URLs)."""
-    if not cfg.use_bloom or seen is None:
-        return None, False
-    sidecar = store.read("bloom")
-    needs_heal = sidecar is None or _lags(store.manifest()["history"], "bloom_delta")
-    if not needs_heal:
-        szs = sidecar.agg(
-            F.count_distinct("n_bits").alias("k"),
-            F.max("n_bits").alias("m"),
-            F.count_distinct("num_buckets").alias("bk"),
-            F.max("num_buckets").alias("bm"),
-        ).first()
-        needs_heal = (
-            szs["k"] != 1
-            or szs["m"] != cfg.bloom_bucket_bits
-            # a sidecar built under a different bucketing would answer
-            # definitely-new for every re-mapped bucket (false negative)
-            or szs["bk"] != 1
-            or szs["bm"] != cfg.num_buckets
-        )
-    if not needs_heal:
-        return sidecar, False
-    # distributed rebuild from the seen table; persisted because the three
-    # anti-joins and the commit-time replacement all read it
-    rebuilt = build_bloom_sidecar(seen, cfg.num_buckets, cfg.bloom_bucket_bits)
-    return cached(rebuilt, StorageLevel.MEMORY_AND_DISK), True
 
 
 def _fetch(
@@ -453,14 +386,7 @@ def run_round(
     raw = _cached(
         _with_url_cols(frontier.groupBy("url").agg(*agg_exprs), cfg.num_buckets)
     )
-    bloom_sidecar, bloom_healed = _bloom_sidecar(store, seen, cfg, _cached)
-
-    def unseen(df: DataFrame) -> DataFrame:
-        return anti_join_seen(
-            df, seen, bloom_sidecar=bloom_sidecar, num_buckets=cfg.num_buckets
-        )
-
-    fresh_cand = unseen(raw)
+    fresh_cand = anti_join_seen(raw, seen)
 
     # admit gates drop candidates for good; the stats job counts each one's
     # cached input, and the counts chain into the per-gate drop metrics
@@ -537,12 +463,12 @@ def run_round(
             .distinct(),
             cfg.num_buckets,
         ).select("url_hash", "url", "bucket")
-        redirect_targets = unseen(redirect_targets).join(
+        redirect_targets = anti_join_seen(redirect_targets, seen).join(
             batch_seen.select("url_hash"), "url_hash", "left_anti"
         )
-        # cached: evaluated by the pipeline job (links anti-join), the seen
-        # write, and the bloom delta — uncached each re-runs the redirect
-        # anti-join against the seen table
+        # cached: evaluated by the pipeline job (links anti-join) and the
+        # seen write — uncached each re-runs the redirect anti-join against
+        # the seen table
         new_seen = _cached(batch_seen.unionByName(redirect_targets))
 
     # discovered links -> next frontier (dedup within batch, anti-join
@@ -567,8 +493,9 @@ def run_round(
         link_aggs.append(F.sum("_dep").alias("inlinks"))
     elif cfg.priority == "indegree":
         link_aggs.append(F.count(F.lit(1)).alias("inlinks"))
-    links = unseen(
-        _with_url_cols(link_stream.groupBy("url").agg(*link_aggs), cfg.num_buckets)
+    links = anti_join_seen(
+        _with_url_cols(link_stream.groupBy("url").agg(*link_aggs), cfg.num_buckets),
+        seen,
     ).join(new_seen.select("url_hash"), "url_hash", "left_anti")
 
     # localCheckpoint (not cache): materializes AND truncates lineage, so the
@@ -584,20 +511,9 @@ def run_round(
 
     # phase-1 commit: the table writes start on background driver threads
     # NOW; the stats aggregate below runs concurrently with them. The
-    # manifest swap waits for everything. Bloom is all distributed, no
-    # collect: a bitmap delta over this round's newly-seen keys (OR-merged
-    # with earlier deltas inside each bucket's probe task), or on a heal
-    # round the whole sidecar replaced by (rebuilt ∪ delta), OR-merged.
+    # manifest swap waits for everything.
     appends: dict[str, DataFrame] = {}
     replaces = {"frontier": new_frontier.select(*frontier_cols)}
-    if cfg.use_bloom:
-        bloom_delta = build_bloom_sidecar(
-            new_seen.select("url_hash"), cfg.num_buckets, cfg.bloom_bucket_bits
-        )
-        if bloom_healed:
-            replaces["bloom"] = or_merge_sidecar(bloom_sidecar.unionByName(bloom_delta))
-        else:
-            appends["bloom"] = bloom_delta
     for g in gates:
         g_appends, g_replaces = g.commit(parsed, new_seen)
         appends.update(g_appends)
@@ -662,8 +578,6 @@ def run_round(
         metrics[g.dropped] = n_in - n_out
     for g in gates:
         metrics.update(g.metrics(stats))
-    if cfg.use_bloom:
-        metrics["bloom_delta"] = True  # _lags reads this from history
 
     # per-partition lineage (north_rule) + 1-row metrics: written
     # driver-side, no Spark job per tiny table
@@ -775,9 +689,9 @@ def run_crawl(
             replaces={**_seed_generation(spark, seeds, sitemap_seed_df), "seen": empty_seen},
             extra={"phase": "recrawl"},
         )
-        # the bloom bitmaps and the gates' per-generation tables describe the
-        # previous generation's seen set, which a recrawl resets
-        for table in ("bloom", *(t for g in GATES for t in g.per_generation)):
+        # the gates' per-generation tables describe the previous
+        # generation's seen set, which a recrawl resets
+        for table in (t for g in GATES for t in g.per_generation):
             store.drop_table(table)
 
     # max_pages / max_rounds / metrics are per-generation (each reference
@@ -824,13 +738,6 @@ def run_crawl(
             store.compact("seen", partition_cols=["bucket"])
             if cfg.expire_keep_snapshots:
                 store.expire_snapshots(keep_last=cfg.expire_keep_snapshots)
-            if cfg.use_bloom:
-                # pre-OR-merge the per-round bitmap deltas to one row per
-                # bucket (caps sidecar size at num_buckets rows instead of
-                # O(rounds) deltas) — distributed, never through the driver
-                bdf = store.read("bloom")
-                if bdf is not None:
-                    store.replace_with("bloom", or_merge_sidecar(bdf))
         round_no += 1
 
     robots.unpersist()

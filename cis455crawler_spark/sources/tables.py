@@ -330,7 +330,7 @@ class SnapshotStore:
         round's state is always kept) and delete every data dir that no
         retained snapshot references — Iceberg expire_snapshots +
         remove_orphan_files. This is what reclaims replaced frontier dirs
-        and pre-heal bloom sidecars. Returns the deleted dirs.
+        and pre-compaction seen/parsed deltas. Returns the deleted dirs.
 
         Must not run concurrently with an in-flight begin_commit: phase-1
         write dirs are on disk but not yet in any manifest, so they would
@@ -368,14 +368,14 @@ class SnapshotStore:
         old_dirs = tables.pop(table)
         self._swap_tables(tables, old_dirs)
 
-    def replace_with(
-        self, table: str, df: DataFrame, partition_cols: list[str] | None = None
-    ) -> None:
-        """Replace a table's dirs with one Spark-written rewrite of `df`
-        (used to swap in the distributed OR-merged bloom sidecar at
-        compaction — the bitmaps never pass through the driver)."""
+    def compact(self, table: str, partition_cols: list[str] | None = None) -> None:
+        """Rewrite an append-table's many delta dirs into one (Iceberg
+        rewrite_data_files). Commits a new manifest; old dirs removed after."""
+        df = self.read(table)
+        if df is None:
+            return
         m = self.manifest()
-        old_dirs = list(m["tables"].get(table, []))
+        old_dirs = list(m["tables"][table])
         rel = f"{table}/compact_{uuid.uuid4().hex[:8]}"
         writer = df.write.mode("overwrite")
         if partition_cols:
@@ -384,14 +384,6 @@ class SnapshotStore:
         tables = dict(m["tables"])
         tables[table] = [rel]
         self._swap_tables(tables, old_dirs)
-
-    def compact(self, table: str, partition_cols: list[str] | None = None) -> None:
-        """Rewrite an append-table's many delta dirs into one (Iceberg
-        rewrite_data_files). Commits a new manifest; old dirs removed after."""
-        df = self.read(table)
-        if df is None:
-            return
-        self.replace_with(table, df, partition_cols)
 
 
 def snapshot_diff(g1, g2, key_col: str = "url", fp1_col: str = "fp1", fp2_col: str = "fp2"):

@@ -10,6 +10,10 @@ from cis455crawler_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
+    # the benchmark harness's heap (crawlbench/harness.py); test inputs are
+    # KB- to MB-sized, so get_spark's 8g default only grows the JVM's RSS.
+    # An explicit SPARK_DRIVER_MEMORY still wins.
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "3g")
     s = get_spark(cores=int(os.environ.get("SPARK_TEST_CPUS", "4")), app_name="tests")
     yield s
 

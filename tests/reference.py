@@ -110,25 +110,13 @@ def salsa_py_oracle(
     return {n: (hub[n], auth[n]) for n in nodes}
 
 
-# -- sidecar probes (operators/dedup.py, operators/cuckoo.py) ----------------
-
-
-def probe_positions(hash_hex: str, n_bits: int) -> tuple[int, int, int, int]:
-    """Scalar form of the Bloom sidecar's k=4 probe positions
-    (operators/dedup.py): four 40-bit slices of the sha1 hex, mod n_bits.
-    The crawl probes with the vectorized _bloom_probe_vec."""
-    return (
-        int(hash_hex[0:10], 16) % n_bits,
-        int(hash_hex[10:20], 16) % n_bits,
-        int(hash_hex[20:30], 16) % n_bits,
-        int(hash_hex[30:40], 16) % n_bits,
-    )
+# -- sidecar probes (operators/cuckoo.py) ------------------------------------
 
 
 def cuckoo_contains(table: np.ndarray, fp: int, i1: int, mask: int) -> bool:
     """Scalar form of the cuckoo sidecar's membership test (either of the
-    key's two candidate rows holds its fingerprint); the crawl probes with
-    the vectorized _contains_vec."""
+    key's two candidate rows holds its fingerprint); the sidecar probes
+    with the vectorized _contains_vec."""
     return bool((table[i1] == fp).any() or (table[_alt(i1, fp, mask)] == fp).any())
 
 

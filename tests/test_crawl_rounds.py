@@ -212,37 +212,6 @@ def test_recrawl_304_reuse(spark, corpus, oracle_res, tmp_path):
     assert len(refetched) > 0
 
 
-def test_bloom_heal_after_toggle_and_bits_change(spark, corpus, oracle_res, tmp_path):
-    """Bloom lifecycle hardening: (a) rounds crawled with use_bloom=False then
-    resumed with it on must NOT trust the lagging deltas (false negatives
-    would re-crawl seen URLs) — the sidecar heals from the seen table; (b) a
-    resume with a different bloom_bucket_bits heals instead of asserting.
-    Both must leave the seen set exactly equal to the oracle's."""
-    _, pages = corpus
-    state = str(tmp_path / "state_heal")
-    # phase 1: 2 rounds with bloom ON (deltas committed)
-    run_crawl(
-        spark, pages, seed_urls(SPEC), state,
-        CrawlConfig(max_rounds=2, use_bloom=True, num_buckets=8,
-                    bloom_bucket_bits=1 << 16, compact_every=0),
-    )
-    # phase 2: 2 more rounds with bloom OFF (seen grows, no deltas)
-    run_crawl(
-        spark, pages, seed_urls(SPEC), state,
-        CrawlConfig(max_rounds=4, use_bloom=False, num_buckets=8, compact_every=0),
-        resume=True,
-    )
-    # phase 3: back ON with DIFFERENT bits — must heal (lag + bits mismatch)
-    store, _ = run_crawl(
-        spark, pages, seed_urls(SPEC), state,
-        CrawlConfig(max_rounds=MAX_ROUNDS, use_bloom=True, num_buckets=8,
-                    bloom_bucket_bits=1 << 17, compact_every=0),
-        resume=True,
-    )
-    engine_seen = {r["url_hash"] for r in store.read("seen").select("url_hash").collect()}
-    assert engine_seen == oracle_res.seen
-
-
 def test_commit_failure_cleans_orphans_and_resumes(spark, tmp_path):
     """Two-phase commit crash path (ADVICE r2 + VERDICT r2 #9): when a
     background table write fails, finish_commit must wait out / cancel the
@@ -399,67 +368,6 @@ def test_snapshot_time_travel_and_expiry(spark, corpus, tmp_path):
         spark, pages, seed_urls(SPEC), str(tmp_path / "state_tt"), cfg, resume=True
     )
     assert [m["round"] for m in extra] == rounds
-
-
-def test_bloom_sizing_holds_fp_at_100x_load():
-    """North-rule sizing (VERDICT r2 'What's wrong' #3): at 100x the
-    per-bucket key load the derived bitmap keeps FP < 5%, while the OLD
-    fixed 2^22 default saturates. Pure driver-side math, no Spark."""
-    import hashlib
-
-    import numpy as np
-
-    from cis455crawler_spark.operators.dedup import bloom_bits_for
-    from cis455crawler_spark.plans.crawl import CrawlConfig
-
-    from .reference import probe_positions
-
-    n = 200_000  # ~100x the per-bucket load the 2^22 default was tuned for
-    n_bits = bloom_bits_for(n, target_fp=0.01)
-    assert n_bits % 8 == 0
-
-    def fill(bits, count, tag):
-        for i in range(count):
-            h = hashlib.sha1(f"{tag}{i}".encode()).hexdigest()
-            for p in probe_positions(h, len(bits)):
-                bits[p] = True
-
-    def fp_rate(bits, probes, tag):
-        hits = 0
-        for i in range(probes):
-            h = hashlib.sha1(f"{tag}{i}".encode()).hexdigest()
-            if all(bits[p] for p in probe_positions(h, len(bits))):
-                hits += 1
-        return hits / probes
-
-    sized = np.zeros(n_bits, dtype=bool)
-    fill(sized, n, "key")
-    assert fp_rate(sized, 20_000, "other") < 0.05
-
-    # the config derives the same sizing from an expected corpus total
-    cfg = CrawlConfig(use_bloom=True, num_buckets=32,
-                      expected_total_urls=32 * n)
-    assert cfg.bloom_bucket_bits == n_bits
-
-    # contrast: the old fixed default at this load is useless as a prefilter
-    fixed = np.zeros(1 << 22, dtype=bool)
-    fill(fixed, 10 * n, "key")  # 2M keys/bucket ~ the 10^10-URL regime
-    assert fp_rate(fixed, 5_000, "other") > 0.5
-
-
-def test_bloom_path_identical(spark, corpus, oracle_res, tmp_path):
-    """Bloom prefilter must not change results (no false negatives; maybes
-    re-checked exactly)."""
-    _, pages = corpus
-    store, _ = run_crawl(
-        spark,
-        pages,
-        seed_urls(SPEC),
-        str(tmp_path / "state3"),
-        CrawlConfig(max_rounds=MAX_ROUNDS, use_bloom=True, num_buckets=8, compact_every=0),
-    )
-    engine_seen = {r["url_hash"] for r in store.read("seen").select("url_hash").collect()}
-    assert engine_seen == oracle_res.seen
 
 
 def test_crawl_feeds_curation_pipeline(spark, corpus, tmp_path):

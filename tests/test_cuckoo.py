@@ -1,6 +1,6 @@
 """Cuckoo-filter sidecar invariants (operators/cuckoo.py): exactness of the
 prefiltered anti-join (identical output to the plain anti-join), no false
-negatives, FP far below the Bloom sidecar at similar bits/key, saturation
+negatives, FP far below 1% at its design load, saturation
 degrading to maybe-for-everything, and re-insert merge of deltas."""
 
 import hashlib
@@ -45,7 +45,7 @@ def test_no_false_negatives_and_low_fp():
         fp, i1 = _fp_i1(h, mask)
         assert cuckoo_contains(table, fp, i1, mask)
     # FP on non-keys: 16-bit fingerprints at 4 slots -> ~2*2b/2^16 ~ 2e-4;
-    # assert well under the Bloom sidecar's 1% design point
+    # assert well under a 1% design point
     others = [_sha(f"x{i}") for i in range(30_000)]
     fps = sum(
         cuckoo_contains(table, *(_fp_i1(h, mask)), mask)  # noqa: B905

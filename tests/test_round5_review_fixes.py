@@ -237,10 +237,9 @@ def test_trustrank_eager_release_frees_caches(spark):
 
 
 def test_all_gates_crawl_frees_round_caches(spark, tmp_path):
-    """A crawl with every opt-in gate on, then a resume that changes the
-    bloom size (so a sidecar heal round runs): after each run_crawl call
-    the JVM CacheManager holds no entries — per-round caches are released,
-    so they cannot accumulate with rounds."""
+    """A crawl with every opt-in gate on, then a resume of it: after each
+    run_crawl call the JVM CacheManager holds no entries — per-round caches
+    are released, so they cannot accumulate with rounds."""
     from cis455crawler_spark.sources.corpus import (
         CorpusSpec,
         generate_pages_pdf,
@@ -254,7 +253,7 @@ def test_all_gates_crawl_frees_round_caches(spark, tmp_path):
     )
     state = str(tmp_path / "g")
 
-    def cfg(rounds: int, bloom_bits: int) -> CrawlConfig:
+    def cfg(rounds: int) -> CrawlConfig:
         return CrawlConfig(
             max_rounds=rounds,
             compact_every=2,
@@ -262,8 +261,6 @@ def test_all_gates_crawl_frees_round_caches(spark, tmp_path):
             max_urls_per_host=12,
             demote_soft404=True,
             content_dedup=True,
-            use_bloom=True,
-            bloom_bucket_bits=bloom_bits,
             follow_redirects=True,
             priority="trust",
             resolve_mode="standard",
@@ -271,7 +268,7 @@ def test_all_gates_crawl_frees_round_caches(spark, tmp_path):
 
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()  # entries other tests left behind
-    store, m1 = run_crawl(spark, pages, seed_urls(spec), state, cfg(3, 1 << 12))
+    store, m1 = run_crawl(spark, pages, seed_urls(spec), state, cfg(3))
     assert len(m1) == 3 and m1[-1]["frontier_next"] > 0
     assert cache_manager.isEmpty()
     # the committed contract the gates must keep: exactly these tables and,
@@ -279,7 +276,7 @@ def test_all_gates_crawl_frees_round_caches(spark, tmp_path):
     manifest = store.manifest()
     assert set(manifest["tables"]) == {
         "frontier", "seed_hosts", "seen", "parsed", "metrics", "lineage",
-        "bloom", "host_counts", "trap_log", "trap_url_pairs",
+        "host_counts", "trap_log", "trap_url_pairs",
         "trap_digest_pairs", "trap_counts", "soft404_log", "soft404_counts",
         "content_seen", "host_edges",
     }
@@ -288,21 +285,15 @@ def test_all_gates_crawl_frees_round_caches(spark, tmp_path):
         "scheduled", "fetch_hits", "fetch_misses", "parsed_pages", "redirects",
         "not_modified", "mime_rejected", "size_rejected", "frontier_next",
         "trap_dropped", "quota_dropped", "soft404_hosts", "content_dup",
-        "bloom_delta", "host_counts_delta",
+        "host_counts_delta",
     }
     rounds = [h for h in manifest["history"] if "scheduled" in h]
     assert len(rounds) == 3 and all(set(h) == keys for h in rounds)
     assert set(store.read("metrics").columns) == keys
 
-    store, m2 = run_crawl(
-        spark, pages, seed_urls(spec), state, cfg(5, 1 << 13), resume=True
-    )
+    store, m2 = run_crawl(spark, pages, seed_urls(spec), state, cfg(5), resume=True)
     assert len(m2) > len(m1)
     assert cache_manager.isEmpty()
-    # the resume rebuilt the sidecar at the new size (the heal round ran)
-    assert {r.n_bits for r in store.read("bloom").select("n_bits").collect()} == {
-        1 << 13
-    }
     # the trust ledger's appends are anti-joined, so it stays a set
     led = store.read("host_edges")
     assert led.count() == led.distinct().count() > 0

@@ -92,16 +92,19 @@ def test_indexer_df_never_a_word_window(spark):
     assert all(k == "doc_id" for k in keys), keys
 
 
-@pytest.mark.parametrize("which", ["brute", "quantized"])
+@pytest.mark.parametrize("which", ["ivf", "quantized"])
 def test_ann_topk_is_two_phase(spark, which):
-    """Brute/quantized ANN rank: every q_id-keyed window must be either the
+    """IVF/quantized ANN rank: every q_id-keyed window must be either the
     salted phase-1 ((q_id, _salt) — bounded by corpus/buckets) or rank a
     phase-1-capped survivor set; the plan therefore carries `_salt`, and no
     windowspecdefinition partitions on q_id alone without a preceding salted
     phase (VERDICT r4 'What's wrong' #3)."""
-    from cis455crawler_spark.operators.similarity import cosine_topk_quantized
+    import numpy as np
 
-    from .reference import cosine_topk_bruteforce
+    from cis455crawler_spark.operators.similarity import (
+        cosine_topk_ivf,
+        cosine_topk_quantized,
+    )
 
     vectors = spark.range(200).select(
         F.col("id").alias("vec_id"),
@@ -117,8 +120,14 @@ def test_ann_topk_is_two_phase(spark, which):
             F.lit(1.0).cast("float"), F.lit(2.0).cast("float"), F.lit(1.0).cast("float")
         ).alias("q_vec"),
     )
-    fn = cosine_topk_bruteforce if which == "brute" else cosine_topk_quantized
-    out = fn(vectors, queries, k=5)
+    if which == "ivf":
+        # nprobe == centroid count: every cell is probed, so top-k stays exact
+        cents = np.array(
+            [[1, 1, 1], [6, 1, 1], [1, 5, 1], [6, 5, 1]], dtype=np.float32
+        )
+        out = cosine_topk_ivf(vectors, queries, cents, k=5, nprobe=len(cents))
+    else:
+        out = cosine_topk_quantized(vectors, queries, k=5)
     plan = _optimized(out)
     assert "_salt" in plan, plan
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)

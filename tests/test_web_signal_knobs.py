@@ -300,10 +300,6 @@ def test_knob_validation():
         {"robots_mode": "rfc"},
         {"num_buckets": 0},
         {"salt_buckets": 0},
-        {"use_bloom": True, "bloom_bucket_bits": 0},
-        {"use_bloom": True, "bloom_bucket_bits": -8},
-        # 10^10 keys over the default 32 buckets derive ~3.3e9 bits/bucket
-        {"use_bloom": True, "expected_total_urls": 10**10},
     ):
         with pytest.raises(ValueError):
             CrawlConfig(**bad)
