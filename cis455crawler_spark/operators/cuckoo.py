@@ -93,7 +93,7 @@ def build_cuckoo_sidecar(
 
     n_ck = cuckoo_buckets_for(capacity_per_bucket)
 
-    def _build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         bucket = int(key[0])
         mask = n_ck - 1
         table = np.zeros((n_ck, SLOTS), dtype=np.uint16)

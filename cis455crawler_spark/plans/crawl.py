@@ -2,8 +2,10 @@
 
 One round = one DataFrame DAG (SURVEY.md §3.1), replacing the reference's
 20-thread queue loop (XPathCrawlerThread.java:78-266) and master/worker
-round-trip (MasterServlet.java:78-185). The spine is fixed; the opt-in
-gates (plans/gates.py) plug in at its four capitalized stages:
+round-trip (MasterServlet.java:78-185). plan_round builds that DAG lazily,
+with no Spark action; run_round runs its one action (checkpoint and count
+the next frontier), then the COMMIT. The spine is fixed; the opt-in gates
+(plans/gates.py) plug in at its four capitalized stages:
 
     frontier_r (snapshot scan)
       -> canonicalize + sha1 (JVM cols)                 [O-X1/X2]
@@ -114,7 +116,6 @@ class CrawlConfig:
     # each round, so the BFS-parity gate requires "bfs". Do not flip between
     # indegree and trust mid-crawl (the cash column changes type/meaning).
     priority: str = "bfs"
-    trust_iterations: int = 3  # power steps per round in priority="trust"
     # priority="trust" teleport set: None (default) = the round-0 seed
     # hosts; pass an explicit host list when only a curated subset of the
     # seeds is trusted (the Gyöngyi TrustRank setup — seeds crawl, but only
@@ -159,8 +160,6 @@ class CrawlConfig:
     trap_depth_threshold: int = 12
     # opt-in soft-404 demotion (gates.Soft404Demotion). Default off for parity.
     demote_soft404: bool = False
-    soft404_min_pages: int = 3
-    soft404_rate_threshold: float = 0.5
 
     def __post_init__(self) -> None:
         if self.priority not in ("bfs", "indegree", "trust"):
@@ -339,7 +338,29 @@ def _round_stats(
     }
 
 
-def run_round(
+@dataclass
+class RoundPlan:
+    """One round's lazy DAG, as plan_round leaves it: no Spark action has
+    run on any of these frames."""
+
+    gates: tuple  # this round's gate instances, in spine order
+    # every frame this round caches or persists; released together after
+    # the commit (CacheManager entries must not grow with rounds)
+    caches: list[DataFrame]
+    raw: DataFrame  # the frontier distinct on url, with its url columns
+    admit_in: list[tuple]  # (admit gate, its cached input)
+    cand: DataFrame  # fresh candidates with the robots verdict
+    scheduled: DataFrame  # the politeness pop's batch
+    parsed: DataFrame  # the fetched, routed and parsed batch
+    new_seen: DataFrame  # this round's seen-set append
+    frontier: DataFrame  # next round's frontier, before localCheckpoint
+
+    def release(self) -> None:
+        for df in self.caches:
+            df.unpersist()
+
+
+def plan_round(
     spark: SparkSession,
     store: SnapshotStore,
     pages: DataFrame,
@@ -348,14 +369,13 @@ def run_round(
     round_no: int,
     frontier: DataFrame | None = None,
     stored: DataFrame | None = None,
-) -> dict | tuple[dict, DataFrame]:
-    """One scheduling round. `frontier` may be passed in-memory by the driver
-    loop (avoids a parquet round-trip); omitted -> read from the snapshot.
-    `stored` (recrawl generations only) is the prior generation's
-    parsed-latest snapshot (url, warc_ts, out_links) answering the 304
-    If-Modified-Since check."""
-    # every frame this round caches or persists; released together after
-    # the commit (CacheManager entries must not grow with rounds)
+) -> RoundPlan:
+    """The round's DAG up to its one action, built without running a Spark
+    job (the trust gate's TrustRank power steps aside). `frontier` may be
+    passed in-memory by the driver loop (avoids a parquet round-trip);
+    omitted -> read from the snapshot. `stored` (recrawl generations only)
+    is the prior generation's parsed-latest snapshot (url, warc_ts,
+    out_links) answering the 304 If-Modified-Since check."""
     caches: list[DataFrame] = []
 
     def _cached(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
@@ -363,7 +383,6 @@ def run_round(
         caches.append(df)
         return df
 
-    return_frontier = frontier is not None
     if frontier is None:
         frontier = store.read("frontier")
     seen = store.read("seen")
@@ -443,7 +462,6 @@ def run_round(
     # without this cache the Arrow parse would run TWICE per page on the
     # links path alone (asserted in tests/test_plan_properties.py)
     parsed = _cached(_parse(routed, cfg.resolve_mode, round_no))
-    is_parse = F.col("action") == "parse"
 
     batch_seen = scheduled.select("url_hash", "url", "bucket").unionByName(
         denied.select("url_hash", "url", "bucket")
@@ -498,14 +516,41 @@ def run_round(
         seen,
     ).join(new_seen.select("url_hash"), "url_hash", "left_anti")
 
+    frontier_cols = ["url", "depth"] + (["inlinks"] if use_pri else [])
+    return RoundPlan(
+        gates=gates,
+        caches=caches,
+        raw=raw,
+        admit_in=admit_in,
+        cand=cand,
+        scheduled=scheduled,
+        parsed=parsed,
+        new_seen=new_seen,
+        frontier=links.select(*frontier_cols).unionByName(
+            deferred.select(*frontier_cols)
+        ),
+    )
+
+
+def run_round(
+    spark: SparkSession,
+    store: SnapshotStore,
+    pages: DataFrame,
+    robots: DataFrame,
+    cfg: CrawlConfig,
+    round_no: int,
+    frontier: DataFrame | None = None,
+    stored: DataFrame | None = None,
+) -> tuple[dict, DataFrame]:
+    """One scheduling round: plan_round's DAG, its one action, then the
+    commit. Returns the round's metrics and the next frontier (url, depth
+    [, inlinks]), checkpointed; its blocks are freed by the context
+    cleaner once the caller drops the reference."""
+    plan = plan_round(spark, store, pages, robots, cfg, round_no, frontier, stored)
+    gates, parsed, new_seen = plan.gates, plan.parsed, plan.new_seen
     # localCheckpoint (not cache): materializes AND truncates lineage, so the
     # logical plan stays flat across rounds instead of growing exponentially
-    frontier_cols = ["url", "depth"] + (["inlinks"] if use_pri else [])
-    new_frontier = (
-        links.select(*frontier_cols)
-        .unionByName(deferred.select(*frontier_cols))
-        .localCheckpoint(eager=False)
-    )
+    new_frontier = plan.frontier.localCheckpoint(eager=False)
     # the one big action: materializes every cache along the pipeline
     frontier_next = new_frontier.count()
 
@@ -513,7 +558,7 @@ def run_round(
     # NOW; the stats aggregate below runs concurrently with them. The
     # manifest swap waits for everything.
     appends: dict[str, DataFrame] = {}
-    replaces = {"frontier": new_frontier.select(*frontier_cols)}
+    replaces = {"frontier": new_frontier}
     for g in gates:
         g_appends, g_replaces = g.commit(parsed, new_seen)
         appends.update(g_appends)
@@ -521,7 +566,7 @@ def run_round(
     appends["seen"] = new_seen
     # writeToDB (XPathCrawlerThread.java:254-259): only successfully parsed
     # 200s persist; warc_ts recorded for If-Modified-Since
-    appends["parsed"] = parsed.filter(is_parse).select(
+    appends["parsed"] = parsed.filter(F.col("action") == "parse").select(
         "url", "url_hash", "depth", "title", "meta", "text", "out_links",
         "lang", "warc_ts", "fetched", "round",
     )
@@ -543,10 +588,10 @@ def run_round(
                     "size_reject", "parse"] + [a for g in gates for a in g.actions]
     admit_counts = [
         pre.agg(F.count(F.lit(1)).alias(f"n_admit{i}"))
-        for i, (_, pre) in enumerate(admit_in)
+        for i, (_, pre) in enumerate(plan.admit_in)
     ]
     stats = _round_stats(
-        raw, cand, scheduled, parsed, action_names, cfg.num_buckets,
+        plan.raw, plan.cand, plan.scheduled, parsed, action_names, cfg.num_buckets,
         admit_counts + [c for g in gates for c in g.counters()],
     )
     urls_in = stats["n_raw"]
@@ -556,7 +601,7 @@ def run_round(
     fetch_hits = sum(stats[a] for a in action_names if a != "miss")
     # candidates each admit gate saw, then what reached robots; a drop at
     # an admit gate is not a dedup
-    chain = [stats[f"n_admit{i}"] for i in range(len(admit_in))] + [fresh]
+    chain = [stats[f"n_admit{i}"] for i in range(len(plan.admit_in))] + [fresh]
 
     metrics = {
         "round": round_no,
@@ -574,7 +619,7 @@ def run_round(
         "size_rejected": stats["size_reject"],
         "frontier_next": frontier_next,
     }
-    for (g, _), n_in, n_out in zip(admit_in, chain, chain[1:]):
+    for (g, _), n_in, n_out in zip(plan.admit_in, chain, chain[1:]):
         metrics[g.dropped] = n_in - n_out
     for g in gates:
         metrics.update(g.metrics(stats))
@@ -602,13 +647,8 @@ def run_round(
         extra=metrics,
     )
 
-    for df in caches:
-        df.unpersist()
-    if return_frontier:
-        # new_frontier is already (url, depth); checkpoint blocks are freed by
-        # the context cleaner once the caller drops the reference
-        return metrics, new_frontier
-    return metrics
+    plan.release()
+    return metrics, new_frontier
 
 
 def parsed_latest(store: SnapshotStore) -> DataFrame | None:

@@ -1,5 +1,6 @@
-"""Opt-in crawl modules that plug into the fixed `run_round` spine
-(plans/crawl.py) — Mercator's pluggable URL-filter / processing-module
+"""Opt-in crawl modules that plug into the fixed round spine
+(plans/crawl.py: `plan_round` runs the stage hooks, `run_round` the
+commit) — Mercator's pluggable URL-filter / processing-module
 structure (Heydon & Najork, *Mercator: A Scalable, Extensible Web
 Crawler*, WWW 1999). The spine passes its frames through the enabled gates
 at four stages, in `GATES` order:
@@ -238,13 +239,17 @@ class HostQuota(Gate):
         return {"host_counts_delta": True}  # the rollup kept step with seen
 
 
+SOFT404_MIN_PAGES = 3  # parsed pages a host needs before it can be flagged
+SOFT404_RATE_THRESHOLD = 0.5  # share of them that must be error shells
+
+
 class Soft404Demotion(Gate):
     """Hosts whose parsed pages are mostly error shells (soft404_signals
-    verdict over >= min_pages observations at >= rate_threshold) get their
-    politeness budget clamped to 1 url/round — demoted, not banned: the
-    overflow defers like any politeness overflow and the rate can recover.
-    Verdicts accumulate in soft404_log; the gate reads the (host, n, s)
-    soft404_counts rollup."""
+    verdict over >= SOFT404_MIN_PAGES observations at >=
+    SOFT404_RATE_THRESHOLD) get their politeness budget clamped to 1
+    url/round — demoted, not banned: the overflow defers like any
+    politeness overflow and the rate can recover. Verdicts accumulate in
+    soft404_log; the gate reads the (host, n, s) soft404_counts rollup."""
 
     stage = "budget"
     wanted = staticmethod(lambda cfg: cfg.demote_soft404)
@@ -256,12 +261,11 @@ class Soft404Demotion(Gate):
         if self.counts is None:
             return ok
         self.counts = self.cached(self.counts)
-        cfg = self.cfg
         # cached: read by the clamp join and by the stats count
         self.flagged = self.cached(
             self.counts.filter(
-                (F.col("n") >= cfg.soft404_min_pages)
-                & (F.col("s") / F.col("n") >= cfg.soft404_rate_threshold)
+                (F.col("n") >= SOFT404_MIN_PAGES)
+                & (F.col("s") / F.col("n") >= SOFT404_RATE_THRESHOLD)
             ).select("host", F.lit(True).alias("_demote"))
         )
         return (
@@ -362,6 +366,9 @@ class ContentDedup(Gate):
         return {"content_dup": stats["content_dup"]}
 
 
+TRUST_ITERATIONS = 3  # TrustRank power steps per round
+
+
 class TrustDeposits(Gate):
     """Trust-weighted OPIC: each link mention deposits its SOURCE host's
     TrustRank (host graph from the host_edges ledger, teleport mass on the
@@ -398,7 +405,7 @@ class TrustDeposits(Gate):
         trust = trustrank(
             self.ledger.select("src", "dst").distinct(),
             seed_hosts,
-            iterations=cfg.trust_iterations,
+            iterations=TRUST_ITERATIONS,
             drop_sinks=False,
             eager_release=True,
         ).select(F.col("node").alias("host"), F.col("rank").alias("_trust"))

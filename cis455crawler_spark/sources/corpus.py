@@ -65,14 +65,6 @@ class CorpusSpec:
     words_max: int = 60
 
     @classmethod
-    def smoke(cls) -> "CorpusSpec":
-        return cls(hosts=10, pages_per_host=20)
-
-    @classmethod
-    def correctness(cls) -> "CorpusSpec":
-        return cls(hosts=50, pages_per_host=200)
-
-    @classmethod
     def bench(cls) -> "CorpusSpec":
         # bench.py's default tier; bench_scaling.py uses 2000x2000
         return cls(hosts=500, pages_per_host=1000, hot_factor=10)

@@ -97,91 +97,15 @@ class SnapshotStore:
             out = out.unionByName(d)
         return out
 
-    def _dirs_as_of(
-        self, table: str, round_no: int, manifest: dict | None = None
-    ) -> list[str] | None:
+    def _dirs_as_of(self, table: str, round_no: int) -> list[str] | None:
         """Table dir list at the newest retained snapshot <= round_no. None
         when no snapshot that old is retained OR the table has no entry in
-        it (never created yet, or scrubbed by a later compact() — the dir
-        provenance in read_appends_between disambiguates the two)."""
-        m = manifest if manifest is not None else self.manifest()
-        snaps = m.get("snapshots", {})
+        it (never created yet, or scrubbed by a later compact())."""
+        snaps = self.manifest().get("snapshots", {})
         eligible = [int(r) for r in snaps if int(r) <= round_no]
         if not eligible:
             return None
         return snaps[str(max(eligible))].get(table)
-
-    @staticmethod
-    def _append_round_of(table: str, rel: str) -> int | None:
-        """Round embedded in an append-dir name ({table}/r{N}_{hex});
-        None for compact_/other maintenance dirs."""
-        import re
-
-        m = re.match(rf"{re.escape(table)}/r(\d+)_", rel)
-        return int(m.group(1)) if m else None
-
-    def read_appends_between(
-        self, table: str, from_round: int, to_round: int
-    ) -> DataFrame | None:
-        """Incremental read (the Iceberg incremental-scan / changelog shape):
-        ONLY the data appended to an append-table by the snapshots in
-        (from_round, to_round] — a downstream consumer ingests each round's
-        delta reading O(delta) bytes, never rescanning the table. Returns
-        None when nothing was appended in the window (including a table that
-        doesn't exist at all).
-
-        Refuses — never returns a silently wrong delta — when: the window is
-        inverted; to_round exceeds the committed round (a checkpointing
-        consumer that recorded a too-high watermark would otherwise skip
-        later rounds forever); the table was replaced/compacted inside the
-        window (frontier-style replacement or a compact() rewrite makes the
-        dir-diff meaningless; Iceberg's incremental read refuses across
-        REPLACE snapshots the same way); or an endpoint's snapshot was
-        expired/scrubbed. A from_round predating the table's FIRST append is
-        fine (base state genuinely empty) — dir names carry their round, so
-        that case is provably distinct from a scrubbed history."""
-        if from_round > to_round:
-            raise ValueError(
-                f"inverted window: from_round {from_round} > to_round {to_round}"
-            )
-        m = self.manifest()
-        if to_round > m["round"]:
-            raise ValueError(
-                f"to_round {to_round} is beyond the committed round "
-                f"{m['round']} — a consumer checkpointing it would silently "
-                "skip rounds committed later"
-            )
-        base = self._dirs_as_of(table, from_round, manifest=m)
-        target = self._dirs_as_of(table, to_round, manifest=m)
-        if target is None:
-            if table not in m["tables"]:
-                return None  # the table simply doesn't exist: no appends
-            raise ValueError(
-                f"table {table!r} is not reconstructible at round {to_round} "
-                "— snapshot expired or scrubbed by compaction"
-            )
-        if base is None:
-            # never-created-yet vs scrubbed: every append dir carries its
-            # round; if the target holds only appends from AFTER from_round,
-            # the base state was genuinely empty. Any compact_ dir or an
-            # append from <= from_round means history was rewritten.
-            rounds = [self._append_round_of(table, d) for d in target]
-            if all(r is not None and r > from_round for r in rounds):
-                base = []
-            else:
-                raise ValueError(
-                    f"table {table!r} is not reconstructible at round "
-                    f"{from_round} — snapshot expired or scrubbed by "
-                    "compaction; incremental reads need the base retained"
-                )
-        base_set = set(base)
-        if base_set - set(target):
-            raise ValueError(
-                f"table {table!r} was replaced/compacted between rounds "
-                f"{from_round} and {to_round}; the append delta is undefined"
-            )
-        delta = [d for d in target if d not in base_set]
-        return self._read_dirs(delta)
 
     # -- commit -----------------------------------------------------------
     def begin_commit(

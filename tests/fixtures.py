@@ -1,6 +1,6 @@
-"""Deterministic byte builders for test inputs: framed WARC archives (and
-a distributed WARC export) for the WARC ingest path, and structurally valid
-media headers for the multimodal header decoders."""
+"""Deterministic test inputs: the smoke corpus preset, framed WARC archives
+(and a distributed WARC export) for the WARC ingest path, and structurally
+valid media headers for the multimodal header decoders."""
 
 from __future__ import annotations
 
@@ -15,6 +15,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from cis455crawler_spark.operators import multimodal as mm
+from cis455crawler_spark.sources.corpus import CorpusSpec
+
+
+def smoke_spec() -> CorpusSpec:
+    """The small synthetic corpus the crawl tests share."""
+    return CorpusSpec(hosts=10, pages_per_host=20)
 
 
 # -- WARC (sources/warc.py) ---------------------------------------------------

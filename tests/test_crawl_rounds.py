@@ -5,6 +5,8 @@
   3. byte-identical extracted text per url (engine UDF vs fixture column)
 """
 
+import os
+
 import pytest
 
 from cis455crawler_spark.plans.crawl import CrawlConfig, init_crawl, run_round, run_crawl
@@ -12,9 +14,10 @@ from cis455crawler_spark.functions.robots import build_robots_df
 from cis455crawler_spark.sources.corpus import CorpusSpec, generate_pages_pdf, seed_urls
 from cis455crawler_spark.sources.tables import SnapshotStore
 
+from .fixtures import smoke_spec
 from .oracle import oracle_crawl
 
-SPEC = CorpusSpec.smoke()
+SPEC = smoke_spec()
 MAX_ROUNDS = 12
 # the committed contract of a default-config crawl: these tables and, per
 # round, exactly these metric keys (opt-in gates add their own on top)
@@ -24,6 +27,22 @@ BASE_METRIC_KEYS = {
     "scheduled", "fetch_hits", "fetch_misses", "parsed_pages", "redirects",
     "not_modified", "mime_rejected", "size_rejected", "frontier_next",
 }
+
+
+def _dirs_on_disk_and_referenced(store) -> tuple[set[str], set[str]]:
+    """The store's table data dirs on disk, and the ones its manifest (the
+    current tables and every retained snapshot) references."""
+    m = store.manifest()
+    referenced = {
+        d for snap in [*m["snapshots"].values(), m["tables"]] for ds in snap.values() for d in ds
+    }
+    on_disk = {
+        f"{t}/{d}"
+        for t in os.listdir(store.root)
+        if os.path.isdir(os.path.join(store.root, t))
+        for d in os.listdir(os.path.join(store.root, t))
+    }
+    return on_disk, referenced
 
 
 @pytest.fixture(scope="module")
@@ -99,26 +118,32 @@ def test_text_byte_identical(spark, corpus, tmp_path):
 
 
 def test_run_crawl_driver_loop(spark, corpus, oracle_res, tmp_path):
+    """The driver loop matches the oracle, also when it compacts seen and
+    expires all but the newest snapshot every round; expiry then leaves no
+    data dir on disk that the manifest does not reference."""
     _, pages = corpus
-    store, metrics = run_crawl(
-        spark,
-        pages,
-        seed_urls(SPEC),
-        str(tmp_path / "state2"),
+    for cfg in (
         CrawlConfig(max_rounds=MAX_ROUNDS, compact_every=4),
-    )
-    assert sum(m["scheduled"] for m in metrics) == sum(
-        m["scheduled"] for m in oracle_res.metrics
-    )
-    engine_seen = {r["url_hash"] for r in store.read("seen").select("url_hash").collect()}
-    assert engine_seen == oracle_res.seen
-    # no gate table is written and only the base metric keys appear
-    manifest = store.manifest()
-    assert set(manifest["tables"]) == BASE_TABLES
-    rounds = [h for h in manifest["history"] if "scheduled" in h]
-    assert len(rounds) == len(metrics)
-    assert all(set(h) == BASE_METRIC_KEYS for h in rounds)
-    assert set(store.read("metrics").columns) == BASE_METRIC_KEYS
+        CrawlConfig(max_rounds=MAX_ROUNDS, compact_every=1, expire_keep_snapshots=1),
+    ):
+        state = tmp_path / f"state_expire{cfg.expire_keep_snapshots}"
+        store, metrics = run_crawl(spark, pages, seed_urls(SPEC), str(state), cfg)
+        assert sum(m["scheduled"] for m in metrics) == sum(
+            m["scheduled"] for m in oracle_res.metrics
+        )
+        engine_seen = {r["url_hash"] for r in store.read("seen").select("url_hash").collect()}
+        assert engine_seen == oracle_res.seen
+        # no gate table is written and only the base metric keys appear
+        manifest = store.manifest()
+        assert set(manifest["tables"]) == BASE_TABLES
+        rounds = [h for h in manifest["history"] if "scheduled" in h]
+        assert len(rounds) == len(metrics)
+        assert all(set(h) == BASE_METRIC_KEYS for h in rounds)
+        assert set(store.read("metrics").columns) == BASE_METRIC_KEYS
+        if cfg.expire_keep_snapshots:
+            assert len(manifest["snapshots"]) < len(metrics)  # expiry ran
+            on_disk, referenced = _dirs_on_disk_and_referenced(store)
+            assert on_disk == referenced
 
 
 def test_fetch_routing_exercised(oracle_res):
@@ -218,8 +243,6 @@ def test_commit_failure_cleans_orphans_and_resumes(spark, tmp_path):
     sibling writes, remove every dir the aborted commit attempted (no
     orphan accumulation), keep the previous manifest visible, and accept the
     next commit — the atomic-swap resume claim, tested at the seam."""
-    import os
-
     from pyspark.sql import functions as F
 
     store = SnapshotStore(spark, str(tmp_path / "st"))
@@ -234,15 +257,8 @@ def test_commit_failure_cleans_orphans_and_resumes(spark, tmp_path):
     with pytest.raises(Exception):
         store.finish_commit(handle, extra={})
 
-    m = store.manifest()
-    assert m["round"] == 0  # crashed round never became visible
-    referenced = {d for dirs in m["tables"].values() for d in dirs}
-    on_disk = {
-        f"{t}/{d}"
-        for t in os.listdir(store.root)
-        if os.path.isdir(os.path.join(store.root, t))
-        for d in os.listdir(os.path.join(store.root, t))
-    }
+    assert store.current_round() == 0  # crashed round never became visible
+    on_disk, referenced = _dirs_on_disk_and_referenced(store)
     assert on_disk == referenced  # no orphan dirs from the aborted commit
 
     store.commit_round(1, replaces={"frontier": ok})
@@ -257,8 +273,6 @@ def test_kill_between_commit_phases_resumes_and_reclaims(spark, tmp_path):
     see the previous round untouched (only the manifest is authoritative),
     accept the redone commit, and expire_snapshots must reclaim the dead
     phase-1 dirs as orphans."""
-    import os
-
     store = SnapshotStore(spark, str(tmp_path / "st"))
     ok = spark.range(5).selectExpr("cast(id as string) as url")
     store.commit_round(0, replaces={"frontier": ok})
@@ -289,19 +303,7 @@ def test_kill_between_commit_phases_resumes_and_reclaims(spark, tmp_path):
 
     deleted = store2.expire_snapshots(keep_last=1)
     assert set(attempted) <= set(deleted)  # phase-1 dirs of the dead commit
-    referenced = {
-        d
-        for snap in list(store2.manifest()["snapshots"].values())
-        + [store2.manifest()["tables"]]
-        for ds in snap.values()
-        for d in ds
-    }
-    on_disk = {
-        f"{t}/{c}"
-        for t in os.listdir(store2.root)
-        if os.path.isdir(os.path.join(store2.root, t))
-        for c in os.listdir(os.path.join(store2.root, t))
-    }
+    on_disk, referenced = _dirs_on_disk_and_referenced(store2)
     assert on_disk == referenced
     assert store2.read("frontier").count() == 9  # reads intact post-expiry
 
@@ -313,8 +315,6 @@ def test_snapshot_time_travel_and_expiry(spark, corpus, tmp_path):
     (c) expire_snapshots prunes old snapshots and deletes every data dir no
     retained snapshot references — the mechanism that reclaims replaced
     frontier dirs — while current reads and resume stay intact."""
-    import os
-
     _, pages = corpus
     cfg = CrawlConfig(max_rounds=6, compact_every=0)
     store, metrics = run_crawl(
@@ -349,16 +349,7 @@ def test_snapshot_time_travel_and_expiry(spark, corpus, tmp_path):
     deleted = store.expire_snapshots(keep_last=2)
     assert deleted  # the replaced frontier dirs of expired rounds
     assert store.read("frontier", as_of_round=rounds[0]) is None
-    m2 = store.manifest()
-    referenced = {d for dirs in m2["tables"].values() for d in dirs} | {
-        d for snap in m2["snapshots"].values() for ds in snap.values() for d in ds
-    }
-    on_disk = {
-        f"{t}/{d}"
-        for t in os.listdir(store.root)
-        if os.path.isdir(os.path.join(store.root, t))
-        for d in os.listdir(os.path.join(store.root, t))
-    }
+    on_disk, referenced = _dirs_on_disk_and_referenced(store)
     assert on_disk == referenced
     assert {
         r["url_hash"] for r in store.read("seen").select("url_hash").collect()

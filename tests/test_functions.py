@@ -160,9 +160,11 @@ def test_crawl_delay_lowercase_quirk():
 
 
 def test_build_robots_df(spark):
-    from cis455crawler_spark.sources.corpus import CorpusSpec, pages_spark_df
+    from cis455crawler_spark.sources.corpus import pages_spark_df
 
-    pages = pages_spark_df(spark, CorpusSpec.smoke())
+    from .fixtures import smoke_spec
+
+    pages = pages_spark_df(spark, smoke_spec())
     robots = build_robots_df(spark, pages)
     rows = {r["host"]: r for r in robots.collect()}
     # pattern 0 host has no robots row at all

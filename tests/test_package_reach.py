@@ -1,6 +1,7 @@
-"""Every top-level definition in the package is reached by code that runs
-outside the tests — the crawl, the driver entry (`__spark_entry__.py`), the
-tools and the benches — or is listed in ALLOWED with the reason it stays.
+"""Every top-level definition and class method in the package is reached
+by code that runs outside the tests — the crawl, the driver entry
+(`__spark_entry__.py`), the tools and the benches — or is listed in
+ALLOWED with the reason it stays.
 
 Static AST fixpoint, no Spark: the callers' references (names, attribute
 names, import aliases, and identifier-shaped string constants, which catch
@@ -14,6 +15,7 @@ dead. An ALLOWED entry keeps its definition and what that reaches."""
 from __future__ import annotations
 
 import ast
+import copy
 import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -58,6 +60,23 @@ def _parse(path: str) -> ast.Module:
         return ast.parse(fh.read(), path)
 
 
+def _split_methods(cls: ast.ClassDef, mod: str, defs: dict) -> ast.ClassDef:
+    """Register each method of `cls` as its own definition, reached by its
+    name like a top-level one; return the class without them. Dunder
+    methods stay with the class: Python calls them, not a name."""
+    methods = [
+        st
+        for st in cls.body
+        if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and not st.name.startswith("__")
+    ]
+    for m in methods:
+        defs.setdefault(m.name, []).append((f"{mod}:{cls.name}.{m.name}", m))
+    shell = copy.copy(cls)
+    shell.body = [st for st in cls.body if st not in methods]
+    return shell
+
+
 def _scan_package() -> tuple[dict[str, list[tuple[str, ast.AST]]], set[str]]:
     """name -> [(module:name key, defining node)], plus the references of
     the package's module-level statements that define nothing."""
@@ -72,6 +91,8 @@ def _scan_package() -> tuple[dict[str, list[tuple[str, ast.AST]]], set[str]]:
             for st in _parse(path).body:
                 if isinstance(st, (ast.Import, ast.ImportFrom)):
                     continue  # an import alone runs nothing
+                if isinstance(st, ast.ClassDef):
+                    st = _split_methods(st, mod, defs)
                 if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                     names = [st.name]
                 elif isinstance(st, (ast.Assign, ast.AnnAssign)):

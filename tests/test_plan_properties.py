@@ -84,80 +84,45 @@ def test_scan_pruning_reaches_parquet(spark, sf_dir):
     assert all(r.count(",") + 1 <= 8 for r in reads), reads
 
 
-def test_crawl_round_dag_properties(spark):
-    """The actual crawl-round operator chain (the explain_audit DAG): all
-    joins broadcast, one Arrow pass over html, no cartesian, no
-    row-at-a-time Python."""
-    import sys
-    import os
+def _parse_evals(df) -> int:
+    # distinct parse-UDF eval nodes: the formatted plan lists a cached
+    # relation's build plan once, however often the relation is scanned
+    return _formatted(df).count("Arguments: [parse_page_udf")
 
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
-    from explain_audit import main as _  # noqa: F401 — import check only
+
+def test_crawl_round_dag_properties(spark):
+    """The crawl round's own DAG: plan_round's next-frontier frame for round
+    2 of a real crawl (the frame tools/explain_audit.py writes to PLANS.md),
+    default and content_dedup configs: joins broadcast, one Arrow parse per
+    page, no cartesian, no row-at-a-time Python."""
+    import os
+    import re
+    import sys
 
     from pyspark.sql import functions as F
 
-    from cis455crawler_spark.functions.fetch import route_fetch
-    from cis455crawler_spark.functions.html import parse_page_udf
-    from cis455crawler_spark.functions.robots import build_robots_df, crawl_allowed
-    from cis455crawler_spark.functions.urls import resolve_href
-    from cis455crawler_spark.operators.dedup import anti_join_seen
-    from cis455crawler_spark.operators.scheduler import host_budget, pop_host_batches
-    from cis455crawler_spark.plans.crawl import _with_url_cols
-    from cis455crawler_spark.sources.corpus import CorpusSpec, pages_spark_df
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+    from explain_audit import second_round_plan
 
-    pages = pages_spark_df(spark, CorpusSpec(hosts=6, pages_per_host=10))
-    robots = build_robots_df(spark, pages)
-    frontier = pages.select("url").withColumn("depth", F.lit(0))
-    seen = pages.sample(0.3, seed=1).select(F.sha1("url").alias("url_hash"))
-    raw = _with_url_cols(frontier.groupBy("url").agg(F.min("depth").alias("depth")), 32)
-    cand = (
-        anti_join_seen(raw, seen)
-        .join(F.broadcast(robots), "host", "left")
-        .withColumn(
-            "allowed", crawl_allowed(F.col("url"), F.col("has_robots"), F.col("disallow"))
-        )
-    )
-    ok = cand.filter("allowed").withColumn("budget", host_budget(F.col("crawl_delay"), 60))
-    sched, _d = pop_host_batches(ok.select("url", "url_hash", "host", "bucket", "depth", "budget"))
-    parsed = (
-        sched.join(pages.select("url", "warc_ts", "html"), "url", "left")
-        .withColumn("action", route_fetch("html", "url"))
-        .withColumn("_p", parse_page_udf(F.when(F.col("action") == "parse", F.col("html"))))
-        .withColumn(
-            "out_links",
-            F.filter(
-                F.transform(F.col("_p.hrefs"), lambda h: resolve_href(F.col("url"), h)),
-                lambda x: x.isNotNull(),
-            ),
-        )
-    )
-    out = parsed.select(F.explode("out_links").alias("url")).groupBy("url").count()
-    plan = _plan(out)
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    assert plan.count("BroadcastHashJoin") >= 3  # seen anti, robots, fetch join
+    # parse nodes in `parsed`'s build plan: ContentDedup's digest split is a
+    # Union of two disjoint row sets, and Spark pushes the UDF into each side
+    for knobs, n_parse in (({}, 1), ({"content_dedup": True}, 2)):
+        with second_round_plan(spark, **knobs) as rp:
+            plan = _formatted(rp.frontier)
+            assert "CartesianProduct" not in plan, knobs
+            assert "BatchEvalPython" not in plan, knobs
+            # seen anti-join, robots, fetch join at least
+            assert len(re.findall(r"^\(\d+\) BroadcastHashJoin", plan, re.M)) >= 3, knobs
+            # one parse per page: the links explode and the seen append scan
+            # the cached `parsed`, so the round adds no eval of its own
+            assert _parse_evals(rp.parsed) == n_parse, knobs
+            assert _parse_evals(rp.frontier) == n_parse, knobs
 
-    # single-pass parse: up to the parsed projection, ONE eval node even
-    # though hrefs/text are referenced separately (Spark dedups the repeated
-    # UDF calls into one ArrowEvalPython)
-    assert _plan(parsed).count("ArrowEvalPython [parse_page_udf") == 1
-
-    # KNOWN CATALYST SHAPE: explode over a UDF-derived array splits into a
-    # size>0 Filter + Generate pair and EACH gets its own UDF eval in an
-    # uncached chain — this is exactly why run_round caches `parsed` before
-    # the links explode (the cache scan replaces both evals). Assert the
-    # hazard exists uncached (so a Spark upgrade that fixes it surfaces
-    # here) and that the engine's cached shape runs ZERO re-evals.
-    assert plan.count("ArrowEvalPython [parse_page_udf") == 2
-    parsed_cached = parsed.cache()
-    try:
-        cached_plan = _plan(
-            parsed_cached.select(F.explode("out_links").alias("url")).groupBy("url").count()
-        )
-        assert "InMemoryTableScan" in cached_plan
-        # the one remaining eval node is INSIDE the InMemoryRelation — the
-        # cache-build plan that runs once at materialization; the consuming
-        # chain itself scans the cache (no second per-row eval)
-        assert cached_plan.count("ArrowEvalPython [parse_page_udf") == 1
-    finally:
-        parsed_cached.unpersist()
+            # KNOWN CATALYST SHAPE: explode over a UDF-derived array splits
+            # into a size>0 Filter + Generate pair and EACH gets its own UDF
+            # eval in an uncached chain — this is why plan_round caches
+            # `parsed`. Assert the hazard on the same frame uncached, so a
+            # Spark upgrade that fixes it surfaces here.
+            rp.release()
+            links = rp.parsed.select(F.explode("out_links").alias("url"))
+            assert _parse_evals(links) == 2 * n_parse, knobs

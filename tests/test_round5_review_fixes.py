@@ -143,8 +143,6 @@ def test_trap_soft404_rollups_match_log_aggregates(spark, tmp_path):
         trap_filter=True,
         trap_ratio_threshold=3.0,
         demote_soft404=True,
-        soft404_min_pages=3,
-        soft404_rate_threshold=0.5,
     )
     store, metrics = run_crawl(
         spark, pages, [seed_t, seed_b], str(tmp_path / "r"), cfg

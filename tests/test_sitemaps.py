@@ -141,15 +141,12 @@ def test_crawl_seed_from_sitemaps_matches_oracle(spark):
     URLs — island pages unreachable from the seed link graph are crawled."""
     from cis455crawler_spark.functions.html import extract_text_py
     from cis455crawler_spark.plans.crawl import CrawlConfig, run_crawl
-    from cis455crawler_spark.sources.corpus import (
-        CorpusSpec,
-        generate_pages_pdf,
-        seed_urls,
-    )
+    from cis455crawler_spark.sources.corpus import generate_pages_pdf, seed_urls
 
+    from .fixtures import smoke_spec
     from .oracle import oracle_crawl
 
-    spec = CorpusSpec.smoke()
+    spec = smoke_spec()
     pdf = generate_pages_pdf(spec)
 
     # host-2 (robots pattern 2: Disallow /private only) gets a conventional

@@ -215,12 +215,7 @@ def test_demote_soft404_matches_oracle(spark, tmp_path):
     pages = _df(spark, rows)
     page_map = {u: bytes(b) for u, _, b, _, _ in rows}
     shells = set(bs) | set(cs)
-    cfg = CrawlConfig(
-        max_rounds=12,
-        demote_soft404=True,
-        soft404_min_pages=3,
-        soft404_rate_threshold=0.5,
-    )
+    cfg = CrawlConfig(max_rounds=12, demote_soft404=True)
     store, metrics = run_crawl(spark, pages, [seed], str(tmp_path / "s"), cfg)
     want = oracle_crawl(
         page_map,

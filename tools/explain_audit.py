@@ -1,8 +1,9 @@
 """Physical-plan audit: .explain("formatted") for the headline queries plus
-one crawl round, grepping the properties that matter at 100 TB —
-PushedFilters (predicate pushdown reached the scan), ReadSchema (column
-pruning), BroadcastHashJoin (small dims broadcast), WholeStageCodegen spans
-(JVM-side execution), and flagging CartesianProduct / row-at-a-time Python.
+the crawl round's own DAG (plans/crawl.py plan_round), grepping the
+properties that matter at 100 TB — PushedFilters (predicate pushdown
+reached the scan), ReadSchema (column pruning), BroadcastHashJoin (small
+dims broadcast), WholeStageCodegen spans (JVM-side execution), and flagging
+CartesianProduct / row-at-a-time Python.
 
 Writes PLANS.md. Usage: python tools/explain_audit.py [sf_dir]
 """
@@ -13,7 +14,8 @@ import io
 import os
 import re
 import sys
-from contextlib import redirect_stdout
+import tempfile
+from contextlib import contextmanager, redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -109,6 +111,29 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+@contextmanager
+def second_round_plan(spark, **knobs):
+    """plan_round's lazy DAG for round 2 of a real crawl of a tiny corpus
+    (round 1 committed, so the seen set is non-empty), under
+    CrawlConfig(**knobs). The round's caches are released on exit."""
+    from cis455crawler_spark.functions.robots import build_robots_df
+    from cis455crawler_spark.plans.crawl import CrawlConfig, plan_round, run_crawl
+    from cis455crawler_spark.sources.corpus import CorpusSpec, pages_spark_df, seed_urls
+
+    spec = CorpusSpec(hosts=6, pages_per_host=10)
+    cfg = CrawlConfig(max_rounds=1, **knobs)
+    pages = pages_spark_df(spark, spec)
+    with tempfile.TemporaryDirectory() as state_dir:
+        store, _ = run_crawl(spark, pages, seed_urls(spec), state_dir, cfg)
+        robots = build_robots_df(spark, pages).cache()  # cached, as run_crawl does
+        plan = plan_round(spark, store, pages, robots, cfg, 2)
+        try:
+            yield plan
+        finally:
+            plan.release()
+            robots.unpersist()
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
@@ -122,105 +147,13 @@ def main() -> int:
         "# PLANS — physical-plan audit\n",
         f"`.explain(\"formatted\")` over {sf_dir}, auto-generated by "
         "`tools/explain_audit.py`. For each headline query: the scan/join/codegen "
-        "properties that decide whether the plan survives a 100x scale-up.\n",
+        "properties that decide whether the plan survives a 100x scale-up. The two "
+        "`crawl_round_*` sections are the next-frontier frame `plan_round` returns "
+        "for round 2 of a real crawl of a tiny corpus (default config, then "
+        "`content_dedup=True`): the round's DAG up to its one action.\n",
     ]
-    def crawl_round_plan(spark, _sf, content_dedup: bool = False):
-        """One full frontier-scheduling pass as a single lazy DAG — the
-        exact operator chain run_round executes per round (canonicalize ->
-        anti-join -> robots broadcast -> salted politeness pop -> fetch
-        join -> status/MIME/size route -> [content-seen test] -> Arrow
-        parse -> links)."""
-        from pyspark.sql import functions as F
 
-        from cis455crawler_spark.functions.fetch import route_fetch
-        from cis455crawler_spark.functions.html import parse_page_udf
-        from cis455crawler_spark.functions.robots import build_robots_df, crawl_allowed
-        from cis455crawler_spark.functions.text import bind_once
-        from cis455crawler_spark.functions.urls import resolve_base_parts, resolve_href
-        from cis455crawler_spark.operators.dedup import anti_join_seen
-        from cis455crawler_spark.operators.scheduler import host_budget, pop_host_batches
-        from cis455crawler_spark.plans.crawl import _with_url_cols
-        from cis455crawler_spark.sources.corpus import CorpusSpec, pages_spark_df
-
-        pages = pages_spark_df(spark, CorpusSpec(hosts=6, pages_per_host=10))
-        robots = build_robots_df(spark, pages)
-        frontier = pages.select("url").withColumn("depth", F.lit(0))
-        seen = pages.sample(0.3, seed=1).select(F.sha1("url").alias("url_hash"))
-        raw = _with_url_cols(frontier.groupBy("url").agg(F.min("depth").alias("depth")), 32)
-        cand = (
-            anti_join_seen(raw, seen)
-            .join(F.broadcast(robots), "host", "left")
-            .withColumn("allowed", crawl_allowed(F.col("url"), F.col("has_robots"), F.col("disallow")))
-        )
-        ok = cand.filter("allowed").withColumn("budget", host_budget(F.col("crawl_delay"), 60))
-        sched, _ = pop_host_batches(
-            ok.select("url", "url_hash", "host", "bucket", "depth", "budget")
-        )
-        routed = sched.join(pages.select("url", "warc_ts", "html"), "url", "left").withColumn(
-            "action", route_fetch("html", "url")
-        )
-        if content_dedup:
-            # the crawl's content-seen test, in its round-5 shape: md5
-            # digest on parse rows, NULL-digest rows split OUT of the digest
-            # shuffle, left join against the claimed-digest table, and the
-            # in-batch claim as a min-URL aggregate + join-back (NEVER a
-            # digest window — plans/gates.py ContentDedup.route)
-            cs = pages.sample(0.2, seed=2).select(F.md5("html").alias("digest"))
-            routed = routed.withColumn(
-                "digest",
-                F.when(F.col("action") == "parse", F.md5(F.col("html"))),
-            )
-            with_dig = routed.filter(F.col("digest").isNotNull()).join(
-                cs.withColumn("_dup_known", F.lit(True)), "digest", "left"
-            )
-            no_dig = routed.filter(F.col("digest").isNull()).withColumn(
-                "_dup_known", F.lit(None).cast("boolean")
-            )
-            claims = with_dig.groupBy("digest").agg(F.min("url").alias("_claim_url"))
-            with_dig = (
-                with_dig.join(claims, "digest")
-                .withColumn(
-                    "action",
-                    F.when(
-                        F.coalesce(F.col("_dup_known"), F.lit(False))
-                        | (F.col("url") > F.col("_claim_url")),
-                        F.lit("content_dup"),
-                    ).otherwise(F.col("action")),
-                )
-                .drop("_claim_url")
-            )
-            routed = with_dig.unionByName(no_dig).drop("_dup_known")
-        # page-URL parts bind ONCE per row (functions/text.bind_once), the
-        # round-5 product shape — HOF lambda bodies get no subexpression
-        # elimination, so the unbound form re-runs the base-part regex
-        # chains per extracted HREF (the bind_once link resolution in
-        # plans/crawl.py _parse)
-        parsed = routed.withColumn(
-            "_p", parse_page_udf(F.when(F.col("action") == "parse", F.col("html")))
-        ).withColumn(
-            "out_links",
-            bind_once(
-                resolve_base_parts(F.col("url")),
-                lambda rb: F.filter(
-                    F.transform(
-                        F.col("_p.hrefs"),
-                        lambda h: resolve_href(F.col("url"), h, parts=rb),
-                    ),
-                    lambda x: x.isNotNull(),
-                ),
-            ),
-        )
-        return parsed.select(F.explode("out_links").alias("url")).groupBy("url").count()
-
-    for name, fn in [
-        *[(n, qs[n]) for n in AUDIT_QUERIES],
-        ("crawl_round_pass", crawl_round_plan),
-        (
-            "crawl_round_content_dedup",
-            lambda s, sf: crawl_round_plan(s, sf, content_dedup=True),
-        ),
-    ]:
-        df = fn(spark, sf_dir)
+    def section(name: str, df) -> None:
         plan = plan_of(df)
         notes = []
         for pat, why in GOOD.items():
@@ -241,6 +174,15 @@ def main() -> int:
         out.append("\n\n<details><summary>full plan</summary>\n\n```\n")
         out.append(plan.strip()[:6000])
         out.append("\n```\n</details>\n")
+
+    for name in AUDIT_QUERIES:
+        section(name, qs[name](spark, sf_dir))
+    for name, knobs in (
+        ("crawl_round_pass", {}),
+        ("crawl_round_content_dedup", {"content_dedup": True}),
+    ):
+        with second_round_plan(spark, **knobs) as rp:
+            section(name, rp.frontier)
 
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("".join(out))
