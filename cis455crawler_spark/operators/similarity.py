@@ -37,13 +37,14 @@ def topk_two_phase(
     salt_buckets: int = 8,
 ) -> DataFrame:
     """Salted two-phase top-k per `part_col` — the scheduler.pop_host_batches
-    / sketches.kmv_distinct pattern, reused so NO single task ever sorts the
-    corpus for one query: phase 1 ranks within (part, salt) buckets and keeps
-    each bucket's top-k (tasks bounded at corpus/buckets), phase 2 ranks the
-    <= salt_buckets*k survivors per part (bounded input). Lossless for any
-    deterministic total order — a row outside its bucket's top-k cannot be in
-    the part's global top-k. The salt hashes `salt_key` (the unique row key),
-    never the score, so score ties spread across buckets."""
+    pattern, shared by the ANN top-k and sketches.kmv_distinct so NO single
+    task ever sorts the corpus for one query: phase 1 ranks within (part,
+    salt) buckets and keeps each bucket's top-k (tasks bounded at
+    corpus/buckets), phase 2 ranks the <= salt_buckets*k survivors per part
+    (bounded input). Lossless for any deterministic total order — a row
+    outside its bucket's top-k cannot be in the part's global top-k. The
+    salt hashes `salt_key` (the unique row key), never the score, so score
+    ties spread across buckets."""
     salted = df.withColumn(
         "_salt", F.pmod(F.xxhash64(salt_key), F.lit(salt_buckets))
     )

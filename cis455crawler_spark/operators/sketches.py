@@ -18,12 +18,13 @@ distinct keys (then the sketch IS exact).
 Scale shape: "k smallest per group" is a top-k, and a naive
 Window.partitionBy(group) sort puts a 10^8-URL host in ONE task — the
 same straggler the politeness scheduler avoids. So the selection is the
-scheduler's SALTED TWO-PHASE pop (operators/scheduler.py:pop_host_batches
-proof sketch): phase 1 keeps the k smallest per (group, salt) — bounded
-partitions — and phase 2 re-ranks the <= salt_buckets*k survivors per
-group. A row outside its bucket's top-k cannot be in the group's global
-top-k, so the result is exactly the unsalted answer for any k and any
-salt count (bucket-count invariance is pytest-pinned).
+SALTED TWO-PHASE top-k (operators/similarity.py:topk_two_phase; proof
+sketch at operators/scheduler.py:pop_host_batches): phase 1 keeps the k
+smallest per (group, salt) — bounded partitions — and phase 2 re-ranks the
+<= salt_buckets*k survivors per group. A row outside its bucket's top-k
+cannot be in the group's global top-k, so the result is exactly the
+unsalted answer for any k and any salt count (bucket-count invariance is
+pytest-pinned).
 
 The md5-prefix-to-uniform idiom: 13 hex chars = 52 bits fits a double
 exactly (and a BIGINT on both engines); u = conv(prefix,16,10) / 16^13.
@@ -31,8 +32,10 @@ exactly (and a BIGINT on both engines); u = conv(prefix,16,10) / 16^13.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .similarity import topk_two_phase
 
 _HEX_CHARS = 13
 _DENOM = float(16**_HEX_CHARS)
@@ -60,17 +63,7 @@ def kmv_distinct(
         .distinct()
         .withColumn("u", uniform_hash("key"))
     )
-    salted = keyed.withColumn(
-        "_salt", F.pmod(F.xxhash64("key"), F.lit(salt_buckets))
-    )
-    w1 = Window.partitionBy("grp", "_salt").orderBy("u", "key")
-    phase1 = salted.withColumn("_rn1", F.row_number().over(w1)).filter(
-        F.col("_rn1") <= k
-    )
-    w2 = Window.partitionBy("grp").orderBy("u", "key")
-    kept = phase1.withColumn("_rn2", F.row_number().over(w2)).filter(
-        F.col("_rn2") <= k
-    )
+    kept = topk_two_phase(keyed, "grp", ["u", "key"], k, "_rn2", "key", salt_buckets)
     return kept.groupBy("grp").agg(
         F.count("*").alias("n_kept"),
         F.max("u").alias("u_k"),

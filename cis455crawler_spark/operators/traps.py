@@ -25,9 +25,10 @@ aggregate is map-side combinable, and no driver collection happens:
     is_trap           urls_per_content >= ratio_threshold
                       OR max_depth >= depth_threshold
 
-The flagged hosts feed the frontier as a broadcast anti-join (the trap list
-is tiny — it is hosts, not URLs), exactly like the domain blocklist in
-operators/curation.py.
+The crawl's TrapFilter gate (plans/gates.py) applies the same verdict
+(`is_trap_cond`) to a per-host rollup it keeps round by round, and drops the
+flagged hosts' candidates with a broadcast anti-join (the trap list is tiny
+— it is hosts, not URLs).
 """
 
 from __future__ import annotations
@@ -36,14 +37,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cis455crawler_spark.functions.urls import host_of, path_depth
-
-__all__ = [
-    "path_depth",
-    "has_query",
-    "trap_host_stats",
-    "trap_filter_frontier",
-    "is_trap_cond",
-]
 
 
 def has_query(url: Column | str) -> Column:
@@ -105,22 +98,3 @@ def is_trap_cond(ratio_threshold: float, depth_threshold: int) -> Column:
         F.col("max_depth") >= F.lit(depth_threshold)
     )
 
-
-def trap_filter_frontier(
-    frontier: DataFrame,
-    stats: DataFrame,
-    url_col: str = "url",
-) -> DataFrame:
-    """Drop frontier URLs on flagged hosts — broadcast anti-join on host.
-
-    `stats` is trap_host_stats output (or any (host, is_trap) table); only
-    the flagged rows ship, and a host list is small by construction, so the
-    frontier never shuffles.
-    """
-    traps = stats.where(F.col("is_trap") == 1).select("host")
-    tagged = frontier.withColumn("_host", host_of(F.col(url_col)))
-    return (
-        tagged.join(
-            F.broadcast(traps), tagged["_host"] == traps["host"], "left_anti"
-        ).drop("_host")
-    )

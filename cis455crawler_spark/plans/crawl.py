@@ -2,10 +2,14 @@
 
 One round = one DataFrame DAG (SURVEY.md §3.1), replacing the reference's
 20-thread queue loop (XPathCrawlerThread.java:78-266) and master/worker
-round-trip (MasterServlet.java:78-185). plan_round builds that DAG lazily,
-with no Spark action; run_round runs its one action (checkpoint and count
-the next frontier), then the COMMIT. The spine is fixed; the opt-in gates
-(plans/gates.py) plug in at its four capitalized stages:
+round-trip (MasterServlet.java:78-185). Every round reads its frontier and
+seen set from the last committed snapshot and commits the next one, so a
+round run straight after another and a round resumed from a state dir take
+one path, and no DataFrame lives from one round to the next. plan_round
+builds the round's DAG lazily, with no Spark action; run_round runs its one
+action (checkpoint and count the next frontier), then the COMMIT. The spine is
+fixed; the opt-in gates (plans/gates.py) plug in at its four capitalized
+stages:
 
     frontier_r (snapshot scan)
       -> canonicalize + sha1 (JVM cols)                 [O-X1/X2]
@@ -42,10 +46,12 @@ row's warc_ts; unchanged pages answer 304 and reuse stored out_links with
 no re-parse and no rewrite (MERGE semantics: parsed appends + latest-round-
 per-url read via parsed_latest()).
 
-Stop conditions: empty frontier, or total scheduled >= max_pages
-(TotalMaxRequests, Crawler/conf/master/web.xml:22-24), or max_rounds —
-max_pages counts the current generation only (each reference run has its
-own TotalMaxRequests budget).
+Stop conditions, checked before each round against the generation's
+committed history: the last round left an empty frontier (frontier_next
+== 0), or total scheduled >= max_pages (TotalMaxRequests,
+Crawler/conf/master/web.xml:22-24), or max_rounds — max_pages counts the
+current generation only (each reference run has its own TotalMaxRequests
+budget). So resuming a drained crawl commits nothing.
 """
 
 from __future__ import annotations
@@ -367,15 +373,13 @@ def plan_round(
     robots: DataFrame,
     cfg: CrawlConfig,
     round_no: int,
-    frontier: DataFrame | None = None,
     stored: DataFrame | None = None,
 ) -> RoundPlan:
     """The round's DAG up to its one action, built without running a Spark
-    job (the trust gate's TrustRank power steps aside). `frontier` may be
-    passed in-memory by the driver loop (avoids a parquet round-trip);
-    omitted -> read from the snapshot. `stored` (recrawl generations only)
-    is the prior generation's parsed-latest snapshot (url, warc_ts,
-    out_links) answering the 304 If-Modified-Since check."""
+    job (the trust gate's TrustRank power steps aside), from the frontier
+    and seen set of the last committed snapshot. `stored` (recrawl
+    generations only) is the prior generation's parsed-latest snapshot
+    (url, warc_ts, out_links) answering the 304 If-Modified-Since check."""
     caches: list[DataFrame] = []
 
     def _cached(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
@@ -383,8 +387,7 @@ def plan_round(
         caches.append(df)
         return df
 
-    if frontier is None:
-        frontier = store.read("frontier")
+    frontier = store.read("frontier")
     seen = store.read("seen")
     gates = tuple(g(store, cfg, seen, _cached) for g in GATES if g.wanted(cfg))
     deposits = any(g.stage == "deposit" for g in gates)
@@ -539,17 +542,17 @@ def run_round(
     robots: DataFrame,
     cfg: CrawlConfig,
     round_no: int,
-    frontier: DataFrame | None = None,
     stored: DataFrame | None = None,
-) -> tuple[dict, DataFrame]:
-    """One scheduling round: plan_round's DAG, its one action, then the
-    commit. Returns the round's metrics and the next frontier (url, depth
-    [, inlinks]), checkpointed; its blocks are freed by the context
-    cleaner once the caller drops the reference."""
-    plan = plan_round(spark, store, pages, robots, cfg, round_no, frontier, stored)
+) -> dict:
+    """One scheduling round over the last committed snapshot: plan_round's
+    DAG, its one action, then the commit of the next snapshot. Returns the
+    round's metrics; no frame outlives the round."""
+    plan = plan_round(spark, store, pages, robots, cfg, round_no, stored)
     gates, parsed, new_seen = plan.gates, plan.parsed, plan.new_seen
-    # localCheckpoint (not cache): materializes AND truncates lineage, so the
-    # logical plan stays flat across rounds instead of growing exponentially
+    # materialized once for its two consumers, the count and the frontier
+    # write. localCheckpoint, not one more cache: with cache() round_s_p50
+    # rose ~3 % on both crawlbench workloads (BENCH.md). Its blocks are
+    # freed by the context cleaner once the round returns.
     new_frontier = plan.frontier.localCheckpoint(eager=False)
     # the one big action: materializes every cache along the pipeline
     frontier_next = new_frontier.count()
@@ -648,7 +651,7 @@ def run_round(
     )
 
     plan.release()
-    return metrics, new_frontier
+    return metrics
 
 
 def parsed_latest(store: SnapshotStore) -> DataFrame | None:
@@ -739,31 +742,22 @@ def run_crawl(
     gen_hist = _generation_history(store.manifest()["history"])
     total_scheduled = sum(h.get("scheduled", 0) for h in gen_hist)
     round_no = store.current_round() + 1
-    rounds_used = len([h for h in gen_hist if "scheduled" in h])
-    last_round = round_no + (cfg.max_rounds - rounds_used) - 1
     all_metrics = [h for h in gen_hist if "scheduled" in h]
+    last_round = round_no + (cfg.max_rounds - len(all_metrics)) - 1
 
-    # frontier rides in memory between rounds (still committed every round —
-    # resume reads the snapshot; this only skips the happy-path parquet read)
-    frontier_df: DataFrame | None = None
-    while round_no <= last_round:
-        if total_scheduled >= cfg.max_pages:
-            break
+    # every round starts from the last commit, so a fresh, a continued and
+    # a resumed round take the same path; the committed history alone says
+    # whether the frontier has drained
+    while (
+        round_no <= last_round
+        and total_scheduled < cfg.max_pages
+        and not (all_metrics and all_metrics[-1]["frontier_next"] == 0)
+    ):
         t0 = time.time()
-        if frontier_df is None:
-            frontier_df = store.read("frontier")
-            if frontier_df is None:
-                break  # resumed a finished crawl: frontier drained to empty
-        m, next_frontier = run_round(
-            spark, store, pages, robots, cfg, round_no, frontier=frontier_df,
-            stored=stored,
-        )
-        frontier_df = next_frontier
+        m = run_round(spark, store, pages, robots, cfg, round_no, stored)
         m["wall_s"] = round(time.time() - t0, 3)
         all_metrics.append(m)
         total_scheduled += m["scheduled"]
-        if m["frontier_next"] == 0:
-            break
         # parsed compaction is deferred during a recrawl generation: `stored`
         # (the DISK_ONLY prior-gen snapshot) recomputes lost blocks from the
         # ORIGINAL parquet paths, which compact() deletes — an executor loss

@@ -316,32 +316,35 @@ class ContentDedup(Gate):
     per_generation = ("content_seen",)
 
     def route(self, routed: DataFrame) -> DataFrame:
-        # the filter split and claims aggregate fork this lineage three ways;
-        # uncached, each fork re-runs the fetch join and the md5 over html.
-        # DISK_ONLY, never in-heap: the html column in executor memory makes
-        # GC cost scale with mutator threads (the measured core-scaling
-        # inversion, BENCH.md).
+        # the claims aggregate forks this lineage; uncached, each fork re-runs
+        # the fetch join and the md5 over html. DISK_ONLY, never in-heap: the
+        # html column in executor memory makes GC cost scale with mutator
+        # threads (the measured core-scaling inversion, BENCH.md).
         routed = self.cached(routed, StorageLevel.DISK_ONLY)
-        # NULL-digest rows (misses/redirects/rejects, often the bulk) stay out
-        # of the digest shuffle: hash(NULL) would pile them into ONE partition
-        with_dig = routed.filter(F.col("digest").isNotNull())
-        no_dig = routed.filter(F.col("digest").isNull())
+        # one join path on a key that is never NULL: a row with no digest
+        # (miss, redirect, reject; often the bulk) keys on its own url, which
+        # never equals a 32-hex md5 nor another row's url, so it claims
+        # nothing, matches no content_seen row and spreads over the shuffle
+        # (hash(NULL) would pile those rows into ONE partition)
+        keyed = routed.withColumn("_dkey", F.coalesce(F.col("digest"), F.col("url")))
         cs = self.store.read("content_seen")
         if cs is not None:
             # digest-unique by construction (only claimed, previously unknown
             # digests are appended), so the left join cannot fan rows out
-            with_dig = with_dig.join(
-                cs.select("digest").withColumn("_dup_known", F.lit(True)), "digest", "left"
+            keyed = keyed.join(
+                cs.select(F.col("digest").alias("_dkey"), F.lit(True).alias("_dup_known")),
+                "_dkey",
+                "left",
             )
         else:
-            with_dig = with_dig.withColumn("_dup_known", F.lit(None).cast("boolean"))
+            keyed = keyed.withColumn("_dup_known", F.lit(None).cast("boolean"))
         # in-batch claim: the smallest URL per digest wins — a map-side-
         # combinable min aggregate + join-back, NEVER a digest window (a mirror
         # body fetched under 10^6 URLs in one round would land its whole
         # duplicate set in one window task)
-        claims = with_dig.groupBy("digest").agg(F.min("url").alias("_claim_url"))
-        with_dig = (
-            with_dig.join(claims, "digest")
+        claims = keyed.groupBy("_dkey").agg(F.min("url").alias("_claim_url"))
+        return (
+            keyed.join(claims, "_dkey")
             .withColumn(
                 "action",
                 F.when(
@@ -350,9 +353,8 @@ class ContentDedup(Gate):
                     F.lit("content_dup"),
                 ).otherwise(F.col("action")),
             )
-            .drop("_dup_known", "_claim_url")
+            .drop("_dkey", "_dup_known", "_claim_url")
         )
-        return with_dig.unionByName(no_dig)
 
     def commit(self, parsed: DataFrame, new_seen: DataFrame) -> tuple[dict, dict]:
         # the digests that parsed this round: each claimed in-batch and

@@ -311,13 +311,6 @@ def stream_warc_ingest(
         )
         doc_ts = store.read("doc_ts")
         state = store.read(STATS_TABLE)
-        if state is not None and "warc_ts" in state.columns:
-            # heal a pre-doc_ts state layout (watermarks used to ride inside
-            # the stats rows): split them out once, then drop the column so
-            # the schema matches run_incremental_index's
-            if doc_ts is None:
-                doc_ts = state.groupBy("doc_id").agg(F.max("warc_ts").alias("warc_ts"))
-            state = state.drop("warc_ts")
         if doc_ts is None:
             winners = cand
         else:

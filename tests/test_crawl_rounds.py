@@ -119,8 +119,10 @@ def test_text_byte_identical(spark, corpus, tmp_path):
 
 def test_run_crawl_driver_loop(spark, corpus, oracle_res, tmp_path):
     """The driver loop matches the oracle, also when it compacts seen and
-    expires all but the newest snapshot every round; expiry then leaves no
-    data dir on disk that the manifest does not reference."""
+    expires all but the newest snapshot every round, the draining round
+    included; expiry then leaves one snapshot, one seen dir and no data dir
+    on disk that the manifest does not reference. Resuming the drained
+    crawl commits nothing and returns the rounds committed before it."""
     _, pages = corpus
     for cfg in (
         CrawlConfig(max_rounds=MAX_ROUNDS, compact_every=4),
@@ -141,9 +143,16 @@ def test_run_crawl_driver_loop(spark, corpus, oracle_res, tmp_path):
         assert all(set(h) == BASE_METRIC_KEYS for h in rounds)
         assert set(store.read("metrics").columns) == BASE_METRIC_KEYS
         if cfg.expire_keep_snapshots:
-            assert len(manifest["snapshots"]) < len(metrics)  # expiry ran
+            assert len(manifest["snapshots"]) == 1
+            assert len(manifest["tables"]["seen"]) == 1
             on_disk, referenced = _dirs_on_disk_and_referenced(store)
             assert on_disk == referenced
+        assert metrics[-1]["frontier_next"] == 0
+        store, again = run_crawl(
+            spark, pages, seed_urls(SPEC), str(state), cfg, resume=True
+        )
+        assert store.manifest() == manifest
+        assert again == [{k: v for k, v in m.items() if k != "wall_s"} for m in metrics]
 
 
 def test_fetch_routing_exercised(oracle_res):

@@ -7,7 +7,8 @@ Static AST fixpoint, no Spark: the callers' references (names, attribute
 names, import aliases, and identifier-shaped string constants, which catch
 dispatch by string) seed the reached set; a reached definition's body adds
 its own references, until nothing changes. Module-level statements of the
-package that define nothing (they run at import) count as callers too.
+package that define nothing (they run at import) count as callers too,
+except an `__all__` list, which names code but runs none.
 Names are matched without their module, so a name defined twice is reached
 through either; that can only hide dead code, never report live code as
 dead. An ALLOWED entry keeps its definition and what that reaches."""
@@ -98,6 +99,8 @@ def _scan_package() -> tuple[dict[str, list[tuple[str, ast.AST]]], set[str]]:
                 elif isinstance(st, (ast.Assign, ast.AnnAssign)):
                     targets = st.targets if isinstance(st, ast.Assign) else [st.target]
                     names = [t.id for t in targets if isinstance(t, ast.Name)]
+                    if names == ["__all__"]:
+                        continue  # an export list names code, it runs none
                 else:
                     names = []
                 names = [n for n in names if not n.startswith("__")]

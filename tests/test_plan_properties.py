@@ -104,9 +104,9 @@ def test_crawl_round_dag_properties(spark):
     sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
     from explain_audit import second_round_plan
 
-    # parse nodes in `parsed`'s build plan: ContentDedup's digest split is a
-    # Union of two disjoint row sets, and Spark pushes the UDF into each side
-    for knobs, n_parse in (({}, 1), ({"content_dedup": True}, 2)):
+    # one parse node in `parsed`'s build plan with either config:
+    # ContentDedup keeps every row on one join path
+    for knobs in ({}, {"content_dedup": True}):
         with second_round_plan(spark, **knobs) as rp:
             plan = _formatted(rp.frontier)
             assert "CartesianProduct" not in plan, knobs
@@ -115,8 +115,8 @@ def test_crawl_round_dag_properties(spark):
             assert len(re.findall(r"^\(\d+\) BroadcastHashJoin", plan, re.M)) >= 3, knobs
             # one parse per page: the links explode and the seen append scan
             # the cached `parsed`, so the round adds no eval of its own
-            assert _parse_evals(rp.parsed) == n_parse, knobs
-            assert _parse_evals(rp.frontier) == n_parse, knobs
+            assert _parse_evals(rp.parsed) == 1, knobs
+            assert _parse_evals(rp.frontier) == 1, knobs
 
             # KNOWN CATALYST SHAPE: explode over a UDF-derived array splits
             # into a size>0 Filter + Generate pair and EACH gets its own UDF
@@ -125,4 +125,4 @@ def test_crawl_round_dag_properties(spark):
             # Spark upgrade that fixes it surfaces here.
             rp.release()
             links = rp.parsed.select(F.explode("out_links").alias("url"))
-            assert _parse_evals(links) == 2 * n_parse, knobs
+            assert _parse_evals(links) == 2, knobs

@@ -11,11 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cis455crawler_spark.operators.recrawl import change_rate_poisson
-from cis455crawler_spark.operators.traps import (
-    path_depth,
-    trap_filter_frontier,
-    trap_host_stats,
-)
+from cis455crawler_spark.operators.traps import path_depth, trap_host_stats
 
 
 @pytest.mark.parametrize(
@@ -64,23 +60,6 @@ def test_trap_host_stats_flags_both_signals(spark):
     ok = out["ok.test"]
     assert ok["is_trap"] == 0
     assert (ok["n_urls"], ok["n_content"], ok["query_frac"]) == (4, 4, 0.0)
-
-
-def test_trap_filter_frontier_drops_only_trap_hosts(spark):
-    log = spark.createDataFrame(
-        [(f"http://bad.test/p?s={i}", "same") for i in range(8)]
-        + [("http://good.test/a", "x"), ("http://good.test/b", "y")],
-        "url string, content_fp string",
-    )
-    stats = trap_host_stats(log)
-    frontier = spark.createDataFrame(
-        [("http://bad.test/new",), ("http://good.test/new",), ("http://new.test/",)],
-        "url string",
-    )
-    kept = sorted(
-        r["url"] for r in trap_filter_frontier(frontier, stats).collect()
-    )
-    assert kept == ["http://good.test/new", "http://new.test/"]
 
 
 def _lam(n: int, x: int, dt_days: float) -> float:

@@ -2,8 +2,8 @@
 the crawl round's own DAG (plans/crawl.py plan_round), grepping the
 properties that matter at 100 TB — PushedFilters (predicate pushdown
 reached the scan), ReadSchema (column pruning), BroadcastHashJoin (small
-dims broadcast), WholeStageCodegen spans (JVM-side execution), and flagging
-CartesianProduct / row-at-a-time Python.
+dims broadcast), and flagging CartesianProduct / row-at-a-time Python. Each
+count is of distinct plan nodes, not of text matches.
 
 Writes PLANS.md. Usage: python tools/explain_audit.py [sf_dir]
 """
@@ -93,14 +93,14 @@ AUDIT_QUERIES = [
     "anchor_consensus_graph",
 ]
 
+# matched against each node's detail block, which starts with the node name
 GOOD = {
-    "PushedFilters: \\[[^]]": "predicate pushdown reached the parquet scan",
-    "BroadcastHashJoin": "small side broadcast (no shuffle of the big side)",
-    "WholeStageCodegen": "JVM whole-stage codegen",
+    r"^PushedFilters: \[[^]]": "predicate pushdown reached the parquet scan",
+    r"\ABroadcastHashJoin\b": "small side broadcast (no shuffle of the big side)",
 }
 BAD = {
-    "CartesianProduct": "cartesian product (O(n*m) — only acceptable on tiny×broadcast)",
-    "BatchEvalPython": "row-at-a-time Python UDF in plan",
+    r"\ACartesianProduct\b": "cartesian product (O(n*m) — only acceptable on tiny×broadcast)",
+    r"\ABatchEvalPython\b": "row-at-a-time Python UDF in plan",
 }
 
 
@@ -109,6 +109,17 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def plan_nodes(plan: str) -> list[str]:
+    """The detail block of each distinct node of a formatted plan, in plan
+    order. The text names a node in the tree, again in its detail block,
+    and draws a cached relation's build plan once more under every scan of
+    it, so only distinct `(n) Name` ids are nodes."""
+    blocks: dict[str, str] = {}
+    for node_id, block in re.findall(r"^\((\d+)\) (.*?)(?=\n\n|\Z)", plan, re.M | re.S):
+        blocks.setdefault(node_id, block)
+    return list(blocks.values())
 
 
 @contextmanager
@@ -155,17 +166,15 @@ def main() -> int:
 
     def section(name: str, df) -> None:
         plan = plan_of(df)
+        nodes = plan_nodes(plan)
         notes = []
-        for pat, why in GOOD.items():
-            n = len(re.findall(pat, plan))
-            if n:
-                notes.append(f"+ {why} (x{n})")
-        for pat, why in BAD.items():
-            n = len(re.findall(pat, plan))
-            if n:
-                notes.append(f"! {why} (x{n})")
+        for sign, pats in (("+", GOOD), ("!", BAD)):
+            for pat, why in pats.items():
+                n = sum(1 for b in nodes if re.search(pat, b, re.M))
+                if n:
+                    notes.append(f"{sign} {why} (x{n})")
         # scans reading few columns = pruning worked
-        reads = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+        reads = [r for b in nodes for r in re.findall(r"ReadSchema: struct<([^>]*)>", b)]
         for r in reads[:4]:
             ncols = 0 if not r.strip() else r.count(",") + 1
             notes.append(f"+ scan reads {ncols} column(s)")
