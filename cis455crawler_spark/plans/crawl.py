@@ -39,12 +39,13 @@ politeness-deferred URLs are NOT (they are re-enqueued, :443-447), and
 Only action='parse' rows are written to the parsed table (writeToDB,
 :254-259); rejects/redirects/misses leave no document behind.
 
-Conditional recrawl (If-Modified-Since, :129-146): run_crawl(recrawl=True)
-starts a new crawl generation — frontier reset to seeds, seen-set emptied,
-parsed kept. Each fetch compares the page's warc_ts against the stored
-row's warc_ts; unchanged pages answer 304 and reuse stored out_links with
-no re-parse and no rewrite (MERGE semantics: parsed appends + latest-round-
-per-url read via parsed_latest()).
+A generation starts with one commit (init_crawl): phase "init" on a fresh
+store, else phase "recrawl" (If-Modified-Since, :129-146) — frontier reset
+to seeds, seen and the gates' per-generation tables dropped, parsed kept.
+Unchanged pages (warc_ts not past the stored row's) answer 304 and reuse
+stored out_links: no re-parse, no rewrite (MERGE: parsed appends, read via
+parsed_latest()). Every run_crawl call of a recrawl generation, a resumed
+one too, loads that 304 snapshot.
 
 Stop conditions, checked before each round against the generation's
 committed history: the last round left an empty frontier (frontier_next
@@ -183,16 +184,20 @@ def _with_url_cols(df: DataFrame, num_buckets: int) -> DataFrame:
     return df.withColumn("bucket", url_hash_bucket("url_hash", num_buckets))
 
 
-def _seed_generation(
-    spark: SparkSession, seeds: list[str], extra_seed_df: DataFrame | None = None
-) -> dict[str, DataFrame]:
-    """The tables that start a crawl generation, shared by fresh inits and
-    recrawls so seed semantics cannot diverge between them: frontier = the
+def init_crawl(
+    spark: SparkSession,
+    store: SnapshotStore,
+    seeds: list[str],
+    cfg: CrawlConfig,
+    extra_seed_df: DataFrame | None = None,
+) -> None:
+    """Start a crawl generation with one commit: round 0, phase "init", on
+    a fresh store, else the next round, phase "recrawl". frontier = the
     explicit seed list (MasterServlet.java:305-311), optionally unioned with
     a distributed extra-seed DataFrame (url STRING — the sitemap-discovery
-    path, which never passes through the driver), and seed_hosts (the trust
-    teleport set: tiny, always committed so the knob can toggle on
-    mid-crawl)."""
+    path, which never passes through the driver); seed_hosts = the trust
+    teleport set (tiny, always committed so the knob can toggle on
+    mid-crawl). The same swap drops seen and the per-generation tables."""
     frontier0 = spark.createDataFrame(
         [(u, 0) for u in dict.fromkeys(seeds)], schema="url string, depth int"
     )
@@ -201,19 +206,12 @@ def _seed_generation(
             extra_seed_df.select(F.col("url"), F.lit(0).alias("depth"))
         ).dropDuplicates(["url"])
     hosts = frontier0.select(host_of(F.col("url")).alias("host")).distinct()
-    return {"frontier": frontier0, "seed_hosts": hosts}
-
-
-def init_crawl(
-    spark: SparkSession,
-    store: SnapshotStore,
-    seeds: list[str],
-    cfg: CrawlConfig,
-    extra_seed_df: DataFrame | None = None,
-) -> None:
-    """Round-0 snapshot of a fresh crawl."""
+    resets = dict.fromkeys(["seen", *(t for g in GATES for t in g.per_generation)])
+    round_no = store.current_round() + 1
     store.commit_round(
-        0, replaces=_seed_generation(spark, seeds, extra_seed_df), extra={"phase": "init"}
+        round_no,
+        replaces={"frontier": frontier0, "seed_hosts": hosts, **resets},
+        extra={"phase": "recrawl" if round_no else "init"},
     )
 
 
@@ -684,9 +682,10 @@ def run_crawl(
     """Drive rounds until a stop condition. With resume=True, continue from
     the last committed snapshot (no re-fetch of completed rounds). With
     recrawl=True (existing state dir), start a NEW crawl generation over the
-    stored documents: frontier reset to seeds, seen-set emptied, parsed
-    kept — unchanged pages (warc_ts not advanced) answer 304 and reuse
-    their stored out_links; changed pages re-fetch and MERGE-upsert."""
+    stored documents (init_crawl): frontier reset to seeds, seen set and
+    per-generation gate tables dropped, parsed kept — in that generation,
+    resumed or not, unchanged pages (warc_ts not advanced) answer 304 and
+    reuse their stored out_links; changed pages re-fetch and MERGE-upsert."""
     cfg = cfg or CrawlConfig()
     store = SnapshotStore(spark, state_dir)
     stored: DataFrame | None = None
@@ -703,47 +702,40 @@ def run_crawl(
     ).cache()
     robots.count()
 
-    sitemap_seed_df: DataFrame | None = None
-    if cfg.seed_from_sitemaps and (store.current_round() < 0 or recrawl):
-        from ..sources.sitemaps import default_sitemap_urls, expand_sitemaps
+    if store.current_round() < 0 or recrawl:
+        sitemap_seed_df: DataFrame | None = None
+        if cfg.seed_from_sitemaps:
+            from ..sources.sitemaps import default_sitemap_urls, expand_sitemaps
 
-        sitemap_seed_df = (
-            expand_sitemaps(pages, default_sitemap_urls(robots))
-            .select(F.col("seed_url").alias("url"))
-            .distinct()
-        )
-
-    if store.current_round() < 0:
+            sitemap_seed_df = (
+                expand_sitemaps(pages, default_sitemap_urls(robots))
+                .select(F.col("seed_url").alias("url"))
+                .distinct()
+            )
         init_crawl(spark, store, seeds, cfg, extra_seed_df=sitemap_seed_df)
-    elif recrawl:
+
+    # max_pages / max_rounds / metrics are per-generation (each reference
+    # run has its own TotalMaxRequests budget and round count)
+    history = store.manifest()["history"]
+    gen_hist = _generation_history(history)
+    total_scheduled = sum(h.get("scheduled", 0) for h in gen_hist)
+    round_no = store.current_round() + 1
+    all_metrics = [h for h in gen_hist if "scheduled" in h]
+    last_round = round_no + (cfg.max_rounds - len(all_metrics)) - 1
+
+    # every call that runs rounds of a recrawl generation (a resume too)
+    # loads its 304 snapshot; the rows this generation re-parsed are of urls
+    # it has seen, which no later round of it schedules again
+    starts = [h["phase"] for h in history if h.get("phase") in ("init", "recrawl")]
+    if starts and starts[-1] == "recrawl":
         stored = parsed_latest(store)
         if stored is not None:
-            # snapshot of the PRIOR generation's docs; DISK_ONLY — html-wide
+            # the stored docs, persisted DISK_ONLY — html-wide
             # columns are pruned out, but text can still be multi-GB in-heap
             stored = stored.select("url", "warc_ts", "out_links").persist(
                 StorageLevel.DISK_ONLY
             )
             stored.count()
-        empty_seen = spark.createDataFrame(
-            [], schema="url_hash string, url string, bucket int"
-        )
-        store.commit_round(
-            store.current_round() + 1,
-            replaces={**_seed_generation(spark, seeds, sitemap_seed_df), "seen": empty_seen},
-            extra={"phase": "recrawl"},
-        )
-        # the gates' per-generation tables describe the previous
-        # generation's seen set, which a recrawl resets
-        for table in (t for g in GATES for t in g.per_generation):
-            store.drop_table(table)
-
-    # max_pages / max_rounds / metrics are per-generation (each reference
-    # run has its own TotalMaxRequests budget and round count)
-    gen_hist = _generation_history(store.manifest()["history"])
-    total_scheduled = sum(h.get("scheduled", 0) for h in gen_hist)
-    round_no = store.current_round() + 1
-    all_metrics = [h for h in gen_hist if "scheduled" in h]
-    last_round = round_no + (cfg.max_rounds - len(all_metrics)) - 1
 
     # every round starts from the last commit, so a fresh, a continued and
     # a resumed round take the same path; the committed history alone says

@@ -103,7 +103,7 @@ class Gate:
     digest = False  # reads the parse-routed body digest column
     actions = ()  # extra routing actions the route hook assigns
     bucketed = ()  # appended tables that take the seen bucket layout
-    per_generation = ()  # tables that describe one generation's seen set
+    per_generation = ()  # one generation's seen-set tables; init_crawl drops them
 
     def counters(self) -> list[DataFrame]:
         """1-row aggregates of cached frames for the round's one stats job."""

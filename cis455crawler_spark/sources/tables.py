@@ -15,7 +15,9 @@ real cluster:
     still-retained round (Iceberg `VERSION AS OF`); `expire_snapshots`
     prunes old snapshot entries and deletes data dirs no retained snapshot
     references (Iceberg expire_snapshots + remove_orphan_files — and the
-    only mechanism that reclaims replaced frontier dirs).
+    only mechanism that reclaims replaced frontier dirs and dropped tables,
+    e.g. the seen set a recrawl resets; a retain-all store keeps time
+    travel into the previous generation).
   * the seen table is written partitioned by a url-hash bucket column (the
     layout of `PARTITIONED BY (bucket(N, url_hash))` in Iceberg). Reads
     union plain dirs, so the frontier anti-join does not see that layout:
@@ -112,14 +114,15 @@ class SnapshotStore:
         self,
         round_no: int,
         appends: dict[str, DataFrame] | None = None,
-        replaces: dict[str, DataFrame] | None = None,
+        replaces: dict[str, DataFrame | None] | None = None,
         partition_by: dict[str, list[str]] | None = None,
     ):
         """Phase 1 of a two-phase commit: kick off every Spark table write
         on background driver threads and return a handle. Nothing becomes
         visible until finish_commit swaps the manifest — callers use the
         overlap to run driver-side work (e.g. the metrics aggregate)
-        concurrently with the writes."""
+        concurrently with the writes. A `replaces` entry of None drops that
+        table from the new snapshot (its dirs stay until expire_snapshots)."""
         from concurrent.futures import ThreadPoolExecutor
 
         partition_by = partition_by or {}
@@ -128,7 +131,9 @@ class SnapshotStore:
         # failure cleanup — only the manifest makes data visible, so any of
         # these can be rmtree'd if the commit aborts
 
-        def _write(table: str, df: DataFrame) -> str:
+        def _write(table: str, df: DataFrame | None) -> str | None:
+            if df is None:
+                return None
             rel = f"{table}/r{round_no}_{uuid.uuid4().hex[:8]}"
             attempted.append(rel)
             writer = df.write.mode("overwrite")
@@ -176,7 +181,10 @@ class SnapshotStore:
         for table, pdf in (small_appends or {}).items():
             tables.setdefault(table, []).append(self._write_small_dir(round_no, table, pdf))
         for table, rel in replace_rels:
-            tables[table] = [rel]
+            if rel is None:
+                tables.pop(table, None)
+            else:
+                tables[table] = [rel]
 
         new_manifest = {
             "round": round_no,
@@ -215,7 +223,7 @@ class SnapshotStore:
         self,
         round_no: int,
         appends: dict[str, DataFrame] | None = None,
-        replaces: dict[str, DataFrame] | None = None,
+        replaces: dict[str, DataFrame | None] | None = None,
         partition_by: dict[str, list[str]] | None = None,
         extra: dict | None = None,
         small_appends: dict | None = None,
@@ -253,8 +261,9 @@ class SnapshotStore:
         """Retain only the newest `keep_last` snapshot entries (the current
         round's state is always kept) and delete every data dir that no
         retained snapshot references — Iceberg expire_snapshots +
-        remove_orphan_files. This is what reclaims replaced frontier dirs
-        and pre-compaction seen/parsed deltas. Returns the deleted dirs.
+        remove_orphan_files. This is what reclaims replaced frontier dirs,
+        dropped tables and pre-compaction seen/parsed deltas. Returns the
+        deleted dirs.
 
         Must not run concurrently with an in-flight begin_commit: phase-1
         write dirs are on disk but not yet in any manifest, so they would
@@ -265,11 +274,10 @@ class SnapshotStore:
         kept = {str(r): snaps[str(r)] for r in keep_rounds}
         kept[str(m["round"])] = m["tables"]
         referenced = {d for snap in kept.values() for ds in snap.values() for d in ds}
-        referenced |= {d for ds in m["tables"].values() for d in ds}
-        # candidate dirs: every table-level child dir on disk (layout is
-        # <root>/<table>/<round-or-compact dir>); manifest files are skipped
+        # candidate dirs: every child dir on disk (<root>/<table>/<dir>) of
+        # every table any snapshot named before pruning, dropped ones too
         doomed: list[str] = []
-        for table in sorted({rel.split("/", 1)[0] for rel in referenced} | set(m["tables"])):
+        for table in sorted({t for snap in [*snaps.values(), m["tables"]] for t in snap}):
             tdir = os.path.join(self.root, table)
             if not os.path.isdir(tdir):
                 continue
@@ -282,15 +290,6 @@ class SnapshotStore:
         for rel in doomed:
             shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
         return doomed
-
-    def drop_table(self, table: str) -> None:
-        """Remove a table from the manifest (and its dirs from disk)."""
-        m = self.manifest()
-        if table not in m["tables"]:
-            return
-        tables = dict(m["tables"])
-        old_dirs = tables.pop(table)
-        self._swap_tables(tables, old_dirs)
 
     def compact(self, table: str, partition_cols: list[str] | None = None) -> None:
         """Rewrite an append-table's many delta dirs into one (Iceberg

@@ -45,6 +45,21 @@ def _dirs_on_disk_and_referenced(store) -> tuple[set[str], set[str]]:
     return on_disk, referenced
 
 
+def _bumped(spark, pdf):
+    """Corpus v2 for a recrawl: warc_ts bumped one day for a deterministic
+    ~50% slice of the pages."""
+    import pandas as pd
+
+    from .oracle import o_md5
+
+    pdf2 = pdf.copy()
+    changed = pdf2["url"].map(lambda u: o_md5(u)[2] in "01234567")
+    pdf2.loc[changed, "warc_ts"] = pdf2.loc[changed, "warc_ts"] + pd.Timedelta(days=1)
+    return pdf2, spark.createDataFrame(
+        pdf2, schema="url string, warc_ts timestamp, html binary, text string, lang string"
+    )
+
+
 @pytest.fixture(scope="module")
 def corpus(spark):
     pdf = generate_pages_pdf(SPEC)
@@ -199,21 +214,13 @@ def test_recrawl_304_reuse(spark, corpus, oracle_res, tmp_path):
     import pandas as pd
 
     from cis455crawler_spark.plans.crawl import parsed_latest
-    from .oracle import o_md5
 
     pdf, pages = corpus
     state = str(tmp_path / "state_recrawl")
     cfg = CrawlConfig(max_rounds=MAX_ROUNDS, compact_every=0)
     run_crawl(spark, pages, seed_urls(SPEC), state, cfg)
 
-    # corpus v2: bump warc_ts one day for a deterministic ~50% slice
-    pdf2 = pdf.copy()
-    changed = pdf2["url"].map(lambda u: o_md5(u)[2] in "01234567")
-    pdf2.loc[changed, "warc_ts"] = pdf2.loc[changed, "warc_ts"] + pd.Timedelta(days=1)
-    pages2 = spark.createDataFrame(
-        pdf2, schema="url string, warc_ts timestamp, html binary, text string, lang string"
-    )
-
+    pdf2, pages2 = _bumped(spark, pdf)
     store, m2 = run_crawl(spark, pages2, seed_urls(SPEC), state, cfg, recrawl=True)
 
     # chained oracle: gen-1 docs + gen-1 timestamps form the stored state
@@ -244,6 +251,111 @@ def test_recrawl_304_reuse(spark, corpus, oracle_res, tmp_path):
         want_ts = ts2[u] if (u in want.docs) else ts1[u]
         assert pd.Timestamp(ts) == pd.Timestamp(want_ts), u
     assert len(refetched) > 0
+
+
+def test_recrawl_resumed_or_killed_matches_uninterrupted(spark, tmp_path, monkeypatch):
+    """A recrawl generation with both gates that keep per-generation tables
+    (host quota and content dedup), compacting and expiring every round,
+    reaches one state however it runs: (a) uninterrupted, (b) stopped after
+    2 rounds then resumed, (c) killed at its first round's manifest swap,
+    right after the generation-start commit, then resumed. (b) and (c)
+    equal (a) in every round's metrics, the seen set and parsed_latest; (a)
+    equals the chained oracle. Every store holds exactly the data dirs its
+    manifest references, also after a third generation with the gates off,
+    whose expiry must reclaim the gate tables its start dropped."""
+    import shutil
+
+    from cis455crawler_spark.plans.crawl import parsed_latest
+
+    spec = CorpusSpec(hosts=6, pages_per_host=12, seed=5)
+    pdf = generate_pages_pdf(spec)
+    pages = spark.createDataFrame(
+        pdf, schema="url string, warc_ts timestamp, html binary, text string, lang string"
+    )
+    seeds = seed_urls(spec)
+    quota = 8
+
+    def cfg(rounds: int, gates: bool = True) -> CrawlConfig:
+        return CrawlConfig(
+            max_rounds=rounds, compact_every=1, expire_keep_snapshots=1,
+            max_urls_per_host=quota if gates else None, content_dedup=gates,
+        )
+
+    gen1 = str(tmp_path / "gen1")
+    run_crawl(spark, pages, seeds, gen1, cfg(MAX_ROUNDS))
+    states = {k: str(tmp_path / k) for k in "abc"}
+    for state in states.values():
+        shutil.copytree(gen1, state)
+    pdf2, pages2 = _bumped(spark, pdf)
+
+    def outcome(store, metrics: list[dict]) -> tuple:
+        seen = {r["url_hash"] for r in store.read("seen").select("url_hash").collect()}
+        latest = parsed_latest(store).select(
+            "url", "url_hash", "depth", "title", "text", "out_links", "warc_ts", "round"
+        )
+        rounds = [{k: v for k, v in m.items() if k != "wall_s"} for m in metrics]
+        return rounds, seen, sorted(tuple(r) for r in latest.collect())
+
+    # (a) uninterrupted
+    store, m2 = run_crawl(spark, pages2, seeds, states["a"], cfg(MAX_ROUNDS), recrawl=True)
+    want = outcome(store, m2)
+    # (b) stopped after 2 rounds, then resumed
+    run_crawl(spark, pages2, seeds, states["b"], cfg(2), recrawl=True)
+    got = {"b": outcome(*run_crawl(spark, pages2, seeds, states["b"], cfg(MAX_ROUNDS), resume=True))}
+
+    # (c) the process dies at gen 2's second manifest swap, round 1's commit
+    class Killed(Exception):
+        pass
+
+    write_manifest = SnapshotStore._write_manifest
+    calls = []
+
+    def dying_write_manifest(store, m):
+        calls.append(m["round"])
+        if len(calls) == 2:
+            raise Killed
+        write_manifest(store, m)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(SnapshotStore, "_write_manifest", dying_write_manifest)
+        with pytest.raises(Killed):
+            run_crawl(spark, pages2, seeds, states["c"], cfg(MAX_ROUNDS), recrawl=True)
+    got["c"] = outcome(*run_crawl(spark, pages2, seeds, states["c"], cfg(MAX_ROUNDS), resume=True))
+
+    for k, (rounds, seen, latest) in got.items():
+        assert rounds == want[0], k
+        assert seen == want[1], k
+        assert latest == want[2], k
+
+    # (a) against the chained oracle: gen-1 docs and timestamps are stored
+    page_map = dict(zip(pdf["url"], pdf["html"]))
+    gates = {"max_urls_per_host": quota, "content_dedup": True}
+    want1 = oracle_crawl(page_map, seeds, max_rounds=MAX_ROUNDS, **gates)
+    ts1 = dict(zip(pdf["url"], pdf["warc_ts"]))
+    want2 = oracle_crawl(
+        dict(zip(pdf2["url"], pdf2["html"])),
+        seeds,
+        max_rounds=MAX_ROUNDS,
+        stored={u: (ts1[u], links) for u, links in want1.docs.items()},
+        pages_ts=dict(zip(pdf2["url"], pdf2["warc_ts"])),
+        **gates,
+    )
+    assert len(m2) == len(want2.metrics)
+    for row, exp in zip(m2, want2.metrics):
+        for key in exp.keys() - {"round"}:
+            assert row[key] == exp[key], (row["round"], key)
+    assert sum(m["not_modified"] for m in m2) > 0
+    assert sum(m["parsed_pages"] for m in m2) > 0
+    assert sum(m["quota_dropped"] for m in m2) > 0
+    assert want[1] == want2.seen
+
+    # a third generation with the gates off drops host_counts and
+    # content_seen for good; expiry reclaims their dirs
+    store, _ = run_crawl(spark, pages2, seeds, states["a"], cfg(1, gates=False), recrawl=True)
+    assert not {"host_counts", "content_seen"} & set(store.manifest()["tables"])
+    for state in states.values():
+        on_disk, referenced = _dirs_on_disk_and_referenced(SnapshotStore(spark, state))
+        assert on_disk == referenced, state
 
 
 def test_commit_failure_cleans_orphans_and_resumes(spark, tmp_path):

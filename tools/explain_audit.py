@@ -104,11 +104,24 @@ BAD = {
 }
 
 
+# ids a plan gets anew in every run: expression ids (`url#1234`), plan ids
+# and RDD ids. Normalized (as Spark's own plan-stability suite does) so
+# that regenerating unchanged plans leaves PLANS.md unchanged.
+RUN_IDS = (
+    (r"#\d+", "#x"),
+    (r"plan_id=\d+", "plan_id=x"),
+    (r"RDD\[\d+\]", "RDD[x]"),
+)
+
+
 def plan_of(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue()
+    plan = buf.getvalue()
+    for pat, repl in RUN_IDS:
+        plan = re.sub(pat, repl, plan)
+    return plan
 
 
 def plan_nodes(plan: str) -> list[str]:
