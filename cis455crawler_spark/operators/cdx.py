@@ -8,9 +8,9 @@ makes a 100-TB page store *navigable*.
 
 All pure JVM Column expressions (codegen; zero Python). At scale, write the
 output sorted WITHIN files by surt_key and range-partitioned BY surt_key
-(repartitionByRange + sortWithinPartitions — the layout below), so domain
-range scans prune to a handful of files — the parquet analogue of the
-.cdx.gz shard + cluster.idx layout Common Crawl publishes.
+(repartitionByRange + sortWithinPartitions), so domain range scans prune to
+a handful of files — the parquet analogue of the .cdx.gz shard +
+cluster.idx layout Common Crawl publishes.
 """
 
 from __future__ import annotations
@@ -63,9 +63,8 @@ def cdx_index(
     matches the reference's SHA-1 content keys (XPathCrawler.java:296-331);
     'md5' is offered because the DuckDB oracle lacks sha1 (both hash the raw
     html bytes directly — no string round-trip). Pass sort=False when the
-    consumer imposes its own order — in particular write_cdx, whose range
-    partitioning would otherwise pay a second full shuffle-sort on top of
-    this one."""
+    consumer imposes its own order (a range-partitioned write would
+    otherwise pay a second full shuffle-sort on top of this one)."""
     dig = {"sha1": F.sha1, "md5": F.md5}[digest]
     cols = [
         surt_key(F.col(url_col)).alias("surt_key"),
@@ -77,15 +76,3 @@ def cdx_index(
     out = pages.select(*cols)
     return out.orderBy("surt_key", "url") if sort else out
 
-
-def write_cdx(df: DataFrame, path: str, num_shards: int = 32) -> None:
-    """Range-partitioned, within-file-sorted parquet layout: a reader doing a
-    surt prefix scan touches only the shards whose [min,max] surt range
-    intersects the prefix (parquet row-group stats prune the rest). Feed it
-    cdx_index(..., sort=False) — this write imposes the order itself."""
-    (
-        df.repartitionByRange(num_shards, "surt_key")
-        .sortWithinPartitions("surt_key", "url")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -3,8 +3,8 @@
 Re-expresses the reference's membership check — in-memory TreeSet probe
 before the BerkeleyDB get (XPathCrawlerThread.java:357-366,370-375) — as one
 Spark left-anti join on `url_hash` (40-char sha1 hex). The seen table is
-written partitioned by a bucket id (url_hash_bucket), but the anti-join does
-not use that layout: below autoBroadcastJoinThreshold Spark broadcasts the
+plain appended files; its bucket id (url_hash_bucket) is a data column the
+anti-join does not use: below autoBroadcastJoinThreshold Spark broadcasts the
 seen keys each round, above it Spark shuffles both sides (ROADMAP item 4: a
 Spark-bucketed seen base would remove the seen-side Exchange).
 """

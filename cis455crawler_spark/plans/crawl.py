@@ -6,10 +6,10 @@ round-trip (MasterServlet.java:78-185). Every round reads its frontier and
 seen set from the last committed snapshot and commits the next one, so a
 round run straight after another and a round resumed from a state dir take
 one path, and no DataFrame lives from one round to the next. plan_round
-builds the round's DAG lazily, with no Spark action; run_round runs its one
-action (checkpoint and count the next frontier), then the COMMIT. The spine is
-fixed; the opt-in gates (plans/gates.py) plug in at its four capitalized
-stages:
+builds the round's DAG lazily, with no Spark action; run_round's COMMIT
+writes are the round's action, beside one stats job (the next frontier is
+counted from its written files). The spine is fixed; the opt-in gates
+(plans/gates.py) plug in at its four capitalized stages:
 
     frontier_r (snapshot scan)
       -> canonicalize + sha1 (JVM cols)                 [O-X1/X2]
@@ -28,7 +28,8 @@ stages:
           XPathCrawlerThread.java:231-253)
       -> DEPOSIT gates -> explode -> dedup -> anti-join (seen + batch) [O-J2/O-U3]
       -> COMMIT seen+/parsed+/metrics+/lineage+, frontier, gate tables (one
-         snapshot); the link graph (edges) stays derivable from parsed.out_links
+         snapshot, plain parquet files; seen's `bucket` is a data column);
+         the link graph (edges) stays derivable from parsed.out_links
 
 Seen-set semantics follow the reference exactly: scheduled URLs are marked
 seen at schedule time (XPathCrawlerThread.java:122-126), robots-DENIED URLs
@@ -92,7 +93,7 @@ class CrawlConfig:
     max_pages: int = 100_000  # TotalMaxRequests
     round_duration_s: int = 60
     salt_buckets: int = 8
-    num_buckets: int = 32  # seen-table bucket layout
+    num_buckets: int = 32  # bucket ids of the seen rows and the lineage
     compact_every: int = 8
     max_content_bytes: int = MAX_CONTENT_BYTES_DEFAULT  # O-F2 size gate
     # keep the last K round-snapshots time-travel-readable and delete data
@@ -302,8 +303,9 @@ def _round_stats(
     extra: list[DataFrame],
 ) -> dict:
     """Every per-round counter from ONE job of cross-joined 1-row aggregates
-    (plus the `extra` ones) over caches the pipeline action materialized —
-    cache scans, no recompute. NOTE df.observe() was tried and REVERTED:
+    (plus the `extra` ones) over the round's caches, which the commit's
+    writes fill concurrently — a block another job is computing is waited
+    for, not recomputed. NOTE df.observe() was tried and REVERTED:
     CollectMetrics nodes beneath an InMemoryRelation silently return
     empty/null rows depending on AQE settings. AQE splits a round's actions
     into about 35 Spark jobs (crawlbench/README.md, traced table)."""
@@ -357,7 +359,7 @@ class RoundPlan:
     scheduled: DataFrame  # the politeness pop's batch
     parsed: DataFrame  # the fetched, routed and parsed batch
     new_seen: DataFrame  # this round's seen-set append
-    frontier: DataFrame  # next round's frontier, before localCheckpoint
+    frontier: DataFrame  # next round's frontier, as the commit writes it
 
     def release(self) -> None:
         for df in self.caches:
@@ -373,7 +375,7 @@ def plan_round(
     round_no: int,
     stored: DataFrame | None = None,
 ) -> RoundPlan:
-    """The round's DAG up to its one action, built without running a Spark
+    """The round's DAG up to its commit writes, built without running a Spark
     job (the trust gate's TrustRank power steps aside), from the frontier
     and seen set of the last committed snapshot. `stored` (recrawl
     generations only) is the prior generation's parsed-latest snapshot
@@ -543,23 +545,20 @@ def run_round(
     stored: DataFrame | None = None,
 ) -> dict:
     """One scheduling round over the last committed snapshot: plan_round's
-    DAG, its one action, then the commit of the next snapshot. Returns the
-    round's metrics; no frame outlives the round."""
+    DAG, run by the commit of the next snapshot (its table writes) beside
+    one stats job. Returns the round's metrics; no frame outlives the
+    round."""
     plan = plan_round(spark, store, pages, robots, cfg, round_no, stored)
     gates, parsed, new_seen = plan.gates, plan.parsed, plan.new_seen
-    # materialized once for its two consumers, the count and the frontier
-    # write. localCheckpoint, not one more cache: with cache() round_s_p50
-    # rose ~3 % on both crawlbench workloads (BENCH.md). Its blocks are
-    # freed by the context cleaner once the round returns.
-    new_frontier = plan.frontier.localCheckpoint(eager=False)
-    # the one big action: materializes every cache along the pipeline
-    frontier_next = new_frontier.count()
 
-    # phase-1 commit: the table writes start on background driver threads
-    # NOW; the stats aggregate below runs concurrently with them. The
-    # manifest swap waits for everything.
+    # phase-1 commit: the table writes ARE the round's action. They start
+    # on background driver threads now and materialize the caches along the
+    # pipeline; the stats job below runs concurrently with them and races
+    # them for those caches (a block being computed is waited for, never
+    # recomputed: the Arrow parse still runs once per page). The manifest
+    # swap waits for everything.
     appends: dict[str, DataFrame] = {}
-    replaces = {"frontier": new_frontier}
+    replaces = {"frontier": plan.frontier}
     for g in gates:
         g_appends, g_replaces = g.commit(parsed, new_seen)
         appends.update(g_appends)
@@ -571,19 +570,10 @@ def run_round(
         "url", "url_hash", "depth", "title", "meta", "text", "out_links",
         "lang", "warc_ts", "fetched", "round",
     )
-    # the seen bucket layout: one task per bucket -> one file per bucket dir
-    # per round; without it every shuffle task writes a file into every
-    # bucket dir and the table degenerates into thousands of tiny files
-    bucketed = ["seen", *(t for g in gates for t in g.bucketed)]
-    handle = store.begin_commit(
-        round_no,
-        appends={
-            t: df.repartition(cfg.num_buckets, "bucket") if t in bucketed else df
-            for t, df in appends.items()
-        },
-        replaces=replaces,
-        partition_by={t: ["bucket"] for t in bucketed},
-    )
+    # seen and the gate sets are plain appended files; `bucket` stays a
+    # data column of each (no reader uses it; the lineage counts the
+    # scheduled frame's)
+    handle = store.begin_commit(round_no, appends=appends, replaces=replaces)
 
     action_names = ["miss", "redirect", "not_modified", "mime_reject",
                     "size_reject", "parse"] + [a for g in gates for a in g.actions]
@@ -618,7 +608,9 @@ def run_round(
         "not_modified": stats["not_modified"],
         "mime_rejected": stats["mime_reject"],
         "size_rejected": stats["size_reject"],
-        "frontier_next": frontier_next,
+        # the next frontier is counted from its written files' footers,
+        # not by an action of its own
+        "frontier_next": store.rows_written(handle, "frontier"),
     }
     for (g, _), n_in, n_out in zip(plan.admit_in, chain, chain[1:]):
         metrics[g.dropped] = n_in - n_out
@@ -761,7 +753,7 @@ def run_crawl(
         ):
             store.compact("parsed")
         if cfg.compact_every and round_no % cfg.compact_every == 0:
-            store.compact("seen", partition_cols=["bucket"])
+            store.compact("seen")
             if cfg.expire_keep_snapshots:
                 store.expire_snapshots(keep_last=cfg.expire_keep_snapshots)
         round_no += 1

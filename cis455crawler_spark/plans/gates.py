@@ -79,8 +79,8 @@ def merge_rollup(
 
 def new_keys(rows: DataFrame, stored: DataFrame | None, keys: list[str]) -> DataFrame:
     """The `rows` whose natural `keys` are not in `stored` (None: no table
-    yet), so appends keep the table a set. Never keyed on bucket, which is
-    write layout only: dedup must survive a num_buckets change."""
+    yet), so appends keep the table a set. Never keyed on bucket, a data
+    column no reader uses: dedup must survive a num_buckets change."""
     if stored is None:
         return rows
     return rows.join(stored.select(*keys), keys, "left_anti")
@@ -102,7 +102,6 @@ class Gate:
     dropped = ""  # admit gates: the metric key counting what they drop
     digest = False  # reads the parse-routed body digest column
     actions = ()  # extra routing actions the route hook assigns
-    bucketed = ()  # appended tables that take the seen bucket layout
     per_generation = ()  # one generation's seen-set tables; init_crawl drops them
 
     def counters(self) -> list[DataFrame]:
@@ -127,7 +126,6 @@ class TrapFilter(Gate):
     wanted = staticmethod(lambda cfg: cfg.trap_filter)
     dropped = "trap_dropped"
     digest = True
-    bucketed = ("trap_url_pairs", "trap_digest_pairs")
 
     def admit(self, cand: DataFrame) -> DataFrame:
         from ..operators.traps import is_trap_cond
@@ -160,12 +158,12 @@ class TrapFilter(Gate):
             "digest",
             path_depth(F.col("url")).cast("long").alias("max_depth"),
         )
-        # the pair sets take seen's bucket layout (the url bucket uses the
-        # canonical sha1 keying); like the seen anti-join, their probe still
-        # broadcasts or shuffles the history side (ROADMAP item 4). In-round
-        # distinct: duplicate corpus url rows fan out the fetch join, and
-        # double-counted pairs would inflate the rollup away from the
-        # countDistinct contract.
+        # the pair sets are plain appended files like seen, with a `bucket`
+        # data column (the url bucket uses the canonical sha1 keying); like
+        # the seen anti-join, their probe still broadcasts or shuffles the
+        # history side (ROADMAP item 4). In-round distinct: duplicate corpus
+        # url rows fan out the fetch join, and double-counted pairs would
+        # inflate the rollup away from the countDistinct contract.
         def new_pairs(key: str, bucket_key, table: str) -> DataFrame:
             bucket = url_hash_bucket(bucket_key, self.cfg.num_buckets).alias("bucket")
             rows = ev.filter(F.col(key).isNotNull()).select("host", key, bucket)
@@ -312,7 +310,6 @@ class ContentDedup(Gate):
     wanted = staticmethod(lambda cfg: cfg.content_dedup)
     digest = True
     actions = ("content_dup",)
-    bucketed = ("content_seen",)
     per_generation = ("content_seen",)
 
     def route(self, routed: DataFrame) -> DataFrame:

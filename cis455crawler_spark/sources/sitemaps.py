@@ -132,8 +132,8 @@ def expand_sitemaps(
     Returns (seed_url STRING, sitemap_url STRING, lastmod TIMESTAMP)
     distinct: each discovered URL with the sitemap file that listed it
     (per-partition lineage for the frontier, same spirit as the crawl's
-    lineage table) and the entry's <lastmod> when present (NULL otherwise) —
-    the refresh hint operators/recrawl.lastmod_stale consumes."""
+    lineage table) and the entry's <lastmod> when present (NULL otherwise),
+    the site's own refresh hint."""
     frontier = sitemap_urls.select("url").distinct()
     visited = frontier
     seeds: DataFrame | None = None

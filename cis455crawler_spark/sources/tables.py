@@ -18,11 +18,13 @@ real cluster:
     only mechanism that reclaims replaced frontier dirs and dropped tables,
     e.g. the seen set a recrawl resets; a retain-all store keeps time
     travel into the previous generation).
-  * the seen table is written partitioned by a url-hash bucket column (the
-    layout of `PARTITIONED BY (bucket(N, url_hash))` in Iceberg). Reads
-    union plain dirs, so the frontier anti-join does not see that layout:
-    Spark broadcasts the seen keys below autoBroadcastJoinThreshold and
-    shuffles both sides above it (ROADMAP item 4).
+  * the crawl writes every table as plain files; seen carries its url-hash
+    bucket id as a data column, not as `bucket=` dirs. A caller may still
+    write a dir hive-partitioned (`partition_by`); reads take each dir with
+    its own basePath and union them, so plain and partitioned dirs of one
+    table read as one frame. The frontier anti-join sees no layout: Spark
+    broadcasts the seen keys below autoBroadcastJoinThreshold and shuffles
+    both sides above it (ROADMAP item 4).
 
 It replaces the reference's checkpoint spool machinery
 (/root/reference/Crawler/src/com/datformers/servlets/WorkerServlet.java:389-473
@@ -145,6 +147,24 @@ class SnapshotStore:
         afuts = [(t, pool.submit(_write, t, df)) for t, df in (appends or {}).items()]
         rfuts = [(t, pool.submit(_write, t, df)) for t, df in (replaces or {}).items()]
         return (pool, round_no, afuts, rfuts, attempted)
+
+    def rows_written(self, handle, table: str) -> int:
+        """Wait for `table`'s phase-1 write and return its row count, summed
+        from the parquet footers of the files it wrote (no Spark job; a
+        0-row write that left only _SUCCESS counts 0). Iceberg's analogue
+        is the snapshot summary's added-records count."""
+        import pyarrow.parquet as pq
+
+        _, _, afuts, rfuts, _ = handle
+        rel = next(f for t, f in afuts + rfuts if t == table).result()
+        if rel is None:
+            return 0
+        return sum(
+            pq.read_metadata(os.path.join(d, f)).num_rows
+            for d, _, files in os.walk(os.path.join(self.root, rel))
+            for f in files
+            if not f.startswith(("_", "."))
+        )
 
     def finish_commit(
         self,
@@ -291,19 +311,17 @@ class SnapshotStore:
             shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
         return doomed
 
-    def compact(self, table: str, partition_cols: list[str] | None = None) -> None:
-        """Rewrite an append-table's many delta dirs into one (Iceberg
-        rewrite_data_files). Commits a new manifest; old dirs removed after."""
+    def compact(self, table: str) -> None:
+        """Rewrite an append-table's many delta dirs into one plain dir
+        (Iceberg rewrite_data_files). Commits a new manifest; old dirs
+        removed after."""
         df = self.read(table)
         if df is None:
             return
         m = self.manifest()
         old_dirs = list(m["tables"][table])
         rel = f"{table}/compact_{uuid.uuid4().hex[:8]}"
-        writer = df.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(os.path.join(self.root, rel))
+        df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
         tables = dict(m["tables"])
         tables[table] = [rel]
         self._swap_tables(tables, old_dirs)

@@ -13,14 +13,14 @@ The decomposition that makes this incremental:
     replacement MERGE (anti-join out the re-crawled doc_ids, union the
     fresh rows). No global state is touched.
   * df (document frequency) and therefore rank are CORPUS-GLOBAL — they
-    are one window count over the maintained stats table, recomputed at
-    read time with arithmetic identical to operators/indexer.py's
-    bug-compatible formula. At 100 TB this read-time window is the same
-    single shuffle the batch indexer pays ONCE — but the per-batch
-    maintenance cost is proportional to the batch, not the corpus.
+    are recomputed at read time over the maintained stats table, with
+    arithmetic identical to operators/indexer.py's bug-compatible formula.
+    At 100 TB that read is the same single shuffle the batch indexer pays
+    ONCE — but the per-batch maintenance cost is proportional to the
+    batch, not the corpus.
 
-Invariant (tested across micro-batches incl. a recrawled doc):
-rank_from_stats(state) == operators.indexer.postings(final corpus),
+sources/warc.stream_warc_ingest drives these helpers; its test checks the
+rank over the state against operators.indexer.postings(final corpus),
 row-for-row. State persists through sources/tables.SnapshotStore (atomic
 manifest swap per batch, time-travel-able like every other table).
 """
@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import remove_stopwords, tokenize
-from ..operators.indexer import IDF_CORPUS, W_META, W_TFIDF, W_TITLE
 
 STATS_TABLE = "tf_stats"
 
@@ -103,44 +102,14 @@ def merge_doc_stats(
     return state.join(F.broadcast(changed), "doc_id", "left_anti").unionByName(delta)
 
 
-def rank_from_stats(stats: DataFrame, bug_compatible: bool = True) -> DataFrame:
-    """The reference's rank over the maintained stats table — identical
-    arithmetic to operators/indexer.postings (Indexer.java:212-232,
-    including the int-division idf quirk); df is recomputed at read time via
-    a skew-proof groupBy(word)+join (never a word-keyed window — a hot term
-    would serialize its postings list into one task at corpus scale)."""
-    df_by_word = stats.groupBy("word").agg(F.count("*").alias("df"))
-    out = stats.join(df_by_word, "word")
-    if bug_compatible:
-        tf_prime = 0.5 + 0.5 * F.col("tf") / F.col("max_tf")
-        idf = F.log(F.floor(F.lit(IDF_CORPUS) / F.col("df")).cast("double"))
-    else:
-        tf_prime = 0.5 + 0.5 * (F.col("tf") / F.col("max_tf"))
-        idf = F.log(F.lit(float(IDF_CORPUS)) / F.col("df"))
-    return out.select(
-        "doc_id",
-        "word",
-        "tf",
-        "max_tf",
-        "df",
-        "is_title",
-        "is_meta",
-        (
-            F.lit(W_TFIDF) * tf_prime * idf
-            + F.lit(W_TITLE) * F.col("is_title")
-            + F.lit(W_META) * F.col("is_meta")
-        ).alias("rank"),
-    )
-
-
 def drain_stream(records: DataFrame, ingest_fn, checkpoint_dir: str) -> int:
     """Shared AvailableNow drain: foreachBatch(ingest_fn) until the source
     is exhausted, checkpointed so a later call resumes past drained input.
     Returns micro-batches DELIVERED (foreachBatch is at-least-once — an
     ingest_fn whose effects append must dedupe replays itself, e.g. via a
     committed input ledger like sources/warc.stream_warc_ingest's
-    warc_files path table; a pure replace-merge like run_incremental_index
-    is naturally idempotent)."""
+    warc_files path table; a pure replace-merge is naturally
+    idempotent)."""
     n = [0]
 
     def _body(batch: DataFrame, batch_id: int) -> None:
@@ -156,44 +125,3 @@ def drain_stream(records: DataFrame, ingest_fn, checkpoint_dir: str) -> int:
     stream.awaitTermination()
     return n[0]
 
-
-def run_incremental_index(
-    spark,
-    input_dir: str,
-    state_root: str,
-    schema: str = "doc_id long, text string, title string",
-    title_col: str | None = "title",
-    meta_col: str | None = None,
-) -> int:
-    """Drain `input_dir` (a parquet directory new page files land in) with
-    a Trigger.AvailableNow file stream; each micro-batch merges its docs'
-    term stats into the SnapshotStore state table (atomic manifest swap per
-    batch — a killed job resumes from the last committed batch via the
-    stream checkpoint + manifest, same recovery story as the crawl).
-    Returns the number of micro-batches processed."""
-    from ..sources.tables import SnapshotStore
-
-    store = SnapshotStore(spark, state_root)
-
-    def _merge_batch(batch: DataFrame, batch_id: int) -> None:
-        delta = doc_term_stats(
-            batch, title_col=title_col, meta_col=meta_col
-        )
-        state = store.read(STATS_TABLE)
-        # changed_docs = the BATCH's ids: a doc recrawled to zero tokens has
-        # no delta rows but must still drop its stale terms. The replace is
-        # idempotent under foreachBatch replay (same merge, fresh uuid dir,
-        # manifest swap last).
-        merged = merge_doc_stats(
-            state, delta, changed_docs=batch.select("doc_id")
-        )
-        store.commit_round(
-            store.current_round() + 1, replaces={STATS_TABLE: merged}
-        )
-
-    records = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)  # one landed file = one batch
-        .parquet(input_dir)
-    )
-    return drain_stream(records, _merge_batch, f"{state_root}/_stream_checkpoint")

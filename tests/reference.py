@@ -1,7 +1,7 @@
 """Reference implementations the engine's operators are checked against:
 driver-side graph-rank oracles, scalar forms of the vectorized sidecar
-probes, and the exact brute-force cosine top-k the ANN paths are scored
-against."""
+probes, the exact brute-force cosine top-k the ANN paths are scored
+against, and the rank over the streaming index's maintained term stats."""
 
 from __future__ import annotations
 
@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cis455crawler_spark.operators.cuckoo import _alt
+from cis455crawler_spark.operators.indexer import IDF_CORPUS, W_META, W_TFIDF, W_TITLE
 from cis455crawler_spark.operators.pagerank import BASE, DAMPING
 from cis455crawler_spark.operators.similarity import _dot, _norm, topk_two_phase
 
@@ -148,3 +149,36 @@ def cosine_topk_bruteforce(
     return topk_two_phase(
         scored, "q_id", [F.desc("cosine"), "vec_id"], k, "rn", "vec_id"
     ).select("q_id", "vec_id", "cosine", "rn")
+
+
+# -- streaming index (streaming/indexing.py) ---------------------------------
+
+
+def rank_from_stats(stats: DataFrame, bug_compatible: bool = True) -> DataFrame:
+    """The reference's rank over the maintained stats table — identical
+    arithmetic to operators/indexer.postings (Indexer.java:212-232,
+    including the int-division idf quirk); df is recomputed at read time via
+    a skew-proof groupBy(word)+join (never a word-keyed window — a hot term
+    would serialize its postings list into one task at corpus scale)."""
+    df_by_word = stats.groupBy("word").agg(F.count("*").alias("df"))
+    out = stats.join(df_by_word, "word")
+    if bug_compatible:
+        tf_prime = 0.5 + 0.5 * F.col("tf") / F.col("max_tf")
+        idf = F.log(F.floor(F.lit(IDF_CORPUS) / F.col("df")).cast("double"))
+    else:
+        tf_prime = 0.5 + 0.5 * (F.col("tf") / F.col("max_tf"))
+        idf = F.log(F.lit(float(IDF_CORPUS)) / F.col("df"))
+    return out.select(
+        "doc_id",
+        "word",
+        "tf",
+        "max_tf",
+        "df",
+        "is_title",
+        "is_meta",
+        (
+            F.lit(W_TFIDF) * tf_prime * idf
+            + F.lit(W_TITLE) * F.col("is_title")
+            + F.lit(W_META) * F.col("is_meta")
+        ).alias("rank"),
+    )

@@ -169,6 +169,22 @@ def test_run_crawl_driver_loop(spark, corpus, oracle_res, tmp_path):
         assert store.manifest() == manifest
         assert again == [{k: v for k, v in m.items() if k != "wall_s"} for m in metrics]
 
+    # frontier_next comes from the written frontier's parquet footers: a
+    # 0-row write counts 0 whether its dir holds one empty part file or
+    # only _SUCCESS
+    store = SnapshotStore(spark, str(tmp_path / "empty_write"))
+    empty = spark.createDataFrame([], "url string, depth int")
+    handle = store.begin_commit(0, replaces={"frontier": empty})
+    assert store.rows_written(handle, "frontier") == 0
+    (rel,) = os.listdir(os.path.join(store.root, "frontier"))
+    written = os.path.join(store.root, "frontier", rel)
+    for f in os.listdir(written):
+        if f != "_SUCCESS":
+            os.remove(os.path.join(written, f))
+    assert os.listdir(written) == ["_SUCCESS"]
+    assert store.rows_written(handle, "frontier") == 0
+    store.finish_commit(handle)
+
 
 def test_fetch_routing_exercised(oracle_res):
     """The smoke corpus must actually hit the redirect and MIME branches,
@@ -429,6 +445,61 @@ def test_kill_between_commit_phases_resumes_and_reclaims(spark, tmp_path):
     assert store2.read("frontier").count() == 9  # reads intact post-expiry
 
 
+def test_mixed_seen_layouts_read_as_one_table(spark, corpus, tmp_path):
+    """A seen dir committed hive-partitioned by bucket (the layout of
+    crawlbench's seen preload) and the plain dirs the rounds append read as
+    one table: a crawl over it, compacting seen every round and resumed,
+    commits the same rounds and seen set as over the same keys written
+    plain, and compaction leaves one plain dir with no bucket= subdir."""
+    from pyspark.sql import functions as F
+
+    from cis455crawler_spark.functions.urls import sha1_hex, url_hash_bucket
+
+    pdf, pages = corpus
+    seeds = seed_urls(SPEC)
+    # corpus urls the crawl would reach later (so the preload changes its
+    # rounds) plus urls it never reaches
+    urls = [u for u in sorted(pdf["url"]) if u not in seeds][::5]
+    urls += [f"http://preload.test/k{i}.html" for i in range(200)]
+    keys = (
+        spark.createDataFrame([(u,) for u in urls], "url string")
+        .select(sha1_hex("url").alias("url_hash"), "url")
+        .withColumn("bucket", url_hash_bucket("url_hash", 32))
+    )
+    runs = {}
+    for layout in ("plain", "bucket"):
+        state = str(tmp_path / layout)
+        store = SnapshotStore(spark, state)
+        init_crawl(spark, store, seeds, CrawlConfig())
+        if layout == "bucket":
+            store.commit_round(
+                1,
+                appends={"seen": keys.repartition(32, "bucket")},
+                partition_by={"seen": ["bucket"]},
+                extra={"phase": "preload"},
+            )
+            (preload,) = store.manifest()["tables"]["seen"]
+            assert any(d.startswith("bucket=") for d in os.listdir(os.path.join(state, preload)))
+        else:
+            store.commit_round(1, appends={"seen": keys}, extra={"phase": "preload"})
+        run_crawl(spark, pages, seeds, state, CrawlConfig(max_rounds=3, compact_every=1), resume=True)
+        store, metrics = run_crawl(
+            spark, pages, seeds, state, CrawlConfig(max_rounds=5, compact_every=1), resume=True
+        )
+        (seen_dir,) = store.manifest()["tables"]["seen"]
+        assert not [
+            d for _, dirs, _ in os.walk(os.path.join(state, seen_dir)) for d in dirs
+        ]
+        seen = store.read("seen")
+        assert seen.filter(F.col("url").startswith("http://preload.test/")).count() == 200
+        runs[layout] = (
+            [{k: v for k, v in m.items() if k != "wall_s"} for m in metrics],
+            {r["url_hash"] for r in seen.select("url_hash").collect()},
+        )
+    assert len(runs["plain"][0]) == 5
+    assert runs["bucket"] == runs["plain"]
+
+
 def test_snapshot_time_travel_and_expiry(spark, corpus, tmp_path):
     """Iceberg snapshot semantics on the store: (a) read(t, as_of_round=k)
     returns the table exactly as round k committed it (VERSION AS OF);
@@ -459,7 +530,7 @@ def test_snapshot_time_travel_and_expiry(spark, corpus, tmp_path):
     # (b) compaction deletes superseded seen dirs -> those snapshots lose
     # ONLY their seen table (partial time-travel would be silent corruption)
     mid = rounds[len(rounds) // 2]
-    store.compact("seen", partition_cols=["bucket"])
+    store.compact("seen")
     assert store.read("seen", as_of_round=mid) is None
     assert store.read("frontier", as_of_round=mid) is not None
     assert {

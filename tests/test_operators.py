@@ -193,7 +193,7 @@ def test_snapshot_compact_and_lineage(spark, tmp_path):
     n_dirs_before = len(store.manifest()["tables"]["seen"])
     assert n_dirs_before == len(metrics)  # one delta dir per round
 
-    store.compact("seen", partition_cols=["bucket"])
+    store.compact("seen")
     assert len(store.manifest()["tables"]["seen"]) == 1
     seen_after = sorted(r["url_hash"] for r in store.read("seen").collect())
     assert seen_after == seen_before

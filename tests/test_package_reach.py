@@ -33,12 +33,6 @@ ALLOWED = {
     "operators.curation:host_blocklist": "README post-crawl curation pipeline",
     "operators.curation:apply_host_blocklist": "README post-crawl curation pipeline",
     "operators.dedup_fuzzy:exact_dedup": "README post-crawl curation pipeline",
-    # left for the next re-anchor to keep (with a caller) or delete
-    "streaming.indexing:run_incremental_index": "next re-anchor decides",
-    "streaming.indexing:rank_from_stats": "next re-anchor decides",
-    "operators.recrawl:recrawl_priority": "next re-anchor decides",
-    "operators.recrawl:lastmod_stale": "next re-anchor decides",
-    "operators.cdx:write_cdx": "next re-anchor decides",
 }
 
 

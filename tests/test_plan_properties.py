@@ -126,3 +126,53 @@ def test_crawl_round_dag_properties(spark):
             rp.release()
             links = rp.parsed.select(F.explode("out_links").alias("url"))
             assert _parse_evals(links) == 2, knobs
+
+
+def _sql_executions(spark) -> set[int]:
+    """Ids of the SQL executions in Spark's status store, once the listener
+    bus has delivered every event."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return {executions.apply(i).executionId() for i in range(executions.size())}
+
+
+def _parse_rows(spark, executions: set[int]) -> int:
+    """Rows the crawl's Arrow parse node emitted across `executions`: a
+    page parsed twice (a cache recomputed, or raced and filled twice)
+    counts twice."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    total = 0
+    for eid in executions:
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        for j in range(nodes.size()):
+            node = nodes.apply(j)
+            if node.name() != "ArrowEvalPython" or "parse_page_udf" not in node.desc():
+                continue
+            metrics = node.metrics()
+            for k in range(metrics.size()):
+                m = metrics.apply(k)
+                v = values.get(m.accumulatorId())
+                if m.name() == "number of output rows" and v.isDefined():
+                    total += int(str(v.get()).replace(",", ""))
+    return total
+
+
+def test_crawl_round_parses_each_page_once(spark, tmp_path):
+    """The commit's writes are the round's action, and they race the stats
+    job to fill the round's caches. The Arrow parse still runs once per
+    scheduled page: its output rows, summed over every SQL execution of a
+    round, equal the round's `scheduled`."""
+    from cis455crawler_spark.plans.crawl import CrawlConfig, run_crawl
+    from cis455crawler_spark.sources.corpus import CorpusSpec, pages_spark_df, seed_urls
+
+    spec = CorpusSpec(hosts=20, pages_per_host=10)
+    pages = pages_spark_df(spark, spec)
+    state = str(tmp_path / "state")
+    run_crawl(spark, pages, seed_urls(spec), state, CrawlConfig(max_rounds=1))
+    before = _sql_executions(spark)
+    _, metrics = run_crawl(
+        spark, pages, seed_urls(spec), state, CrawlConfig(max_rounds=2), resume=True
+    )
+    assert metrics[-1]["round"] == 2 and metrics[-1]["scheduled"] > 0
+    assert _parse_rows(spark, _sql_executions(spark) - before) == metrics[-1]["scheduled"]

@@ -1,14 +1,10 @@
 """Sitemap <lastmod> refresh hints: expand_sitemaps carries each entry's
-lastmod (aligned per entry-block, NULL when absent), and
-operators/recrawl.lastmod_stale turns them into the sitemap-driven refresh
-queue — urls whose site-claimed modification is newer than the stored
-capture."""
+lastmod (aligned per entry-block, NULL when absent)."""
 
 from __future__ import annotations
 
 from datetime import datetime
 
-from cis455crawler_spark.operators.recrawl import lastmod_stale
 from cis455crawler_spark.sources.sitemaps import expand_sitemaps
 
 
@@ -68,44 +64,3 @@ def test_lastmod_tolerates_malformation(spark):
     assert out["http://h.test/after"] == datetime(2013, 4, 1)  # right owner
     assert "http://h.test/open" in out and out["http://h.test/open"] is None
     assert "http://h.test/bare" in out  # wrapper-less entries still seed
-
-
-def test_lastmod_stale_queue(spark):
-    pages = _pages(spark, {"http://h.test/sm.xml": SM.encode()})
-    starts = spark.createDataFrame([("http://h.test/sm.xml",)], "url string")
-    hints = expand_sitemaps(pages, starts)
-    stored = spark.createDataFrame(
-        [
-            ("http://h.test/fresh", datetime(2013, 3, 1)),  # lastmod newer -> stale
-            ("http://h.test/stale", datetime(2013, 3, 1)),  # lastmod older -> fine
-            ("http://h.test/nohint", datetime(2013, 3, 1)),  # no hint -> fine
-            # /unknown is hinted but never crawled: not in the refresh queue
-            # (it belongs to seeding, not recrawling)
-        ],
-        "url string, warc_ts timestamp",
-    )
-    got = {(r.url, r.lastmod) for r in lastmod_stale(stored, hints).collect()}
-    assert got == {("http://h.test/fresh", datetime(2013, 5, 1))}
-
-
-def test_lastmod_max_across_sitemaps(spark):
-    """A url listed by two sitemaps with different lastmods takes the max."""
-    sm_a = (
-        "<urlset><url><loc>http://h.test/x</loc>"
-        "<lastmod>2013-02-01</lastmod></url></urlset>"
-    )
-    sm_b = (
-        "<urlset><url><loc>http://h.test/x</loc>"
-        "<lastmod>2013-04-01</lastmod></url></urlset>"
-    )
-    pages = _pages(
-        spark, {"http://h.test/a.xml": sm_a.encode(), "http://h.test/b.xml": sm_b.encode()}
-    )
-    starts = spark.createDataFrame(
-        [("http://h.test/a.xml",), ("http://h.test/b.xml",)], "url string"
-    )
-    stored = spark.createDataFrame(
-        [("http://h.test/x", datetime(2013, 3, 1))], "url string, warc_ts timestamp"
-    )
-    got = {(r.url, r.lastmod) for r in lastmod_stale(stored, expand_sitemaps(pages, starts)).collect()}
-    assert got == {("http://h.test/x", datetime(2013, 4, 1))}

@@ -19,9 +19,10 @@ from datetime import datetime
 from cis455crawler_spark.operators.indexer import postings
 from cis455crawler_spark.sources.tables import SnapshotStore
 from cis455crawler_spark.sources.warc import stream_warc_ingest
-from cis455crawler_spark.streaming.indexing import STATS_TABLE, rank_from_stats
+from cis455crawler_spark.streaming.indexing import STATS_TABLE
 
 from .fixtures import build_warc_bytes
+from .reference import rank_from_stats
 
 
 def _rec(url, ts, body, status=200):

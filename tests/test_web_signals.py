@@ -3,7 +3,6 @@ web-signal operators added in round 3 (SURVEY §2.11), each differential-
 tested against an independently written driver-side oracle."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from cis455crawler_spark.operators.anchors import (
     anchor_pairs,
@@ -234,27 +233,3 @@ def test_cdx_index_sorted_and_digested(spark):
     ]
     assert rows[0].digest == hashlib.sha1(b"<html>aa</html>").hexdigest()
     assert rows[0].n_bytes == 15
-
-
-def test_write_cdx_range_layout(spark, tmp_path):
-    from cis455crawler_spark.operators.cdx import write_cdx
-
-    pages = spark.createDataFrame(
-        [(f"http://h{i % 7}.com/p{i}", bytearray(b"x")) for i in range(200)],
-        "url string, html binary",
-    )
-    out = str(tmp_path / "cdx")
-    # sort=False: write_cdx imposes the range order itself (one shuffle-sort)
-    write_cdx(cdx_index(pages, sort=False), out, num_shards=4)
-    back = spark.read.parquet(out)
-    assert back.count() == 200
-    # range partitioning: per-file surt ranges must not interleave
-    files = (
-        back.select("surt_key", F.input_file_name().alias("f"))
-        .groupBy("f")
-        .agg(F.min("surt_key").alias("lo"), F.max("surt_key").alias("hi"))
-        .collect()
-    )
-    spans = sorted([(r.lo, r.hi) for r in files])
-    for (lo1, hi1), (lo2, _) in zip(spans, spans[1:]):
-        assert hi1 <= lo2

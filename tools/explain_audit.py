@@ -124,15 +124,42 @@ def plan_of(df) -> str:
     return plan
 
 
-def plan_nodes(plan: str) -> list[str]:
-    """The detail block of each distinct node of a formatted plan, in plan
-    order. The text names a node in the tree, again in its detail block,
-    and draws a cached relation's build plan once more under every scan of
-    it, so only distinct `(n) Name` ids are nodes."""
+def cut_plan(plan: str, limit: int = 6000) -> str:
+    """The plan's leading whole lines that fit in `limit` characters, then
+    a line saying how many lines were cut."""
+    lines = plan.strip().split("\n")
+    kept, size = [], 0
+    for line in lines:
+        size += len(line) + 1
+        if size > limit:
+            return "\n".join(kept + [f"… ({len(lines) - len(kept)} more lines)"])
+        kept.append(line)
+    return "\n".join(lines)
+
+
+def plan_nodes(plan: str) -> dict[str, str]:
+    """The detail block of each distinct node of a formatted plan, by node
+    id, in plan order. The text names a node in the tree, again in its
+    detail block, and draws a cached relation's build plan once more under
+    every scan of it, so only distinct `(n) Name` ids are nodes."""
     blocks: dict[str, str] = {}
     for node_id, block in re.findall(r"^\((\d+)\) (.*?)(?=\n\n|\Z)", plan, re.M | re.S):
         blocks.setdefault(node_id, block)
-    return list(blocks.values())
+    return blocks
+
+
+def shown_nodes(plan: str, shown: str) -> list[str]:
+    """What a cut plan `shown` still holds of each node of `plan`: its
+    detail block as far as the cut keeps it, else only its name, when a
+    kept tree line (`+- Name (n)`) names it. Nodes the cut drops whole are
+    left out, so a note never counts a node the text does not show."""
+    blocks = plan_nodes(shown)
+    in_tree = set(re.findall(r"\((\d+)\)$", shown, re.M))
+    return [
+        blocks.get(node_id, block.split("\n", 1)[0])
+        for node_id, block in plan_nodes(plan).items()
+        if node_id in blocks or node_id in in_tree
+    ]
 
 
 @contextmanager
@@ -174,13 +201,20 @@ def main() -> int:
         "properties that decide whether the plan survives a 100x scale-up. The two "
         "`crawl_round_*` sections are the next-frontier frame `plan_round` returns "
         "for round 2 of a real crawl of a tiny corpus (default config, then "
-        "`content_dedup=True`): the round's DAG up to its one action.\n",
+        "`content_dedup=True`): the frame the round's commit writes as the next "
+        "frontier. A plan longer than 6 000 characters is cut at a line "
+        "boundary, and its notes then count only what the cut text shows of "
+        "each node: its detail block, or only its name on a tree line.\n",
     ]
 
     def section(name: str, df) -> None:
         plan = plan_of(df)
-        nodes = plan_nodes(plan)
-        notes = []
+        shown = cut_plan(plan)
+        nodes = shown_nodes(plan, shown)
+        n_all = len(plan_nodes(plan))
+        notes = [] if len(nodes) == n_all else [
+            f"… notes count the {len(nodes)} of {n_all} nodes the cut plan shows"
+        ]
         for sign, pats in (("+", GOOD), ("!", BAD)):
             for pat, why in pats.items():
                 n = sum(1 for b in nodes if re.search(pat, b, re.M))
@@ -194,7 +228,7 @@ def main() -> int:
         out.append(f"\n## {name}\n")
         out.append("\n".join(f"- `{n}`" for n in notes))
         out.append("\n\n<details><summary>full plan</summary>\n\n```\n")
-        out.append(plan.strip()[:6000])
+        out.append(shown)
         out.append("\n```\n</details>\n")
 
     for name in AUDIT_QUERIES:
